@@ -327,7 +327,7 @@ def _q_derive_points(spark, sf_dir):
     seqs = _md5_token_seqs(spark, sf_dir)
     from opentsdb_rollup_rust_spark.functions.arrays import token_array_stats
 
-    stats = token_array_stats("tokens", sum_acc="int")
+    stats = token_array_stats("tokens")
     return seqs.select(
         "doc_id",
         "source",
@@ -379,7 +379,7 @@ def _q_rollup_fused(spark, sf_dir):
     from opentsdb_rollup_rust_spark.operators.rollup import fused_rollup_wide
 
     seqs = _md5_token_seqs(spark, sf_dir)
-    stats = token_array_stats("tokens", sum_acc="int")
+    stats = token_array_stats("tokens")
     wide = seqs.select(
         "source",
         (F.lit(EPOCH_BASE_SECONDS) + F.pmod(md5_int60(F.col("doc_id")), F.lit(HORIZON_SECONDS))).alias("ts_sec"),
@@ -578,7 +578,7 @@ def _q_expr_ratio(spark, sf_dir):
     from opentsdb_rollup_rust_spark.functions.hashing import md5_int60
 
     seqs = _md5_token_seqs(spark, sf_dir)
-    stats = token_array_stats("tokens", sum_acc="int")
+    stats = token_array_stats("tokens")
     ts_sec = F.lit(EPOCH_BASE_SECONDS) + F.pmod(
         md5_int60(F.col("doc_id")), F.lit(HORIZON_SECONDS)
     )

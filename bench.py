@@ -181,26 +181,15 @@ def main() -> None:
     reps = int(os.environ.get("BENCH_REPS", "3"))
     seqs = spark.read.parquet(seq_path)
 
-    # BENCH_DERIVE_IMPL: "sql" (default since r4: JVM higher-order
-    # functions, no Python boundary) vs "arrow" (mapInArrow + numpy
-    # reduceat — the r1-r3 default). Both are exact (golden-tested
-    # equal). Switched after the r4 interleaved ABAB A/B
-    # (scripts/derive_ab.py, 24M seqs, same JVM): every sql rep beat
-    # every arrow rep at BOTH levels (local[32] min 17.5 s vs 39.6 s;
-    # local[8] min 50.8 s vs 248 s) — the host's kernel-time bursts
-    # (futex storms inside the JVM) land overwhelmingly on the
-    # Arrow-IPC path, and the r3 forensics already showed Arrow
-    # IPC/Python wait was the worst-scaling slice (1.57x inflation at
-    # 32 cores). The Gorilla codec stays Arrow (mandated); derive is
-    # expressible in built-ins, and built-ins beat UDFs.
-    derive_impl = os.environ.get("BENCH_DERIVE_IMPL", "sql")
-
+    # The derive is the engine's one JVM built-in path (no Python
+    # boundary; points.derive_wide documents the guard and the A/B
+    # behind the choice). The Gorilla codec below stays Arrow.
     def pipeline() -> float:
         # mirrors the tier job: materialize the 1m tier once (persist =
         # the tier write), then cascade 1h/1d from it — derive runs once.
         # fused_tier_rollup = the job's wide-form derive+agg scale path
         t0 = time.monotonic()
-        r1m = fused_tier_rollup(seqs, "1m", impl=derive_impl).persist()
+        r1m = fused_tier_rollup(seqs, "1m").persist()
         _sink(r1m)
         _sink(cascade_reagg(cascade_reagg(r1m, "1h"), "1d"))
         r1m.unpersist()
@@ -213,7 +202,7 @@ def main() -> None:
     # steal) that contaminate medians; scaling_run.py compares mins
     pipeline_min = min(all_runs[warmup:])
 
-    r1m = fused_tier_rollup(seqs, "1m", impl="arrow").persist()
+    r1m = fused_tier_rollup(seqs, "1m").persist()
     rolled_1m = r1m.count()
     chunks = encode_chunks(r1m, "1m").persist()
     t0 = time.monotonic()

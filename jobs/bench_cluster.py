@@ -67,7 +67,6 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=5)
     ap.add_argument("--wait-executors", type=int, required=True)
     ap.add_argument("--wait-timeout", type=float, default=120.0)
-    ap.add_argument("--derive-impl", default="sql")
     args = ap.parse_args()
 
     # master/memory/cores/shuffle confs all arrive from spark-submit;
@@ -89,7 +88,7 @@ def main() -> None:
         # identical protocol to bench.py::pipeline — materialize the 1m
         # tier once (persist = the tier write), cascade 1h/1d from it
         t0 = time.monotonic()
-        r1m = fused_tier_rollup(seqs, "1m", impl=args.derive_impl).persist()
+        r1m = fused_tier_rollup(seqs, "1m").persist()
         sink(r1m)
         sink(cascade_reagg(cascade_reagg(r1m, "1h"), "1d"))
         r1m.unpersist()
@@ -111,7 +110,6 @@ def main() -> None:
         "points_per_sec": round(n_points / med, 1),
         "points_per_sec_best": round(n_points / min(timed), 1),
         "pipeline_runs": [round(r, 2) for r in runs],
-        "derive_impl": args.derive_impl,
     }
     # the orchestrator parses the LAST stdout line; log4j writes to
     # stderr, so this is the only stdout the submit produces

@@ -45,13 +45,6 @@ def main(argv=None) -> int:
     ap.add_argument("--salts", type=int, default=8)
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--no-encode", action="store_true")
-    ap.add_argument("--derive-impl", default="arrow",
-                    choices=("arrow", "sql"),
-                    help="token-stat derive path: 'arrow' (mapInArrow + "
-                         "numpy reduceat — fastest on real clusters) or "
-                         "'sql' (built-in higher-order functions, no "
-                         "Python boundary — immune to Python-worker IPC "
-                         "pathologies; both golden-tested identical)")
     ap.add_argument("--synthesize", type=int, default=0,
                     help="generate N sequences into the store first")
     ap.add_argument("--retention-now", type=int, default=None,
@@ -116,7 +109,6 @@ def main(argv=None) -> int:
             salts=args.salts,
             run_id=args.run_id,
             encode=not args.no_encode,
-            derive_impl=args.derive_impl,
         )
         results = (
             run_cascade(spark, store, **kw)

@@ -676,8 +676,17 @@ def encode_chunks(
 ) -> "DataFrame":
     """C1: rollup tier -> Gorilla chunk table, one row per
     (series, agg, chunk). Long format via F.stack (JVM), grouped-map
-    encode via applyInPandas (Arrow)."""
+    encode via applyInPandas (Arrow) over narrow rows, so the session's
+    Arrow batch size is scoped back to ARROW_BATCH_NARROW at call time
+    (a prior decode_chunks leaves it at ARROW_BATCH_WIDE)."""
     from pyspark.sql import functions as F
+
+    from opentsdb_rollup_rust_spark.session import (
+        ARROW_BATCH_NARROW,
+        set_arrow_batch,
+    )
+
+    set_arrow_batch(rollup.sparkSession, ARROW_BATCH_NARROW)
 
     sec = INTERVAL_SECONDS[interval]
     chunk_sec = sec * chunk_points

@@ -1,9 +1,8 @@
 """F3/F4 — token-array scalar functions.
 
-All built-in higher-order functions (JVM, codegen) — no explode in the
-hot path, no Python. ANSI mode note (Spark 4 default): token values are
-int32 but sums accumulate in LongType to avoid overflow throws
-(SURVEY.md §7 "what's hard" #5).
+All built-in expressions (JVM): no explode in the hot path, no Python.
+Every stat is exact in both ANSI modes (Spark 4 defaults ANSI on; a
+session with it off must never silently wrap or null out a stat).
 """
 
 from __future__ import annotations
@@ -11,41 +10,46 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: a row whose |partial sums| stay below this fits the int32 fold
+INT_FOLD_BOUND = 2**31
 
-def token_array_stats(
-    tokens: Column | str, sum_acc: str = "long"
-) -> dict[str, Column]:
+
+def token_array_stats(tokens: Column | str) -> dict[str, Column]:
     """Exact per-row stats over an array<int> column, as long columns.
 
-    first/last use element_at (1-based; -1 = last). Empty arrays are
-    not produced by the generator (len >= 1) but min/max/first/last
-    would be null there — callers filter or rely on n_tok >= 1.
+    first/last use element_at (1-based; -1 = last). An empty array has
+    no min/max/first/last, so ``n_tok`` raises on it in both ANSI
+    modes (with ANSI off element_at would silently return null).
 
-    ``sum_acc="int"`` (r6): accumulate tok_sum in IntegerType and cast
-    the final value to long. The interpreted fold's per-element
-    ``x.cast(long)`` is a large share of the fold's cost — dropping it
-    wins every interleaved rep of the 12M-seq fused-rollup A/B
-    (scripts/fold_ab_r06.py: best 8.14 -> 6.75 s, median 9.7 -> 8.2 s;
-    the explode reformulation loses 20x and is recorded there too).
-    EXACT AND ANSI-SAFE ONLY when every row's sum fits int32; both
-    token generators guarantee it by contract (synth_sequences:
-    len <= 512, values < 50257 -> max 25.7M; _md5_token_seqs:
-    len <= 8, values < 997 -> max ~8k). Callers with unbounded arrays
-    must keep the default long accumulator (overflow would THROW under
-    ANSI, never silently wrap).
+    ``tok_sum`` folds in IntegerType when the row provably fits —
+    ``size * greatest(|min|, |max|) < 2^31``, computed in long, bounds
+    every partial sum — and in LongType otherwise. CaseWhen evaluates
+    only the branch it takes, so in-contract rows skip the fold's
+    per-element ``cast(long)`` (a large share of the interpreted fold's
+    cost, OPTIMIZATION_r06.md "Int accumulator") and out-of-contract
+    rows stay exact instead of wrapping (ANSI off) or throwing (ANSI
+    on).
     """
     t = F.col(tokens) if isinstance(tokens, str) else tokens
-    if sum_acc == "int":
-        tok_sum = F.aggregate(t, F.lit(0), lambda acc, x: acc + x).cast("long")
-    else:
-        tok_sum = F.aggregate(
-            t, F.lit(0).cast("long"), lambda acc, x: acc + x.cast("long")
-        )
+    n = F.size(t)
+    lo = F.array_min(t).cast("long")
+    hi = F.array_max(t).cast("long")
+    fits_int = n.cast("long") * F.greatest(F.abs(lo), F.abs(hi)) < F.lit(
+        INT_FOLD_BOUND
+    )
+    tok_sum = F.when(
+        fits_int, F.aggregate(t, F.lit(0), lambda acc, x: acc + x).cast("long")
+    ).otherwise(
+        F.aggregate(t, F.lit(0).cast("long"), lambda acc, x: acc + x.cast("long"))
+    )
+    n_tok = F.when(
+        n == 0, F.raise_error(F.lit("token_array_stats: empty token array"))
+    ).otherwise(n)
     return {
-        "n_tok": F.size(t).cast("long"),
+        "n_tok": n_tok.cast("long"),
         "tok_sum": tok_sum,
-        "tok_min": F.array_min(t).cast("long"),
-        "tok_max": F.array_max(t).cast("long"),
+        "tok_min": lo,
+        "tok_max": hi,
         "tok_first": F.element_at(t, 1).cast("long"),
         "tok_last": F.element_at(t, -1).cast("long"),
     }

@@ -15,8 +15,6 @@ keeps coarser tiers from ever reading it (SURVEY.md §4).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -35,58 +33,56 @@ def derive_points(
 ) -> DataFrame:
     """sequences -> points(series_id string, ts timestamp, value long).
 
-    ``keep_doc_id=True`` additionally carries doc_id (for lineage /
-    invariant tests); the scale path drops it so the shuffle rows stay
-    narrow.
+    The long form of derive_wide: one F.stack over its stat columns, so
+    the stat expressions exist in one place. ``keep_doc_id=True``
+    additionally carries doc_id (for lineage / invariant tests); the
+    scale path drops it so the shuffle rows stay narrow.
 
-    ``impl``:
-      - "sql": built-in higher-order functions. Fully transparent to
-        Catalyst, zero Python — but Spark does NOT codegen lambda
-        bodies, so the per-element fold is interpreted and
-        allocation-heavy: it becomes GC-bound at high parallelism.
-      - "arrow": the scale path (BASELINE.json:15 "vectorized
-        pandas/Arrow UDFs — no per-row Python"): one mapInArrow pass
-        computes all five array stats with np.*.reduceat directly on
-        the Arrow list buffers (zero-copy values + offsets), measured
-        ~10x faster than "sql" at local[32]. Golden test pins
-        arrow == sql exactly (tests/test_synth.py::
-        test_derive_points_arrow_matches_sql).
-    """
-    if impl == "arrow":
-        return _derive_points_arrow(sequences, keep_doc_id)
-    stats = token_array_stats("tokens", sum_acc="int")
+    ``impl`` accepts only "sql", the one derive (kept so existing
+    callers that name it keep working)."""
+    if impl != "sql":
+        raise ValueError(f"derive_points: unknown impl {impl!r} (only 'sql')")
     stack_args: list[Column] = []
     for name in TOKEN_STATS:
         stack_args.append(F.lit(name))
-        stack_args.append(stats[name])
-    wide = sequences.select(
-        F.col("doc_id"),
+        stack_args.append(F.col(name))
+    pass_cols = ["doc_id"] if keep_doc_id else []
+    long = derive_wide(sequences, keep_doc_id).select(
+        *pass_cols,
         F.col("source"),
-        event_time("doc_id").alias("ts"),
+        F.timestamp_seconds(F.col("ts_sec")).alias("ts"),
         F.stack(F.lit(len(TOKEN_STATS)), *stack_args).alias("stat", "value"),
     )
-    cols = [
+    return long.select(
+        *pass_cols,
         F.concat_ws(SERIES_SEP, F.col("source"), F.col("stat")).alias("series_id"),
         F.col("ts"),
-        F.col("value").cast("long").alias("value"),
-    ]
-    if keep_doc_id:
-        cols.insert(0, F.col("doc_id"))
-    return wide.select(*cols)
+        F.col("value"),
+    )
 
 
-def derive_wide(
-    sequences: DataFrame, keep_doc_id: bool = False, impl: str = "arrow"
-) -> DataFrame:
+def derive_wide(sequences: DataFrame, keep_doc_id: bool = False) -> DataFrame:
     """One row per sequence: ([doc_id,] source, ts_sec, <TOKEN_STATS>).
 
     The WIDE form of the metric stream — rollup.fused_tier_rollup
     aggregates this directly so the 6x row explosion to long format
     (and the per-point series_id string build) happens only on the
-    aggregated output, never on the raw points."""
-    if impl == "arrow":
-        return _derive_wide_arrow(sequences, keep_doc_id)
-    stats = token_array_stats("tokens", sum_acc="int")
+    aggregated output, never on the raw points.
+
+    The stats are Spark built-ins (functions.arrays.token_array_stats):
+    JVM-side, transparent to Catalyst (tokens are pruned right after
+    this projection and never cross a shuffle), exact in both ANSI
+    modes, and loud on an empty token array. The token sum takes the
+    int32 fold only when ``n_tok * greatest(|tok_min|, |tok_max|) <
+    2^31`` (computed per row in long, so it bounds every partial sum)
+    and the long fold otherwise. Built-ins replaced a vectorized Arrow
+    UDF derive, which paid a Python-boundary cost for no gain:
+    interleaved A/B in one JVM at local[4], fused 1m->1h->1d noop
+    pipeline (BENCH/derive_ab_r07.json), median sql vs arrow 1.40 vs
+    1.67 s at 25k sequences and 5.04 vs 5.46 s at 500k, sql ahead in
+    6 of 6 pairs at both scales.
+    """
+    stats = token_array_stats("tokens")
     pass_cols = [F.col("doc_id")] if keep_doc_id else []
     return sequences.select(
         *pass_cols,
@@ -94,120 +90,3 @@ def derive_wide(
         F.unix_timestamp(event_time("doc_id")).alias("ts_sec"),
         *[stats[s].alias(s) for s in TOKEN_STATS],
     )
-
-
-def _derive_points_arrow(sequences: DataFrame, keep_doc_id: bool) -> DataFrame:
-    """Vectorized token-stat extraction on the Arrow buffers.
-
-    The list column arrives as (values, offsets) — np.add/minimum/
-    maximum.reduceat fold every row's slice in one C call per batch;
-    first/last are plain gathers at the offsets. No per-row Python
-    anywhere (BASELINE.json:15). Event time and series_id stay
-    JVM-side (xxhash64 has no Python twin here), so the UDF only sees
-    narrow passthrough columns plus the token buffers, and the stack
-    to long format happens back in codegen'd expressions.
-    """
-    wide = _derive_wide_arrow(sequences, keep_doc_id)
-    pass_cols = ["doc_id"] if keep_doc_id else []
-
-    stack_args: list[Column] = []
-    for name in TOKEN_STATS:
-        stack_args.append(F.lit(name))
-        stack_args.append(F.col(name))
-    long = wide.select(
-        *pass_cols,
-        F.col("source"),
-        F.timestamp_seconds(F.col("ts_sec")).alias("ts"),
-        F.stack(F.lit(len(TOKEN_STATS)), *stack_args).alias("stat", "value"),
-    )
-    cols = [
-        F.concat_ws(SERIES_SEP, F.col("source"), F.col("stat")).alias("series_id"),
-        F.col("ts"),
-        F.col("value").cast("long").alias("value"),
-    ]
-    if keep_doc_id:
-        cols.insert(0, F.col("doc_id"))
-    return long.select(*cols)
-
-
-def _derive_wide_arrow(sequences: DataFrame, keep_doc_id: bool) -> DataFrame:
-    import numpy as np
-    import pyarrow as pa
-
-    pass_cols = ["doc_id"] if keep_doc_id else []
-    pre = sequences.select(
-        *pass_cols,
-        F.col("source"),
-        F.unix_timestamp(event_time("doc_id")).alias("ts_sec"),
-        F.col("tokens"),
-    )
-
-    out_fields = (
-        ([("doc_id", pa.string())] if keep_doc_id else [])
-        + [("source", pa.string()), ("ts_sec", pa.int64())]
-        + [(s, pa.int64()) for s in TOKEN_STATS]
-    )
-    out_schema_arrow = pa.schema(out_fields)
-    out_schema = ", ".join(
-        f"{n} {'string' if t == pa.string() else 'long'}" for n, t in out_fields
-    )
-
-    # narrow-row Arrow path (~60 int32 tokens/row): pin the measured
-    # 256k batch size at call time so the derive throughput does not
-    # depend on what a wide-row operator (codec decode) last set the
-    # session-wide conf to — see session.set_arrow_batch
-    from opentsdb_rollup_rust_spark.session import (
-        ARROW_BATCH_NARROW,
-        set_arrow_batch,
-    )
-
-    set_arrow_batch(
-        sequences.sparkSession,
-        int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", ARROW_BATCH_NARROW)),
-    )
-
-    def stats_batches(batches):
-        for b in batches:
-            tokens = b.column(b.schema.get_field_index("tokens"))
-            if isinstance(tokens, pa.ChunkedArray):
-                tokens = tokens.combine_chunks()
-            la = tokens
-            # keep the values buffer in its NATIVE int32: upcasting 60
-            # tokens/row to int64 up front doubles the bytes streamed
-            # through DRAM — and this box's memory bandwidth, not CPU,
-            # is what stops scaling at high core counts (membw scales
-            # 0.51 at 8->32 cores vs 0.79 for pure compute). reduceat
-            # accumulates in int64 via dtype=; only the tiny per-row
-            # outputs get widened.
-            off = la.offsets.to_numpy(zero_copy_only=False)
-            flat = la.values.to_numpy(zero_copy_only=False)
-            starts, ends = off[:-1], off[1:]
-            n = (ends - starts).astype(np.int64)
-            if len(flat) == 0 or (n == 0).any():
-                # reduceat is undefined on empty slices; the generator
-                # guarantees n_tok >= 1, so this is a safety net only
-                raise ValueError("empty token arrays not supported by arrow impl")
-            if off[0] != 0 or off[-1] != len(flat):
-                # reduceat folds the final segment to the END of the
-                # values buffer; a sliced / non-canonical ListArray whose
-                # offsets don't span the buffer would silently corrupt
-                # the last row's stats — fail loudly instead
-                raise ValueError(
-                    f"non-canonical list buffers: offsets [{off[0]}, {off[-1]}] "
-                    f"vs values length {len(flat)}"
-                )
-            cols = {
-                "n_tok": n,
-                "tok_sum": np.add.reduceat(flat, starts, dtype=np.int64),
-                "tok_min": np.minimum.reduceat(flat, starts).astype(np.int64),
-                "tok_max": np.maximum.reduceat(flat, starts).astype(np.int64),
-                "tok_first": flat[starts].astype(np.int64),
-                "tok_last": flat[ends - 1].astype(np.int64),
-            }
-            arrays = [b.column(b.schema.get_field_index(c)) for c in pass_cols]
-            arrays.append(b.column(b.schema.get_field_index("source")))
-            arrays.append(b.column(b.schema.get_field_index("ts_sec")))
-            arrays += [pa.array(cols[s], type=pa.int64()) for s in TOKEN_STATS]
-            yield pa.RecordBatch.from_arrays(arrays, schema=out_schema_arrow)
-
-    return pre.mapInArrow(stats_batches, out_schema)

@@ -175,7 +175,7 @@ def calendar_rollup_tz(
 
 
 def fused_tier_rollup(
-    sequences: DataFrame, interval: str, salts: int = 0, impl: str = "arrow"
+    sequences: DataFrame, interval: str, salts: int = 0
 ) -> DataFrame:
     """Derive + base-tier rollup fused in WIDE form — the job/bench
     scale path.
@@ -195,7 +195,7 @@ def fused_tier_rollup(
     two-phase agg exactly like operators.skew.salted_rollup."""
     from .points import derive_wide
 
-    return fused_rollup_wide(derive_wide(sequences, impl=impl), interval, salts)
+    return fused_rollup_wide(derive_wide(sequences), interval, salts)
 
 
 def fused_rollup_wide(

@@ -85,7 +85,6 @@ def run_rollup_job(
     encode: bool = True,
     tiers: dict[str, TierSpec] | None = None,
     fail_before_chunks: bool = False,
-    derive_impl: str = "arrow",
 ) -> JobResult:
     """Run one tier to completion (idempotent under re-runs).
 
@@ -107,7 +106,7 @@ def run_rollup_job(
         # fused wide-form derive+rollup: aggregates one row per sequence
         # (6 stat buffers) instead of one per point; identical result to
         # salted_rollup(derive_points(...)) by golden test
-        rolled = fused_tier_rollup(src, tier, salts=salts, impl=derive_impl)
+        rolled = fused_tier_rollup(src, tier, salts=salts)
     else:
         src_table = f"rollup_{spec.source}"
         src_snapshot = store.current_snapshot(src_table)
@@ -243,7 +242,6 @@ def backfill_tier(
     n_buckets: int = 8,
     salts: int = 8,
     tiers: dict[str, TierSpec] | None = None,
-    derive_impl: str = "arrow",
 ) -> dict:
     """Recompute one tier's rollups for [t0, t1) from its source and
     surgically splice them into the tier table — the operational fix
@@ -253,8 +251,8 @@ def backfill_tier(
     from the sequences snapshot for the base tier; cascade re-agg from
     the finer tier otherwise) but reads ONLY the range: the base tier
     pre-filters sequences on the deterministic event time (a cheap
-    JVM expression over doc_id, evaluated before the expensive Arrow
-    derive ever sees a row), and cascade tiers filter the finer tier
+    JVM expression over doc_id, evaluated before the token-array folds
+    of the derive ever see a row), and cascade tiers filter the finer tier
     on the RAW window_start column so the predicate pushes to parquet
     footers. The splice is store.replace_range (overwrite-by-filter /
     footer classification — never a full-table rewrite).
@@ -280,7 +278,7 @@ def backfill_tier(
         src = store.read("sequences")
         ev = F.unix_timestamp(event_time("doc_id"))
         src = src.where((ev >= F.lit(wlo)) & (ev < F.lit(ev_hi)))
-        rolled = fused_tier_rollup(src, tier, salts=salts, impl=derive_impl)
+        rolled = fused_tier_rollup(src, tier, salts=salts)
     else:
         finer = store.read(f"rollup_{spec.source}")
         finer = finer.where(

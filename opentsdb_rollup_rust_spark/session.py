@@ -12,10 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: Arrow batch rows for NARROW-row Python paths (the derive pipeline:
-#: ~60 int32 tokens/row -> ~512 MB/batch worst case at the 512-token
-#: cap). A/B-measured faster than smaller batches at both parallelism
-#: levels (scripts/arrow_batch_ab.py, BENCH/BASELINE.md r4).
+#: Arrow batch rows for NARROW-row Python paths (codec encode, packing,
+#: similarity). A/B-measured faster than smaller batches at both
+#: parallelism levels (BENCH/BASELINE.md r4).
 ARROW_BATCH_NARROW = 262144
 
 #: Arrow batch rows for WIDE-row Python paths (Gorilla chunk decode:
@@ -32,7 +31,7 @@ ARROW_BATCH_WIDE = 2048
 def set_arrow_batch(spark: SparkSession, rows: int) -> None:
     """Scope the session-wide Arrow batch size to ``rows`` for the
     queries about to execute. Operators with a strong row-width
-    preference (derive: narrow; codec decode / multimodal: wide) call
+    preference (codec encode: narrow; codec decode / multimodal: wide) call
     this when they are invoked; since the engine's job, bench and
     driver-gate flows define-then-execute each query serially, the
     value set at call time is the value in force at execution. A plan
@@ -99,22 +98,14 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 256k-row Arrow batches (Spark default 10k): the derive path
-        # streams millions of small token lists through mapInArrow —
-        # bigger batches amortize per-batch IPC/GIL overhead. The r4
-        # interleaved same-JVM ABAB (scripts/arrow_batch_ab.py,
-        # BENCH/BASELINE.md) had 256k beat 64k in every adjacent pair
-        # (1.45x/1.61x in degraded windows, 1.06x near-clean): fewer
-        # IPC round trips = fewer worker wakeups on the VMM fault
-        # path. Worst-case worker memory ~512 MB/batch at the 512-
-        # token cap (256k rows x 512 x int32), well under executor
-        # headroom at 2 g/core. This default is sized for NARROW rows
-        # only: wide-row Arrow paths (codec decode, multimodal) scope
-        # it down to ARROW_BATCH_WIDE at call time — see
-        # set_arrow_batch (r4 ADVICE). Env-overridable for A/B runs.
+        # 256k-row Arrow batches (Spark default 10k) for the narrow-row
+        # Python stages (codec encode, packing, similarity): bigger
+        # batches amortize per-batch IPC/GIL overhead. Wide-row Arrow
+        # paths (codec decode, multimodal) scope it down to
+        # ARROW_BATCH_WIDE at call time — see set_arrow_batch (r4
+        # ADVICE).
         .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", str(ARROW_BATCH_NARROW)),
+            "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_NARROW)
         )
         .config("spark.sql.parquet.compression.codec", "zstd")
         # int64 micros, NOT the legacy INT96 default: INT96 columns get

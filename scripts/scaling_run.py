@@ -256,9 +256,8 @@ def main() -> None:
         "n_sequences": args.seqs,
         "warmup": args.warmup,
         "reps": args.reps,
-        # engine-config disclosure (r4): which derive path the timed
-        # pipeline used and whether the bench JVMs pretouched the heap
-        "derive_impl": os.environ.get("BENCH_DERIVE_IMPL", "sql"),
+        # engine-config disclosure (r4): whether the bench JVMs
+        # pretouched the heap
         "pretouch": os.environ.get("SPARK_GRAFT_PRETOUCH", "1") != "0",
     }
     print(json.dumps(summary))
@@ -269,9 +268,8 @@ def main() -> None:
 
 Input: {args.seqs} deterministic synthetic sequences = {args.seqs * 6}
 metric points (seedless xxhash synth, fixed file layout). Timed window
-per rep: read -> derive points (impl=
-{os.environ.get("BENCH_DERIVE_IMPL", "sql")}) -> 1m rollup -> 1h
--> 1d cascade -> sink. Per level: process pinned to exactly N cores
+per rep: read -> derive points -> 1m rollup -> 1h -> 1d cascade ->
+sink. Per level: process pinned to exactly N cores
 (sched_setaffinity), {args.warmup} untimed JIT-warmup reps, best of
 {args.reps} timed reps (best-of because this box shows intermittent
 host-level kernel-time bursts — 40-80s reps at 10x sys time with ~0

@@ -1,6 +1,7 @@
 """A1-A5 golden semantics (SURVEY.md §5.2 item 1) + DuckDB oracle."""
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from opentsdb_rollup_rust_spark.operators.points import derive_points
@@ -84,19 +85,93 @@ def test_targeted_salting_matches_unsalted(points):
 
 def test_fused_rollup_matches_long_form(spark, sequences):
     """Golden: the job/bench scale path (wide-form fused derive+agg,
-    salted and unsalted, arrow and sql) is bit-identical to the
-    long-form salted_rollup(derive_points(...)) reference."""
+    salted and unsalted) is bit-identical to the long-form
+    tumbling_rollup(derive_points(...)) reference."""
     from opentsdb_rollup_rust_spark.operators.points import derive_points
     from opentsdb_rollup_rust_spark.operators.rollup import (
         fused_tier_rollup,
         tumbling_rollup,
     )
 
-    want = tumbling_rollup(derive_points(sequences, impl="arrow"), "1m")
-    for salts, impl in ((0, "arrow"), (8, "arrow"), (0, "sql")):
-        got = fused_tier_rollup(sequences, "1m", salts=salts, impl=impl)
-        assert got.exceptAll(want).count() == 0, (salts, impl)
-        assert want.exceptAll(got).count() == 0, (salts, impl)
+    want = tumbling_rollup(derive_points(sequences), "1m")
+    for salts in (0, 8):
+        got = fused_tier_rollup(sequences, "1m", salts=salts)
+        assert got.exceptAll(want).count() == 0, salts
+        assert want.exceptAll(got).count() == 0, salts
+
+
+@pytest.fixture(params=[True, False], ids=["ansi_on", "ansi_off"])
+def ansi(spark, request):
+    """Run the test under both spark.sql.ansi.enabled values."""
+    key = "spark.sql.ansi.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(request.param).lower())
+    yield request.param
+    spark.conf.set(key, old)
+
+
+def _token_rows(spark, rows):
+    return spark.createDataFrame(
+        [(f"d{i}", t, len(t), src) for i, (src, t) in enumerate(rows)],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+
+
+#: (source, tokens, exact sum): three rows whose int32 running sum
+#: overflows, plus one in-contract row
+OUT_OF_CONTRACT = [
+    ("hi", [2**31 - 1, 1], 2**31),
+    ("lo", [-(2**31), -1], -(2**31) - 1),
+    ("rep", [2**30] * 3, 3 * 2**30),
+    ("ok", [5, -2, 9], 12),
+]
+
+
+def test_out_of_contract_token_sums_exact(spark, ansi):
+    """token_array_stats, derive_points and fused_tier_rollup sum rows
+    whose int32 fold would overflow exactly in both ANSI modes."""
+    from opentsdb_rollup_rust_spark.config import SERIES_SEP
+    from opentsdb_rollup_rust_spark.functions.arrays import token_array_stats
+    from opentsdb_rollup_rust_spark.operators.rollup import fused_tier_rollup
+
+    seqs = _token_rows(spark, [(src, t) for src, t, _ in OUT_OF_CONTRACT])
+    want = {src: s for src, _, s in OUT_OF_CONTRACT}
+
+    stats = token_array_stats("tokens")
+    got = seqs.select("source", stats["tok_sum"].alias("s")).collect()
+    assert {r.source: r.s for r in got} == want
+
+    pts = derive_points(seqs).where(F.col("series_id").endswith(":tok_sum"))
+    assert {r.series_id: r.value for r in pts.collect()} == {
+        f"{src}{SERIES_SEP}tok_sum": s for src, s in want.items()
+    }
+
+    for salts in (0, 4):
+        roll = fused_tier_rollup(seqs, "1m", salts=salts).where(
+            F.col("series_id").endswith(":tok_sum")
+        )
+        assert {
+            r.series_id: (r["sum"], r["min"], r["max"]) for r in roll.collect()
+        } == {f"{src}{SERIES_SEP}tok_sum": (s, s, s) for src, s in want.items()}
+
+
+def test_empty_token_array_fails_loudly(spark, ansi):
+    """An empty token array has no min/max/first/last: every derive
+    entry point must raise on it in both ANSI modes instead of
+    emitting null stats."""
+    from opentsdb_rollup_rust_spark.config import TOKEN_STATS
+    from opentsdb_rollup_rust_spark.functions.arrays import token_array_stats
+    from opentsdb_rollup_rust_spark.operators.rollup import fused_tier_rollup
+
+    seqs = _token_rows(spark, [("web", [3, 4]), ("web", [])])
+    stats = token_array_stats("tokens")
+    for df in (
+        seqs.select(*[stats[s] for s in TOKEN_STATS]),
+        derive_points(seqs),
+        fused_tier_rollup(seqs, "1d"),
+    ):
+        with pytest.raises(Exception, match="empty token array"):
+            df.collect()
 
 
 def test_topk_hot_series(points):

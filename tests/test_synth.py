@@ -1,5 +1,6 @@
 """S2 generator: determinism, schema, FIXTURES.md §1 rules."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from opentsdb_rollup_rust_spark.sources.synth import synth_sequences, MAX_LEN, VOCAB
@@ -40,13 +41,44 @@ def test_source_skew(sequences):
     assert 0.6 < frac < 0.8  # the deliberate hot key
 
 
-def test_derive_points_arrow_matches_sql(sequences):
-    """Golden: the vectorized arrow derive (the scale path / job
-    default) is bit-identical to the pure-SQL reference derive."""
+def test_derive_matches_python_reference(sequences):
+    """Golden: derive_wide and derive_points equal plain-Python per-row
+    stats over the collected tokens — a reference that shares no code
+    with the derive's Spark expressions."""
+    from opentsdb_rollup_rust_spark.config import SERIES_SEP, TOKEN_STATS
+    from opentsdb_rollup_rust_spark.operators.points import (
+        derive_points,
+        derive_wide,
+    )
+
+    want = {}
+    for r in sequences.select("doc_id", "source", "tokens").collect():
+        t = r.tokens
+        stats = (len(t), sum(t), min(t), max(t), t[0], t[-1])
+        want[r.doc_id] = (r.source, dict(zip(TOKEN_STATS, stats)))
+
+    wide = derive_wide(sequences, keep_doc_id=True).collect()
+    assert len(wide) == len(want)
+    ts_of = {}
+    for r in wide:
+        source, stats = want[r.doc_id]
+        assert (r.source, {s: r[s] for s in TOKEN_STATS}) == (source, stats)
+        ts_of[r.doc_id] = r.ts_sec
+
+    points = derive_points(sequences, keep_doc_id=True).select(
+        "doc_id", "series_id", F.unix_timestamp("ts").alias("ts_sec"), "value"
+    )
+    got = sorted(tuple(r) for r in points.collect())
+    expect = sorted(
+        (doc, f"{source}{SERIES_SEP}{stat}", ts_of[doc], v)
+        for doc, (source, stats) in want.items()
+        for stat, v in stats.items()
+    )
+    assert got == expect
+
+
+def test_derive_points_rejects_unknown_impl(sequences):
     from opentsdb_rollup_rust_spark.operators.points import derive_points
 
-    arrow = derive_points(sequences, keep_doc_id=True, impl="arrow")
-    sql = derive_points(sequences, keep_doc_id=True, impl="sql")
-    assert arrow.exceptAll(sql).count() == 0
-    assert sql.exceptAll(arrow).count() == 0
-    assert arrow.count() == sequences.count() * 6  # one point per stat
+    with pytest.raises(ValueError, match="only 'sql'"):
+        derive_points(sequences, impl="arrow")
