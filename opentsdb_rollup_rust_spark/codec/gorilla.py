@@ -45,6 +45,15 @@ numpy lane per chunk, every loop iteration advances all active chunks
 by one point; 5-8x the scalar reader at Arrow-batch widths). Both
 finish a chunk vectorized as soon as its remaining stream is all zero
 codes (regular timestamps / repeated values).
+
+Spark surface: encode_chunks crosses into Python once per Arrow batch,
+not once per chunk. The long rows are repartitioned by series and
+sorted by (series_id, agg, chunk_start, epoch), so every chunk is a
+contiguous run of rows; one mapInArrow pass (encode_sorted_batches)
+splits each batch at key changes and encodes each run. A run cut by a
+batch boundary is carried into the next batch, so at most one
+unfinished chunk (<= chunk_points rows) is held at a time. Decode is
+mapInPandas over whole-chunk rows (decode_chunks).
 """
 
 from __future__ import annotations
@@ -671,14 +680,95 @@ POINT_SCHEMA = (
 )
 
 
+_KEYS = ("series_id", "agg", "chunk_start")
+
+
+def _group_bounds(tbl) -> np.ndarray:
+    """Group offsets of an Arrow table sorted by _KEYS: group g is rows
+    [bounds[g], bounds[g + 1]) (non-empty table; bounds[-1] == rows)."""
+    import pyarrow.compute as pc
+
+    n = tbl.num_rows
+    change = np.zeros(n - 1, dtype=bool)
+    for k in _KEYS:
+        c = tbl.column(k)
+        change |= pc.not_equal(c.slice(1), c.slice(0, n - 1)).to_numpy()
+    return np.concatenate([[0], np.flatnonzero(change) + 1, [n]])
+
+
+def encode_sorted_batches(batches, interval: str):
+    """The encode kernel behind encode_chunks: Arrow batches of long
+    rows (series_id, agg, chunk_start, epoch, value), sorted by
+    (series_id, agg, chunk_start, epoch) across the whole stream ->
+    one CHUNK_SCHEMA RecordBatch per input batch, one row per
+    (series_id, agg, chunk_start) group.
+
+    A group may straddle batches, so the last group of every batch is
+    held back and prepended to the next one: the carry is at most one
+    (possibly unfinished) group — <= chunk_points rows for a tier with
+    one row per (series, window) — and is flushed after the last
+    batch."""
+    import pyarrow as pa
+
+    sec = INTERVAL_SECONDS[interval]
+
+    def encode(tbl, bounds: np.ndarray):
+        starts, ends = bounds[:-1], bounds[1:]
+        cs = tbl.column("chunk_start").to_numpy()
+        ts_units = (tbl.column("epoch").to_numpy() - cs) // sec
+        words = tbl.column("value").to_numpy().view(U64)
+        ts_out, val_out = [], []
+        for s, e in zip(starts.tolist(), ends.tolist()):
+            tb, vb = encode_chunk_arrays(ts_units[s:e], words[s:e])
+            ts_out.append(tb)
+            val_out.append(vb)
+        n = ends - starts
+        enc = np.fromiter(
+            (len(a) + len(b) for a, b in zip(ts_out, val_out)),
+            dtype=np.int64, count=len(ts_out),
+        )
+        return pa.RecordBatch.from_arrays(
+            [
+                tbl.column("series_id").take(starts).combine_chunks(),
+                pa.array([interval] * len(starts), pa.string()),
+                pa.array(cs[starts] * 1_000_000, pa.timestamp("us", tz="UTC")),
+                tbl.column("agg").take(starts).combine_chunks(),
+                pa.array(n, pa.int32()),
+                pa.array(ts_out, pa.binary()),
+                pa.array(val_out, pa.binary()),
+                pa.array(16 * n),  # 8B ts + 8B value per raw point
+                pa.array(enc),
+            ],
+            names=["series_id", "interval", "chunk_start", "agg", "n",
+                   "ts_bits", "val_bits", "raw_bytes", "enc_bytes"],
+        )
+
+    carry = None
+    for batch in batches:
+        tbl = pa.Table.from_batches([batch])
+        if carry is not None:
+            tbl = pa.concat_tables([carry, tbl])
+        if not tbl.num_rows:
+            continue
+        bounds = _group_bounds(tbl)
+        yield encode(tbl, bounds[:-1])
+        carry = tbl.slice(bounds[-2])
+    if carry is not None:
+        yield encode(carry, np.array([0, carry.num_rows]))
+
+
 def encode_chunks(
     rollup: "DataFrame", interval: str, chunk_points: int = 4096
 ) -> "DataFrame":
     """C1: rollup tier -> Gorilla chunk table, one row per
-    (series, agg, chunk). Long format via F.stack (JVM), grouped-map
-    encode via applyInPandas (Arrow) over narrow rows, so the session's
-    Arrow batch size is scoped back to ARROW_BATCH_NARROW at call time
-    (a prior decode_chunks leaves it at ARROW_BATCH_WIDE)."""
+    (series, agg, chunk). Long format via F.stack (JVM), then
+    repartition(series_id) + sortWithinPartitions(series_id, agg,
+    chunk_start, epoch) feed one mapInArrow pass (encode_sorted_batches):
+    one Python call per Arrow batch, groups split inside the batch, and
+    a group cut by a batch boundary carried into the next batch (at
+    most one group is held). Rows are narrow, so the session's Arrow
+    batch size is scoped back to ARROW_BATCH_NARROW at call time (a
+    prior decode_chunks leaves it at ARROW_BATCH_WIDE)."""
     from pyspark.sql import functions as F
 
     from opentsdb_rollup_rust_spark.session import (
@@ -700,30 +790,14 @@ def encode_chunks(
     ).withColumn(
         "chunk_start", (F.floor(F.col("epoch") / chunk_sec) * chunk_sec).cast("long")
     )
-
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("epoch")
-        chunk_start = int(pdf["chunk_start"].iloc[0])
-        ts_units = ((pdf["epoch"].to_numpy() - chunk_start) // sec).astype(np.int64)
-        words = pdf["value"].to_numpy().astype(np.int64).view(U64)
-        ts_bits, val_bits = encode_chunk_arrays(ts_units, words)
-        n = len(pdf)
-        return pd.DataFrame(
-            {
-                "series_id": [pdf["series_id"].iloc[0]],
-                "interval": [interval],
-                "chunk_start": [pd.Timestamp(chunk_start, unit="s")],
-                "agg": [pdf["agg"].iloc[0]],
-                "n": [n],
-                "ts_bits": [ts_bits],
-                "val_bits": [val_bits],
-                "raw_bytes": [16 * n],  # 8B ts + 8B value per raw point
-                "enc_bytes": [len(ts_bits) + len(val_bits)],
-            }
-        )
-
-    return long_df.groupBy("series_id", "agg", "chunk_start").applyInPandas(
-        encode, CHUNK_SCHEMA
+    ordered = (
+        long_df.repartition("series_id")
+        .sortWithinPartitions("series_id", "agg", "chunk_start", "epoch")
+        .select("series_id", "agg", "chunk_start", "epoch",
+                F.col("value").cast("long").alias("value"))
+    )
+    return ordered.mapInArrow(
+        lambda it: encode_sorted_batches(it, interval), CHUNK_SCHEMA
     )
 
 

@@ -250,10 +250,12 @@ def repetition_profile(docs: "DataFrame", text_col: str = "text") -> "DataFrame"
     ).where(F.col("n_words") >= 2)
     # run statistics from the run-START positions instead of a struct
     # fold (r6): in the sorted array, position i (1-based) starts a
-    # run iff i == 1 or sg[i] != sg[i-1]. distinct grams = number of
-    # run starts; the longest run = the largest gap between
+    # run iff i == 1 or sg[i] != sg[i-1]; the lookback uses the
+    # 0-based F.get, which is NULL out of range, so the plan holds no
+    # index-0 element_at whatever the evaluation order. distinct grams
+    # = number of run starts; the longest run = the largest gap between
     # consecutive starts (with a sentinel n+1 closing the last run).
-    # Same O(L) element_at accesses as the old fold but no per-element
+    # Same O(L) array accesses as the old fold but no per-element
     # struct allocation (best-rep 1.06 s -> 0.67 s on 100k docs,
     # interleaved scripts/repetition_ab_r06.py; exact-equal output).
     sg = F.col("sg")
@@ -261,7 +263,7 @@ def repetition_profile(docs: "DataFrame", text_col: str = "text") -> "DataFrame"
     starts = F.filter(
         F.sequence(F.lit(1), n2),
         lambda i: (i == F.lit(1))
-        | (F.element_at(sg, i) != F.element_at(sg, i - F.lit(1))),
+        | (F.get(sg, i - F.lit(2)) != F.get(sg, i - F.lit(1))),
     )
     d2 = F.size(starts)
     run_ends = F.concat(

@@ -1305,10 +1305,10 @@ def api_query_delete(store, table: str, spec: QuerySpec, ts_col: str = "ts",
     # pushdown-friendly range form (r6): raw-column comparison against
     # a foldable timestamp literal reaches the parquet scan, so files/
     # row groups disjoint from [start, end) are skipped footer-first —
-    # exact (floor equivalence, see store._epoch_bound_exprs)
-    from ..sources.store import _epoch_bound_exprs
+    # exact (floor equivalence, see store.epoch_bound_exprs)
+    from ..sources.store import epoch_bound_exprs
 
-    ts_sec, mk = _epoch_bound_exprs(cur, ts_col)
+    ts_sec, mk = epoch_bound_exprs(cur, ts_col)
     in_range = (ts_sec >= mk(spec.start)) & (ts_sec < mk(spec.end))
     # keep = in-range rows that do NOT match. The compiled tag filters
     # are null-safe (a missing tagk is FALSE, never NULL — the

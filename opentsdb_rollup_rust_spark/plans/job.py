@@ -20,8 +20,14 @@ Pipeline per tier (BASELINE.json:6,14):
     -> Gorilla chunk encode (C1) reads back ONLY the files this commit
        added (no recompute), appends chunks with its own summary
        (chunks resume independently if the job dies between the two).
+       The compression stats ride that append as a two-sum
+       DataFrame.observe (enc_bytes, n): the run never re-reads the
+       chunk table, so the stats cover the chunks THIS run encoded.
+    -> per-bucket stats: one grouped read of the rollup delta's
+       bucket/count columns.
     -> lineage + metrics rows appended last (reporting; resume does
-       not depend on them).
+       not depend on them), built through Arrow into a local relation
+       (no Python workers) and written as one file per append.
 
 Scale notes: the salted agg's phase-1 partial aggregation collapses
 each task to ~|series x salts x windows| rows before any exchange; the
@@ -37,10 +43,11 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..codec.gorilla import compression_stats, encode_chunks
+from ..codec.gorilla import encode_chunks
 from ..config import DEFAULT_TIERS, TierSpec
 from ..functions.hashing import series_hash_bucket
 from ..operators.rollup import cascade_reagg, fused_tier_rollup
@@ -54,6 +61,10 @@ ROLLUP_SCHEMA = (
 
 @dataclass
 class JobResult:
+    """One tier run. ``bytes_per_point`` is Gorilla encoded bytes per
+    point over the chunks THIS run encoded (0.0 when it encoded none,
+    e.g. every bucket was already chunked or encode was off)."""
+
     run_id: str
     tier: str
     src_snapshot: int
@@ -151,20 +162,20 @@ def run_rollup_job(
                 else store.read(rollup_table)
             )
             base = base.where(F.col("bucket").isin(chunk_todo))
+            # the compression stats ride the chunk write: two sums
+            # collected by the append's own action, no re-read
+            chunk_stats = Observation()
             chunks = encode_chunks(base.drop("bucket"), tier, spec.chunk_points)
             store.append(
                 chunks_table,
-                chunks,
+                chunks.observe(chunk_stats, F.sum("enc_bytes").alias("enc_bytes"),
+                               F.sum("n").alias("points")),
                 summary={"src_snapshot": src_snapshot, "buckets": chunk_todo,
                          "run_id": run_id},
             )
-        if store.exists(chunks_table):
-            row = (
-                compression_stats(store.read(chunks_table))
-                .agg((F.sum("enc_bytes") / F.sum("points")).alias("bpp"))
-                .first()
-            )
-            bytes_per_point = float(row.bpp or 0.0)
+            stats = chunk_stats.get
+            if stats["points"]:
+                bytes_per_point = stats["enc_bytes"] / stats["points"]
 
     # --- per-bucket stats from the WRITTEN files (no recompute)
     per_bucket: dict[int, tuple[int, int]] = {}
@@ -181,25 +192,37 @@ def run_rollup_job(
 
     wall_ms = int((time.monotonic() - t0) * 1000)
 
-    # --- lineage + metrics (reporting; resume does not depend on them)
+    # --- lineage + metrics (reporting; resume does not depend on them).
+    # Rows go through Arrow into a local relation (no Python workers),
+    # one data file per append.
     if per_bucket:
+        buckets = sorted(per_bucket)
+        k = len(buckets)
+        lineage = pa.table({
+            "run_id": [run_id] * k,
+            "tier": [tier] * k,
+            "bucket": buckets,
+            "src_snapshot": [src_snapshot] * k,
+            "rows_in": [per_bucket[b][1] for b in buckets],
+            "rows_out": [per_bucket[b][0] for b in buckets],
+        })
         ldf = spark.createDataFrame(
-            [
-                (run_id, tier, b, src_snapshot, pin, pout)
-                for b, (pout, pin) in sorted(per_bucket.items())
-            ],
+            lineage,
             "run_id string, tier string, bucket int, src_snapshot long, "
             "rows_in long, rows_out long",
         ).withColumn("committed_at", F.current_timestamp())
-        store.append("lineage", ldf)
+        store.append("lineage", ldf.coalesce(1))
         pps = points_in / max(wall_ms / 1000.0, 1e-9)
+        metrics = pa.table({
+            "run_id": [run_id] * k,
+            "tier": [tier] * k,
+            "bucket": buckets,
+            "points_per_sec": [pps] * k,
+            "bytes_per_point": [bytes_per_point] * k,
+            "wall_ms": [wall_ms] * k,
+        })
         store.append(
-            "metrics",
-            spark.createDataFrame(
-                [(run_id, tier, b, pps, bytes_per_point, wall_ms)
-                 for b in sorted(per_bucket)],
-                METRICS_SCHEMA,
-            ),
+            "metrics", spark.createDataFrame(metrics, METRICS_SCHEMA).coalesce(1)
         )
 
     return JobResult(

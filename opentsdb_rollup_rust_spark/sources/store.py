@@ -457,7 +457,7 @@ class ManifestStore:
         snap_id = self._new_snap_id(m)
         if rewrite:
             straddling = self.spark.read.parquet(*rewrite)
-            ts, mk = _epoch_bound_exprs(straddling, ts_col)
+            ts, mk = epoch_bound_exprs(straddling, ts_col)
             outside = straddling.where(
                 (ts < mk(t0_epoch)) | (ts >= mk(t1_epoch))
             )
@@ -531,7 +531,7 @@ class ManifestStore:
         new_paths = list(kept)
         if straddle:
             sdf = self.spark.read.parquet(*straddle)
-            ts, mk = _epoch_bound_exprs(sdf, ts_col)
+            ts, mk = epoch_bound_exprs(sdf, ts_col)
             filtered = sdf.where(ts >= mk(cutoff_epoch))
             new_paths += self._write_data(table, filtered, snap_id)
 
@@ -559,7 +559,7 @@ class ManifestStore:
         return self._commit_against(table, base, build)
 
 
-def _epoch_bound_exprs(df: "DataFrame", ts_col: str):
+def epoch_bound_exprs(df: "DataFrame", ts_col: str):
     """(lhs, mk_lit) pieces for epoch-seconds range predicates on
     ``ts_col``, pushdown-friendly where possible (r6, guide §6.2).
 
@@ -724,7 +724,10 @@ class IcebergStore:
 
         q = self._qual(table)
         if not self.exists(table):
-            df.limit(0).writeTo(q).create()
+            # create from the schema alone: running df's own plan here
+            # would also complete any Observation attached to df (with
+            # empty metrics) before the real write below
+            self.spark.createDataFrame([], df.schema).writeTo(q).create()
         w = df.writeTo(q)
         for k, v in (summary or {}).items():
             w = w.option(f"snapshot-property.{k}", json.dumps(v))

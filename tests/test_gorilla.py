@@ -11,7 +11,9 @@ from opentsdb_rollup_rust_spark.codec.gorilla import (
     decode_chunks,
     encode_chunk_arrays,
     encode_chunks,
+    encode_sorted_batches,
 )
+from opentsdb_rollup_rust_spark.config import INTERVAL_SECONDS
 
 
 # ----------------------------------------------------------- mirror encoder
@@ -270,3 +272,131 @@ def test_compression_beats_raw(spark, points):
     r1m = tumbling_rollup(points, "1m")
     stats = compression_stats(encode_chunks(r1m, "1m")).collect()
     assert all(row.ratio > 1.0 for row in stats)
+
+
+# ------------------------------------------- encode: batch-split boundaries
+
+@st.composite
+def sorted_groups(draw):
+    """Key-sorted long rows of random (series, agg, chunk_start) groups,
+    cut into random Arrow batches."""
+    import pyarrow as pa
+
+    keys = sorted(
+        draw(
+            st.sets(
+                st.tuples(
+                    st.sampled_from(["a", "b", "s10", "s2"]),
+                    st.sampled_from(["count", "max", "min", "sum"]),
+                    st.integers(0, 3).map(lambda c: c * 60 * 64),
+                ),
+                min_size=1,
+                max_size=10,
+            )
+        )
+    )
+    cols = {k: [] for k in ("series_id", "agg", "chunk_start", "epoch", "value")}
+    for sid, agg, cs in keys:
+        offs = sorted(draw(st.sets(st.integers(0, 63), min_size=1, max_size=20)))
+        for o in offs:
+            cols["series_id"].append(sid)
+            cols["agg"].append(agg)
+            cols["chunk_start"].append(cs)
+            cols["epoch"].append(cs + 60 * o)
+            cols["value"].append(draw(st.integers(-(2**40), 2**40)))
+    tbl = pa.table(
+        {k: pa.array(v, pa.string() if k in ("series_id", "agg") else pa.int64())
+         for k, v in cols.items()}
+    )
+    n = tbl.num_rows
+    cuts = sorted(draw(st.sets(st.integers(1, max(n - 1, 1)), max_size=8)))
+    edges = [0] + [c for c in cuts if c < n] + [n]
+    return tbl, [tbl.slice(a, b - a).to_batches()[0] for a, b in zip(edges, edges[1:])
+                 if b > a]
+
+
+@settings(max_examples=80, deadline=None)
+@given(sorted_groups())
+def test_encode_batches_ignore_batch_boundaries(case):
+    """Any split of the sorted stream into batches yields exactly one
+    chunk per group, byte-equal to encoding each group on its own."""
+    import pyarrow as pa
+
+    tbl, batches = case
+    out = pa.Table.from_batches(list(encode_sorted_batches(iter(batches), "1m")))
+    got = sorted(zip(*(out.column(c).to_pylist() for c in (
+        "series_id", "agg", "n", "ts_bits", "val_bits", "enc_bytes"))))
+    d = tbl.to_pydict()
+    want = []
+    rows = list(zip(d["series_id"], d["agg"], d["chunk_start"], d["epoch"], d["value"]))
+    for key in sorted({r[:3] for r in rows}):
+        g = [r for r in rows if r[:3] == key]
+        tb, vb = encode_chunk_arrays(
+            np.array([(r[3] - key[2]) // 60 for r in g]),
+            np.array([r[4] for r in g], dtype=np.int64).view(np.uint64),
+        )
+        want.append((key[0], key[1], len(g), tb, vb, len(tb) + len(vb)))
+    assert got == sorted(want)
+
+
+def _local_encode(rollup, interval, chunk_points=4096):
+    """Local reference for encode_chunks: pandas groupby(series_id,
+    agg, chunk_start) + encode_chunk_arrays over the collected tier."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    sec = INTERVAL_SECONDS[interval]
+    span = sec * chunk_points
+    pdf = rollup.select(
+        "series_id", F.unix_timestamp("window_start").alias("epoch"),
+        "sum", "count", "min", "max",
+    ).toPandas()
+    long = pd.concat(
+        pd.DataFrame({"series_id": pdf["series_id"], "epoch": pdf["epoch"],
+                      "agg": agg, "value": pdf[agg].astype(np.int64)})
+        for agg in ("sum", "count", "min", "max")
+    )
+    long["chunk_start"] = long["epoch"] // span * span
+    out = set()
+    for (sid, agg, cs), g in long.groupby(["series_id", "agg", "chunk_start"]):
+        g = g.sort_values("epoch")
+        tb, vb = encode_chunk_arrays(
+            (g["epoch"].to_numpy() - cs) // sec,
+            g["value"].to_numpy().view(np.uint64),
+        )
+        n = len(g)
+        out.add((sid, interval, int(cs), agg, n, tb, vb, 16 * n, len(tb) + len(vb)))
+    return out
+
+
+@pytest.mark.parametrize("batch_rows", [None, 7])
+@pytest.mark.parametrize("tier", ["1m", "1h"])
+def test_spark_encode_matches_local_groupby(spark, points, tier, batch_rows):
+    """Differential test: Spark encode_chunks equals the local pandas
+    grouped encode byte for byte. batch_rows=7 (set after the frame is
+    built, before the action) makes most groups straddle Arrow
+    batches."""
+    from pyspark.sql import functions as F
+
+    from opentsdb_rollup_rust_spark.operators.rollup import tumbling_rollup
+
+    rollup = tumbling_rollup(points, tier)
+    enc = encode_chunks(rollup, tier).select(
+        "series_id", "interval", F.unix_timestamp("chunk_start").alias("cs"),
+        "agg", "n", "ts_bits", "val_bits", "raw_bytes", "enc_bytes",
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(key)
+    if batch_rows is not None:
+        spark.conf.set(key, str(batch_rows))
+    try:
+        rows = enc.collect()
+    finally:
+        spark.conf.set(key, prior)
+    got = [
+        (r.series_id, r.interval, r.cs, r.agg, r.n, bytes(r.ts_bits),
+         bytes(r.val_bits), r.raw_bytes, r.enc_bytes)
+        for r in rows
+    ]
+    assert len(got) == len(set(got))
+    assert set(got) == _local_encode(rollup, tier)

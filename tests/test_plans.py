@@ -122,6 +122,19 @@ def test_derive_points_prunes_tokens_early(spark, sequences, tmp_path_factory):
             assert "tokens" not in block, block
 
 
+def test_encode_is_one_sorted_map_in_arrow(spark, mp_points):
+    """The Gorilla encode crosses into Python once per Arrow batch
+    (MapInArrow over series-sorted rows), not once per group."""
+    from opentsdb_rollup_rust_spark.codec.gorilla import encode_chunks
+    from opentsdb_rollup_rust_spark.operators.rollup import tumbling_rollup
+
+    rollup = tumbling_rollup(mp_points, "1h").localCheckpoint()
+    p = plan_of(encode_chunks(rollup, "1h"))
+    assert "MapInArrow" in p, p
+    assert "FlatMapGroupsInPandas" not in p, p
+    assert n_exchanges(p) == 1, p
+
+
 def test_semi_and_anti_join_strategies(spark):
     n = spark.read.parquet(f"{SF_DIR}/nation.parquet")
     c = spark.read.parquet(f"{SF_DIR}/customer.parquet")

@@ -16,7 +16,11 @@ from opentsdb_rollup_rust_spark.plans.job import (
     run_rollup_job,
 )
 from opentsdb_rollup_rust_spark.plans.tier_router import read_rollup, route_tier
-from opentsdb_rollup_rust_spark.sources.store import ManifestStore
+from opentsdb_rollup_rust_spark.sources.store import (
+    LINEAGE_SCHEMA,
+    METRICS_SCHEMA,
+    ManifestStore,
+)
 from opentsdb_rollup_rust_spark.sources.synth import synth_sequences
 
 
@@ -95,6 +99,38 @@ def test_lineage_and_metrics_rows(spark, store):
     row = met.where(F.col("run_id") == r.run_id).first()
     assert row.points_per_sec > 0
     assert committed_buckets(store, "rollup_1m", r.src_snapshot) == {0, 1, 2, 3}
+    # typed exactly as the declared report schemas, one file per append
+    assert lin.dtypes == spark.createDataFrame([], LINEAGE_SCHEMA).dtypes
+    assert met.dtypes == spark.createDataFrame([], METRICS_SCHEMA).dtypes
+    for table in ("lineage", "metrics"):
+        m = store._load_manifest(table)
+        snap = next(s for s in m["snapshots"] if s["id"] == m["current"])
+        assert len(store.expand_files(snap["new_paths"])) == 1, table
+
+
+def test_job_stats_ride_the_chunk_write(spark, store, monkeypatch):
+    """bytes_per_point comes from the chunk append itself: on a fresh
+    store it equals compression_stats over the written chunks, and the
+    job never reads a chunk table back."""
+    from opentsdb_rollup_rust_spark.codec.gorilla import compression_stats
+
+    tables = []
+    read = store.read
+    monkeypatch.setattr(
+        store, "read", lambda table, *a, **kw: tables.append(table) or read(table, *a, **kw)
+    )
+    r = run_rollup_job(spark, store, "1m", n_buckets=4)
+    assert not [t for t in tables if t.startswith("chunks_")], tables
+    want = (
+        compression_stats(read("chunks_1m"))
+        .agg((F.sum("enc_bytes") / F.sum("points")).alias("bpp"))
+        .first()
+        .bpp
+    )
+    assert r.bytes_per_point == want > 0
+    # a re-run finds every bucket encoded: it encodes nothing
+    assert run_rollup_job(spark, store, "1m", n_buckets=4).bytes_per_point == 0.0
+    assert not [t for t in tables if t.startswith("chunks_")], tables
 
 
 def test_retention_drops_old_windows(spark, store):

@@ -120,3 +120,33 @@ def test_compact_and_replace_range_surface(spark, store):
     store.replace_range("m", "window_start", 150, 350, new)
     got = sorted(r.v for r in store.read("m").collect())
     assert got == [7, 100, 400, 1100, 1400]
+
+
+def test_iceberg_create_leaves_observation_to_the_write(spark, monkeypatch):
+    """IcebergStore.append creates a missing table before the real
+    append. The create must not execute the appended frame's plan: that
+    would complete an Observation on the frame (the job's chunk stats)
+    with empty metrics. Catalog writes are faked with a noop sink that
+    executes whatever plan it is handed."""
+    from pyspark.sql import Observation
+
+    class Writer:
+        def __init__(self, df):
+            self.df = df
+
+        def option(self, *_):
+            return self
+
+        def create(self):
+            self.df.write.format("noop").mode("overwrite").save()
+
+        append = create
+
+    monkeypatch.setattr(type(spark.range(1)), "writeTo", lambda df, _q: Writer(df))
+    store = IcebergStore.__new__(IcebergStore)
+    store.spark, store.catalog, store.namespace = spark, "cat", "ns"
+    monkeypatch.setattr(store, "exists", lambda _t: False)
+    monkeypatch.setattr(store, "current_snapshot", lambda _t: 1)
+    obs = Observation("iceberg_create")
+    store.append("t", spark.range(10).observe(obs, F.sum("id").alias("s")))
+    assert obs.get == {"s": 45}
