@@ -53,7 +53,10 @@ contiguous run of rows; one mapInArrow pass (encode_sorted_batches)
 splits each batch at key changes and encodes each run. A run cut by a
 batch boundary is carried into the next batch, so at most one
 unfinished chunk (<= chunk_points rows) is held at a time. Decode is
-mapInPandas over whole-chunk rows (decode_chunks).
+mapInPandas over whole-chunk rows (decode_chunks), each batch cut into
+runs of chunks whose lane matrix and output both fit
+DECODE_FLUSH_POINTS. Batch sizes come from the session's record and
+byte caps (session.ENGINE_CONF); no codec operator sets a conf.
 """
 
 from __future__ import annotations
@@ -334,8 +337,8 @@ def decode_chunk_arrays(
 #
 # decode_chunk_arrays above is inherently serial WITHIN a chunk (every
 # field's bit position depends on the decoded content before it), but a
-# pandas batch on the read path carries ~ARROW_BATCH_WIDE chunks — so
-# the batch decodes LANE-parallel instead: one numpy lane per chunk,
+# batch on the read path carries thousands of chunks — so the batch
+# decodes LANE-parallel instead: one numpy lane per chunk,
 # each loop iteration advancing every still-active lane by one point.
 # Per-iteration cost is a fixed ~40 numpy dispatches on |active|-wide
 # vectors, so wide batches amortize to 5-6x the scalar reader on
@@ -766,17 +769,9 @@ def encode_chunks(
     chunk_start, epoch) feed one mapInArrow pass (encode_sorted_batches):
     one Python call per Arrow batch, groups split inside the batch, and
     a group cut by a batch boundary carried into the next batch (at
-    most one group is held). Rows are narrow, so the session's Arrow
-    batch size is scoped back to ARROW_BATCH_NARROW at call time (a
-    prior decode_chunks leaves it at ARROW_BATCH_WIDE)."""
+    most one group is held). Rows are narrow (~48 B), so the session's
+    record cap, not its byte cap, sizes the batches."""
     from pyspark.sql import functions as F
-
-    from opentsdb_rollup_rust_spark.session import (
-        ARROW_BATCH_NARROW,
-        set_arrow_batch,
-    )
-
-    set_arrow_batch(rollup.sparkSession, ARROW_BATCH_NARROW)
 
     sec = INTERVAL_SECONDS[interval]
     chunk_sec = sec * chunk_points
@@ -801,86 +796,84 @@ def encode_chunks(
     )
 
 
-#: flush threshold for decode output frames: decoded points are
-#: accumulated per input Arrow batch and yielded whenever the running
-#: total crosses this — one frame is <=(cap + one chunk) points
-#: (~80 MB at 4M), independent of how many chunk rows the input batch
-#: carried, so worker memory stays bounded even under a foreign
-#: session's large maxRecordsPerBatch.
+#: decode working-set bound, in points: each decode_chunk_lanes call
+#: gets a run of chunks with sum(n) <= this (its flat output, ~80 MB
+#: at 4M) and lanes x max(n) <= this (its lanes x widest-blob byte
+#: matrix and the u64 copy of it), however many chunk rows the input
+#: batch carried — a 32 MB batch of ~30k small chunks plus one full
+#: one would otherwise build a ~1 GB matrix. For uniform full chunks
+#: the two sums are equal.
 DECODE_FLUSH_POINTS = 4_000_000
+
+
+def _decode_runs(ns: np.ndarray):
+    """Cut a batch's chunks (point counts ``ns``) into consecutive runs
+    [lo, hi) with sum(n) and lanes x max(n) both <= DECODE_FLUSH_POINTS
+    (a single chunk past it gets a run of its own). Both totals only
+    grow with the run, so the longest fitting prefix is a count."""
+    lo = 0
+    while lo < len(ns):
+        rest = ns[lo:]
+        lanes = np.arange(1, len(rest) + 1)
+        fits = (np.cumsum(rest) <= DECODE_FLUSH_POINTS) & (
+            lanes * np.maximum.accumulate(rest) <= DECODE_FLUSH_POINTS
+        )
+        hi = lo + max(1, int(fits.sum()))
+        yield lo, hi
+        lo = hi
+
+
+def decode_batches(batches):
+    """The decode kernel behind decode_chunks: pandas frames of chunk
+    rows -> POINT_SCHEMA frames. Each frame decodes LANE-PARALLEL
+    (decode_chunk_lanes: a run's chunks advance in lockstep, one numpy
+    op stream over all active lanes), one run of _decode_runs at a
+    time, so neither the lane matrix nor an output frame exceeds
+    DECODE_FLUSH_POINTS points."""
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        ns = pdf["n"].to_numpy(np.int64)
+        secs = pdf["interval"].map(INTERVAL_SECONDS).to_numpy(np.int64)
+        # resolution-proof epoch seconds: Spark's Arrow serializer
+        # coerces to datetime64[ns] today, but a future
+        # pandas-2-native datetime64[us] delivery would make a
+        # hardcoded //1e9 silently produce 1970-era epochs
+        starts = (
+            pdf["chunk_start"].to_numpy().astype("datetime64[s]").astype(np.int64)
+        )
+        for lo, hi in _decode_runs(ns):
+            sub = slice(lo, hi)
+            nsub = ns[sub]
+            ts_units, words = decode_chunk_lanes(
+                [bytes(b) for b in pdf["ts_bits"].iloc[sub]],
+                [bytes(b) for b in pdf["val_bits"].iloc[sub]],
+                nsub,
+            )
+            epoch = np.repeat(starts[sub], nsub) + ts_units * np.repeat(
+                secs[sub], nsub
+            )
+            yield pd.DataFrame(
+                {
+                    "series_id": np.repeat(pdf["series_id"].to_numpy()[sub], nsub),
+                    "interval": np.repeat(pdf["interval"].to_numpy()[sub], nsub),
+                    "agg": np.repeat(pdf["agg"].to_numpy()[sub], nsub),
+                    "window_start": pd.to_datetime(epoch, unit="s"),
+                    "value": words.view(np.int64),
+                }
+            )
 
 
 def decode_chunks(chunks: "DataFrame") -> "DataFrame":
     """C2: chunk table -> decoded points (read path / roundtrip).
 
     Wide-row Arrow path: each input row is a whole compressed chunk
-    (multi-KB blobs, up to 4096 points), so the session's Arrow batch
-    size is scoped down to ARROW_BATCH_WIDE at call time — the 256k
-    narrow-row default would be multi-GB per input batch (r4 ADVICE;
-    see session.set_arrow_batch for the scoping contract). Each Arrow
-    batch decodes LANE-PARALLEL (decode_chunk_lanes: the batch's ~2048
-    chunks advance in lockstep, one numpy op stream over all active
-    lanes), sub-sliced so no flat output frame exceeds
-    DECODE_FLUSH_POINTS points — bounding worker memory both ways."""
-    from opentsdb_rollup_rust_spark.session import (
-        ARROW_BATCH_WIDE,
-        set_arrow_batch,
-    )
-
-    set_arrow_batch(chunks.sparkSession, ARROW_BATCH_WIDE)
-
-    def decode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ns = pdf["n"].to_numpy(np.int64)
-            secs = pdf["interval"].map(INTERVAL_SECONDS).to_numpy(np.int64)
-            # resolution-proof epoch seconds: Spark's Arrow serializer
-            # coerces to datetime64[ns] today, but a future
-            # pandas-2-native datetime64[us] delivery would make a
-            # hardcoded //1e9 silently produce 1970-era epochs
-            starts = (
-                pdf["chunk_start"]
-                .to_numpy()
-                .astype("datetime64[s]")
-                .astype(np.int64)
-            )
-            # sub-slice the frame so one lane-decode's flat output (and
-            # its |lanes| x max_n working set) stays <= the flush bound
-            cum = np.cumsum(ns)
-            lo = 0
-            while lo < len(pdf):
-                prior = cum[lo - 1] if lo else 0
-                hi = int(
-                    np.searchsorted(cum, prior + DECODE_FLUSH_POINTS) + 1
-                )
-                hi = min(max(hi, lo + 1), len(pdf))
-                sub = slice(lo, hi)
-                nsub = ns[sub]
-                ts_units, words = decode_chunk_lanes(
-                    [bytes(b) for b in pdf["ts_bits"].iloc[sub]],
-                    [bytes(b) for b in pdf["val_bits"].iloc[sub]],
-                    nsub,
-                )
-                epoch = np.repeat(starts[sub], nsub) + ts_units * np.repeat(
-                    secs[sub], nsub
-                )
-                yield pd.DataFrame(
-                    {
-                        "series_id": np.repeat(
-                            pdf["series_id"].to_numpy()[sub], nsub
-                        ),
-                        "interval": np.repeat(
-                            pdf["interval"].to_numpy()[sub], nsub
-                        ),
-                        "agg": np.repeat(pdf["agg"].to_numpy()[sub], nsub),
-                        "window_start": pd.to_datetime(epoch, unit="s"),
-                        "value": words.view(np.int64),
-                    }
-                )
-                lo = hi
-
-    return chunks.mapInPandas(decode, POINT_SCHEMA)
+    (multi-KB blobs, up to 4096 points), so the session's byte cap
+    (session.ENGINE_CONF, 32 MB) sizes the input batches: a few
+    thousand full chunks, or many more small ones. decode_batches
+    then bounds each lane decode by DECODE_FLUSH_POINTS, whatever the
+    batch holds."""
+    return chunks.mapInPandas(decode_batches, POINT_SCHEMA)
 
 
 def pruned_read(

@@ -55,7 +55,7 @@ def _shingles_from_words(w: Column, k: int = 3) -> Column:
     split(trim(text), '\\s+') contain no ASCII whitespace, so the
     joined string's separators are exactly the inserted single spaces
     and \\S+ runs are exactly the words. Interleaved A/B
-    (scripts/shingle_ab_r06.py, 100k docs): staged+explode best-rep
+    (OPTIMIZATION_r06.md §9, 100k docs): staged+explode best-rep
     0.73 s -> 0.44 s, exact-equal output including order.
 
     Fallback path, chosen PER ROW only when the words array contains
@@ -576,7 +576,7 @@ def connected_components(
 
 
 # Crossover default for connected_components_auto, set from
-# scripts/cc_crossover_bench.py (see SURVEY §8 "CC crossover"):
+# scripts/cc_crossover_bench.py (run it to print the timing table):
 # per-round cost of the two algorithms is within ~1.3x of each other
 # on shallow graphs, so propagation only wins while it converges in
 # few rounds; on a 4096-node chain fixpoint needs diameter rounds

@@ -10,8 +10,8 @@ schemas, partition-preserving mapInPandas, batch-shaped pandas code.
 Scale notes: payload bytes dominate row width, so the extractor runs
 immediately after the scan (before any shuffle) and projects payloads
 away; downstream stages carry only the small feature columns. Batch
-size is bounded by spark.sql.execution.arrow.maxRecordsPerBatch —
-for multi-MB payloads set it low (e.g. 64) to cap worker memory.
+size is bounded by the session's Arrow byte cap (session.ENGINE_CONF,
+32 MB), so a batch of multi-MB payloads holds only a few rows.
 """
 
 from __future__ import annotations
@@ -119,19 +119,9 @@ def extract_features(
 
     mapInPandas (not a scalar UDF) so one Python invocation handles a
     whole Arrow batch and the payload column never round-trips back to
-    the JVM — only the narrow feature columns do.
-
-    Wide-row Arrow path (multi-KB..MB binary payloads): the Arrow
-    batch size is scoped down to ARROW_BATCH_WIDE at call time so the
-    per-batch payload bytes stay bounded regardless of the session's
-    narrow-row default (see session.set_arrow_batch).
+    the JVM — only the narrow feature columns do. The session's Arrow
+    byte cap bounds the payload bytes of each batch.
     """
-    from opentsdb_rollup_rust_spark.session import (
-        ARROW_BATCH_WIDE,
-        set_arrow_batch,
-    )
-
-    set_arrow_batch(media.sparkSession, ARROW_BATCH_WIDE)
     dec = decoder or _fake_decoder
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -257,7 +257,7 @@ def repetition_profile(docs: "DataFrame", text_col: str = "text") -> "DataFrame"
     # consecutive starts (with a sentinel n+1 closing the last run).
     # Same O(L) array accesses as the old fold but no per-element
     # struct allocation (best-rep 1.06 s -> 0.67 s on 100k docs,
-    # interleaved scripts/repetition_ab_r06.py; exact-equal output).
+    # interleaved, OPTIMIZATION_r06.md §10; exact-equal output).
     sg = F.col("sg")
     n2 = F.size(sg)
     starts = F.filter(

@@ -13,6 +13,7 @@ Pipeline per tier (BASELINE.json:6,14):
     -> repartition(B, bucket) + sortWithinPartitions(series_id,
        window_start) (O1 — monotone timestamps for the codec and for
        parquet delta encoding)
+       [scan through layout: _tier_rows, shared with backfill_tier]
     -> append rollup tier; the commit records (src_snapshot, buckets)
        in the snapshot summary ATOMICALLY with the data — resume truth
        lives in the data table itself, so a crash anywhere leaves
@@ -44,12 +45,13 @@ import uuid
 from dataclasses import dataclass
 
 import pyarrow as pa
-from pyspark.sql import Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..codec.gorilla import encode_chunks
 from ..config import DEFAULT_TIERS, TierSpec
 from ..functions.hashing import series_hash_bucket
+from ..operators.points import event_time
 from ..operators.rollup import cascade_reagg, fused_tier_rollup
 from ..sources.store import METRICS_SCHEMA, ManifestStore
 
@@ -86,6 +88,70 @@ def committed_buckets(store: ManifestStore, table: str, src_snapshot: int) -> se
     return done
 
 
+def _source_table(spec: TierSpec) -> str:
+    """The table a tier is derived from: sequences for the base tier,
+    the finer rollup tier otherwise (cascade, A2)."""
+    return "sequences" if spec.source is None else f"rollup_{spec.source}"
+
+
+def _tier_rows(
+    store: ManifestStore,
+    tier: str,
+    spec: TierSpec,
+    n_buckets: int,
+    salts: int,
+    snapshot: int | None = None,
+    window: tuple[int, int] | None = None,
+    skip: set[int] | frozenset[int] = frozenset(),
+) -> DataFrame:
+    """The tier rows to write, bucketed and laid out (F2, O1) — the one
+    place that picks a tier's source and its file layout, for
+    run_rollup_job and backfill_tier.
+
+    Source: the fused wide derive+agg of ``sequences`` for the base
+    tier (one row per sequence, 6 stat buffers, instead of one per
+    point; identical to salted_rollup(derive_points(...)) by golden
+    test), cascade re-agg of the finer tier otherwise, read at
+    ``snapshot`` (default: current). ``skip``: already-committed
+    buckets, dropped before the layout.
+
+    ``window = (t0, t1)`` keeps only windows starting in [t0, t1) and
+    reads only the source rows that feed them, [wlo, ev_hi): wlo = the
+    first window start >= t0, ev_hi = the end of the last window
+    starting before t1 (handles unaligned t0/t1). The base tier
+    pre-filters sequences on the deterministic event time (a cheap JVM
+    expression over doc_id, evaluated before the token-array folds of
+    the derive see a row); cascade tiers filter the finer tier on the
+    RAW window_start column so the predicate pushes to parquet footers."""
+    src = store.read(_source_table(spec), snapshot)
+    if window is not None:
+        t0, t1 = window
+        sec = spec.interval_seconds
+        wlo = -(-t0 // sec) * sec
+        ev_hi = -(-t1 // sec) * sec
+        if spec.source is None:
+            ev = F.unix_timestamp(event_time("doc_id"))
+            src = src.where((ev >= F.lit(wlo)) & (ev < F.lit(ev_hi)))
+        else:
+            ws = F.col("window_start")
+            src = src.where((ws >= F.timestamp_seconds(F.lit(wlo)))
+                            & (ws < F.timestamp_seconds(F.lit(ev_hi))))
+    if spec.source is None:
+        rolled = fused_tier_rollup(src, tier, salts=salts)
+    else:
+        rolled = cascade_reagg(src.drop("bucket"), tier)
+    if window is not None:
+        ws = F.unix_timestamp("window_start")
+        rolled = rolled.where((ws >= F.lit(t0)) & (ws < F.lit(t1)))
+    rolled = rolled.withColumn("bucket", series_hash_bucket("series_id", n_buckets))
+    if skip:
+        rolled = rolled.where(~F.col("bucket").isin(sorted(skip)))
+    todo = len(set(range(n_buckets)) - set(skip))
+    return rolled.repartition(todo, "bucket").sortWithinPartitions(
+        "series_id", "window_start"
+    )
+
+
 def run_rollup_job(
     spark: SparkSession,
     store: ManifestStore,
@@ -109,41 +175,24 @@ def run_rollup_job(
     t0 = time.monotonic()
 
     # --- snapshot-pinned source (S6)
-    if spec.source is None:
-        src_snapshot = store.current_snapshot("sequences")
-        if src_snapshot is None:
+    src_table = _source_table(spec)
+    src_snapshot = store.current_snapshot(src_table)
+    if src_snapshot is None:
+        if spec.source is None:
             raise RuntimeError("sequences table is empty")
-        src = store.read("sequences", src_snapshot)
-        # fused wide-form derive+rollup: aggregates one row per sequence
-        # (6 stat buffers) instead of one per point; identical result to
-        # salted_rollup(derive_points(...)) by golden test
-        rolled = fused_tier_rollup(src, tier, salts=salts)
-    else:
-        src_table = f"rollup_{spec.source}"
-        src_snapshot = store.current_snapshot(src_table)
-        if src_snapshot is None:
-            raise RuntimeError(f"{src_table} is empty — run tier {spec.source} first")
-        finer = store.read(src_table, src_snapshot)
-        rolled = cascade_reagg(finer.drop("bucket"), tier)
+        raise RuntimeError(f"{src_table} is empty — run tier {spec.source} first")
 
     # --- resume (J4): drop buckets already committed for this snapshot
     done = committed_buckets(store, rollup_table, src_snapshot)
-    rolled = rolled.withColumn("bucket", series_hash_bucket("series_id", n_buckets))
-    all_buckets = list(range(n_buckets))
-    todo = [b for b in all_buckets if b not in done]
+    todo = [b for b in range(n_buckets) if b not in done]
 
     rows_out = points_in = 0
     rollup_snap = None
     if todo:
-        if done:
-            rolled = rolled.where(~F.col("bucket").isin(sorted(done)))
-        # --- series-major layout (O1)
-        rolled = rolled.repartition(len(todo), "bucket").sortWithinPartitions(
-            "series_id", "window_start"
-        )
         rollup_snap = store.append(
             rollup_table,
-            rolled,
+            _tier_rows(store, tier, spec, n_buckets, salts, snapshot=src_snapshot,
+                       skip=done),
             summary={"src_snapshot": src_snapshot, "buckets": todo,
                      "run_id": run_id},
         )
@@ -270,15 +319,12 @@ def backfill_tier(
     surgically splice them into the tier table — the operational fix
     for late/corrected source data without reprocessing history.
 
-    The recompute mirrors run_rollup_job's plan (fused wide derive+agg
-    from the sequences snapshot for the base tier; cascade re-agg from
-    the finer tier otherwise) but reads ONLY the range: the base tier
-    pre-filters sequences on the deterministic event time (a cheap
-    JVM expression over doc_id, evaluated before the token-array folds
-    of the derive ever see a row), and cascade tiers filter the finer tier
-    on the RAW window_start column so the predicate pushes to parquet
-    footers. The splice is store.replace_range (overwrite-by-filter /
-    footer classification — never a full-table rewrite).
+    The recompute is run_rollup_job's plan (_tier_rows: fused wide
+    derive+agg from the sequences for the base tier; cascade re-agg
+    from the finer tier otherwise) over the current snapshot, reading
+    ONLY the source rows of the range. The splice is
+    store.replace_range (overwrite-by-filter / footer classification —
+    never a full-table rewrite).
 
     If the tier has a Gorilla chunk table, the chunks whose extent
     intersects [t0, t1) are re-encoded from the post-splice rollup and
@@ -287,34 +333,10 @@ def backfill_tier(
 
     Idempotent: re-running produces an identical table (tested in
     tests/test_maintenance.py)."""
-    from ..operators.points import event_time
-
     tiers = tiers or DEFAULT_TIERS
     spec = tiers[tier]
-    sec = spec.interval_seconds
-    # windows w in [t0, t1) need events/finer-windows in [wlo, ev_hi):
-    # wlo = first window start >= t0, ev_hi = end of the last window
-    # starting before t1 (handles unaligned t0/t1)
-    wlo = -(-t0_epoch // sec) * sec
-    ev_hi = -(-t1_epoch // sec) * sec
-    if spec.source is None:
-        src = store.read("sequences")
-        ev = F.unix_timestamp(event_time("doc_id"))
-        src = src.where((ev >= F.lit(wlo)) & (ev < F.lit(ev_hi)))
-        rolled = fused_tier_rollup(src, tier, salts=salts)
-    else:
-        finer = store.read(f"rollup_{spec.source}")
-        finer = finer.where(
-            (F.col("window_start") >= F.timestamp_seconds(F.lit(wlo)))
-            & (F.col("window_start") < F.timestamp_seconds(F.lit(ev_hi)))
-        )
-        rolled = cascade_reagg(finer.drop("bucket"), tier)
-    ws = F.unix_timestamp("window_start")
-    rolled = rolled.where((ws >= F.lit(t0_epoch)) & (ws < F.lit(t1_epoch)))
-    rolled = rolled.withColumn("bucket", series_hash_bucket("series_id", n_buckets))
-    rolled = rolled.repartition(n_buckets, "bucket").sortWithinPartitions(
-        "series_id", "window_start"
-    )
+    rolled = _tier_rows(store, tier, spec, n_buckets, salts,
+                        window=(t0_epoch, t1_epoch))
     res = store.replace_range(
         f"rollup_{tier}", "window_start", t0_epoch, t1_epoch, rolled
     )

@@ -9,7 +9,7 @@ case) and adversarial-diameter chains — and times all three variants:
   twostar   connected_components_twostar (O(log n) rounds)
   auto      connected_components_auto    (probe then contract+twostar)
 
-Prints a markdown table for SURVEY §8 and a policy recommendation.
+Prints a markdown timing table and a policy recommendation.
 Run: python scripts/cc_crossover_bench.py
 """
 

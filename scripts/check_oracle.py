@@ -6,6 +6,9 @@ and exact values (order-insensitive, strictest possible — stricter
 than any value-hash the driver could use).
 
 Usage: python scripts/check_oracle.py [sf_dir] [only_query ...]
+
+The session is get_spark's default: local[$SPARK_GRAFT_CPUS] and a
+driver heap of min(24g, half of physical memory).
 """
 
 from __future__ import annotations
@@ -45,8 +48,7 @@ def main():
     import __spark_entry__ as E
     from opentsdb_rollup_rust_spark.session import get_spark
 
-    spark = get_spark(app_name="oracle-check", master="local[16]",
-                      shuffle_partitions=16)
+    spark = get_spark(app_name="oracle-check")
 
     con = duckdb.connect()
     for t in TABLES:

@@ -242,6 +242,84 @@ def test_lane_throughput_floor():
     assert best >= 0.6, f"lane decode regressed: {best:.3f} Mpts/s"
 
 
+def test_decode_batch_bounds_each_lane_matrix(monkeypatch):
+    """One batch of many tiny chunks plus one full chunk: every lane
+    decode keeps both sum(n) and lanes x max(n) within
+    DECODE_FLUSH_POINTS (cutting on sum(n) alone would put all 1,501
+    chunks in one 1,501 x 4,096 lane matrix), and the decoded points
+    equal the scalar reference."""
+    import pandas as pd
+
+    from opentsdb_rollup_rust_spark.codec import gorilla
+
+    rng = np.random.RandomState(5)
+    ns = rng.randint(1, 4, 1501)
+    ns[700] = 4096
+    rows = []
+    for j, n in enumerate(ns):
+        ts = np.cumsum(rng.randint(1, 3, n)).astype(np.int64)
+        words = rng.randint(0, 2**40, n).astype(np.uint64)
+        tb, vb = encode_chunk_arrays(ts, words)
+        rows.append((f"s{j}", "1m", 60 * 4096 * j, "sum", n, tb, vb))
+    pdf = pd.DataFrame(rows, columns=["series_id", "interval", "chunk_start",
+                                      "agg", "n", "ts_bits", "val_bits"])
+    pdf["chunk_start"] = pd.to_datetime(pdf["chunk_start"], unit="s")
+
+    calls = []
+
+    def lanes(ts_blobs, val_blobs, nsub):
+        calls.append((len(nsub), int(nsub.sum()), int(nsub.max())))
+        return decode_chunk_lanes(ts_blobs, val_blobs, nsub)
+
+    monkeypatch.setattr(gorilla, "decode_chunk_lanes", lanes)
+    out = pd.concat(gorilla.decode_batches([pdf]), ignore_index=True)
+
+    bound = gorilla.DECODE_FLUSH_POINTS
+    assert len(calls) > 1
+    for n_lanes, total, widest in calls:
+        assert total <= bound and n_lanes * widest <= bound, calls
+    want_ts, want_v = [], []
+    for _, r in pdf.iterrows():
+        ts, words = decode_chunk_arrays(r["ts_bits"], r["val_bits"], r["n"])
+        want_ts.append(r["chunk_start"].value // 10**9 + 60 * ts)
+        want_v.append(words.view(np.int64))
+    got_ts = out["window_start"].to_numpy().astype("datetime64[s]").astype(np.int64)
+    assert np.array_equal(got_ts, np.concatenate(want_ts))
+    assert np.array_equal(out["value"].to_numpy(), np.concatenate(want_v))
+    assert list(out["series_id"]) == list(np.repeat(pdf["series_id"], ns))
+
+
+@pytest.mark.parametrize("udf", ["mapInArrow", "mapInPandas"])
+def test_wide_rows_cut_by_the_session_byte_cap(spark, udf):
+    """Under the session defaults, 16 KB rows reach Python in batches
+    of <= 32 MB of payload (2,047 rows): the byte cap, not the 262,144-row record
+    cap, sizes wide-row batches such as Gorilla chunks."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    def arrow_sizes(it):
+        import pyarrow.compute as pc
+
+        for b in it:
+            blob_bytes = pc.sum(pc.binary_length(b.column("blob"))).as_py()
+            yield pa.RecordBatch.from_pylist(
+                [{"rows": b.num_rows, "nbytes": blob_bytes}])
+
+    def pandas_sizes(it):
+        for p in it:
+            yield pd.DataFrame({"rows": [len(p)],
+                                "nbytes": [int(p["blob"].map(len).sum())]})
+
+    wide = spark.range(0, 5000, 1, 1).select(
+        "id", F.expr("cast(repeat('x', 16384) as binary)").alias("blob"))
+    fn = arrow_sizes if udf == "mapInArrow" else pandas_sizes
+    got = getattr(wide, udf)(fn, "rows long, nbytes long").collect()
+    assert sum(r.rows for r in got) == 5000
+    assert all(r.nbytes <= 32 * 1024 * 1024 for r in got), got
+    assert 2000 <= max(r.rows for r in got) <= 2048, got
+
+
 # --------------------------------------------------------- Spark integration
 
 def test_spark_encode_decode_roundtrip(spark, points):

@@ -261,13 +261,10 @@ def test_engine_session_confs_pinned(spark):
     assert "InferFiltersFromGenerate" in get("spark.sql.optimizer.excludedRules")
     assert get("spark.sql.parquet.outputTimestampType") == "TIMESTAMP_MICROS"
     # 262144 since the r4 ABAB (BENCH/BASELINE.md "Arrow batch-size
-    # A/B"): 256k beat 64k in every adjacent pair. Read from the
-    # SparkConf the factory built the session with: wide-row operators
-    # (codec decode, multimodal) scope the live value down at call time
-    # (session.set_arrow_batch), so it reflects whichever Arrow operator
-    # an earlier test defined last
-    factory = spark.sparkContext.getConf().get
-    assert factory("spark.sql.execution.arrow.maxRecordsPerBatch") == "262144"
+    # A/B"): 256k beat 64k in every adjacent pair; the 32 MB byte cap
+    # sizes wide-row batches (Gorilla chunks, media payloads)
+    assert get("spark.sql.execution.arrow.maxRecordsPerBatch") == "262144"
+    assert get("spark.sql.execution.arrow.maxBytesPerBatch") == str(32 * 1024 * 1024)
     assert get("spark.sql.session.timeZone") == "UTC"
 
 
