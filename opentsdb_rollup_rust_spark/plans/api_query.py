@@ -644,8 +644,9 @@ def select_rollup_tier(
 ) -> int | None:
     """Pick which supplied rollup tier serves a downsample of ``sec``
     seconds under a rollupUsage policy — the OpenTSDB rollup-table
-    selection rule, factored out so both endpoints (and tests) share
-    it. ``tier_secs``: interval seconds of each supplied tier (any
+    selection rule, factored out so both endpoints, the stored-tier
+    router (tier_router.route_tier, under ``fallback``) and tests
+    share it. ``tier_secs``: interval seconds of each supplied tier (any
     order). ``spec_reason``: a tier-independent unservability reason
     (non-decomposable aggregator, unaligned range) — when set, no
     tier can serve regardless of interval.

@@ -161,12 +161,8 @@ def run_rollup_job(
     run_id: str | None = None,
     encode: bool = True,
     tiers: dict[str, TierSpec] | None = None,
-    fail_before_chunks: bool = False,
 ) -> JobResult:
-    """Run one tier to completion (idempotent under re-runs).
-
-    ``fail_before_chunks`` simulates a crash between the rollup commit
-    and the chunk commit (resume test)."""
+    """Run one tier to completion (idempotent under re-runs)."""
     tiers = tiers or DEFAULT_TIERS
     spec = tiers[tier]
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -200,7 +196,7 @@ def run_rollup_job(
     # --- chunks: encode from what the data table says is committed but
     # the chunks table hasn't encoded yet (crash-safe second commit)
     bytes_per_point = 0.0
-    if encode and not fail_before_chunks and store.exists(rollup_table):
+    if encode and store.exists(rollup_table):
         chunk_done = committed_buckets(store, chunks_table, src_snapshot)
         chunk_todo = sorted(committed_buckets(store, rollup_table, src_snapshot)
                             - chunk_done)

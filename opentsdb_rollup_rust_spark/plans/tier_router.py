@@ -22,24 +22,21 @@ from ..config import DEFAULT_TIERS, INTERVAL_SECONDS, TierSpec
 from ..operators.gapfill import gap_fill
 from ..operators.rollup import cascade_reagg, derived_avg
 from ..sources.store import ManifestStore
+from .api_query import select_rollup_tier
 
 
 def route_tier(
     resolution_seconds: int, tiers: dict[str, TierSpec] | None = None
 ) -> str:
     """Coarsest stored tier whose interval divides the requested
-    resolution (exact re-aggregation possible)."""
-    tiers = tiers or DEFAULT_TIERS
-    best = None
-    for name in tiers:
-        sec = INTERVAL_SECONDS[name]
-        if resolution_seconds % sec == 0 and (best is None or sec > best[1]):
-            best = (name, sec)
-    if best is None:
-        raise ValueError(
-            f"no stored tier divides resolution {resolution_seconds}s"
-        )
-    return best[0]
+    resolution (exact re-aggregation possible): the /api/query rule,
+    ``select_rollup_tier`` under the ``fallback`` policy, so both read
+    paths route the same way."""
+    names = list(tiers or DEFAULT_TIERS)
+    i = select_rollup_tier(
+        [INTERVAL_SECONDS[n] for n in names], resolution_seconds, "fallback"
+    )
+    return names[i]
 
 
 def rollup_read_pipeline(

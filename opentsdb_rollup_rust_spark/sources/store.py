@@ -13,6 +13,14 @@ and see an immutable file set — exactly the resume semantics the
 job needs (BASELINE.json:6 "resumable from Iceberg-snapshot
 checkpoints").
 
+Every write is one file-level rewrite of a snapshot, as in Iceberg:
+`ManifestStore` has one commit path (`_commit`) under append,
+overwrite and the maintenance ops, and one footer classifier
+(`_classify`) under one range splice (`_splice_range`). A backfill
+(`replace_range`) is a splice that inserts new rows; retention
+(`prune_older_than`) is a splice with an open lower bound and nothing
+to insert.
+
 Cluster note: on a real deployment `ManifestStore` is swapped for an
 Iceberg catalog with zero changes to callers — the surface is
 append / overwrite / read(snapshot_id) / current_snapshot.
@@ -22,9 +30,11 @@ from __future__ import annotations
 
 import fcntl
 import json
+import math
 import os
 import time
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 from pathlib import Path
 
@@ -51,6 +61,11 @@ class ConcurrentCommitError(RuntimeError):
 
 class ManifestStore:
     """Snapshot-pinned parquet tables under a root directory.
+
+    Three shared pieces carry every write: ``_classify`` (one footer
+    rule: kept / dropped unread / straddling), ``_splice_range``
+    (replace_range and prune_older_than) and ``_commit`` (data written
+    outside the lock, the manifest swapped under it).
 
     Concurrency model (mirrors Iceberg's optimistic commits): every
     manifest mutation happens under a per-table writer flock, so two
@@ -117,6 +132,51 @@ class ManifestStore:
     def _new_snap_id(self, manifest: dict) -> int:
         return (manifest["current"] or 0) + 1
 
+    def _commit(
+        self,
+        table: str,
+        df: DataFrame | None,
+        keep: list[str] | None = None,
+        base: int | None = None,
+        summary: dict | None = None,
+    ) -> int:
+        """The one commit path. ``df``'s files are written through
+        _write_data OUTSIDE the lock (the directory name is
+        collision-free, so a streaming micro-batch never waits behind a
+        long batch write); only the manifest swap holds the writer
+        lock. The new snapshot lists ``keep`` plus the written files.
+
+        - ``keep=None`` appends: the files merge onto whatever snapshot
+          is current at swap time, and are recorded as its new_paths.
+        - ``base`` (maintenance ops) must still be current at swap
+          time, else ConcurrentCommitError: the written files become
+          orphans, never corruption.
+        - ``summary`` is recorded atomically with the data (the
+          Iceberg snapshot-summary analogue); None records none."""
+        written = [] if df is None else self._write_data(
+            table, df, self._new_snap_id(self._load_manifest(table))
+        )
+        with self._write_lock(table):
+            m = self._load_manifest(table)
+            if base is not None and m["current"] != base:
+                raise ConcurrentCommitError(
+                    f"{table}: snapshot advanced {base} -> {m['current']} "
+                    "during maintenance; recompute against the new current"
+                )
+            snap: dict = {"id": self._new_snap_id(m)}
+            if keep is None:
+                snap["paths"] = self._snapshot_paths(m, m["current"]) + written
+                snap["new_paths"] = written
+            else:
+                snap["paths"] = keep + written
+            snap["ts"] = time.time()
+            if summary is not None:
+                snap["summary"] = summary
+            m["snapshots"].append(snap)
+            m["current"] = snap["id"]
+            self._commit_manifest(table, m)
+            return snap["id"]
+
     # ------------------------------------------------------------- surface
 
     def current_snapshot(self, table: str) -> int | None:
@@ -131,30 +191,7 @@ class ManifestStore:
         makes resume exactly-once: the marker and the data are one
         manifest swap.
         """
-        # the (slow) data write happens OUTSIDE the lock — the dir name
-        # is collision-free, and append semantics merge onto whatever
-        # the current snapshot is at commit time, so the lock scope is
-        # the manifest swap only (a streaming micro-batch never waits
-        # behind a long batch write)
-        paths = self._write_data(
-            table, df, self._new_snap_id(self._load_manifest(table))
-        )
-        with self._write_lock(table):
-            m = self._load_manifest(table)
-            snap_id = self._new_snap_id(m)
-            prev = self._snapshot_paths(m, m["current"])
-            m["snapshots"].append(
-                {
-                    "id": snap_id,
-                    "paths": prev + paths,
-                    "new_paths": paths,
-                    "ts": time.time(),
-                    "summary": summary or {},
-                }
-            )
-            m["current"] = snap_id
-            self._commit_manifest(table, m)
-            return snap_id
+        return self._commit(table, df, summary=summary or {})
 
     def snapshot_summaries(self, table: str) -> list[dict]:
         """All commit summaries — including those of snapshots whose
@@ -179,16 +216,7 @@ class ManifestStore:
 
     def overwrite(self, table: str, df: DataFrame) -> int:
         """New snapshot replacing the whole table (retention rewrite)."""
-        paths = self._write_data(
-            table, df, self._new_snap_id(self._load_manifest(table))
-        )
-        with self._write_lock(table):
-            m = self._load_manifest(table)
-            snap_id = self._new_snap_id(m)
-            m["snapshots"].append({"id": snap_id, "paths": paths, "ts": time.time()})
-            m["current"] = snap_id
-            self._commit_manifest(table, m)
-            return snap_id
+        return self._commit(table, df, keep=[])
 
     def _snapshot_paths(self, manifest: dict, snap_id: int | None) -> list[str]:
         if snap_id is None:
@@ -233,24 +261,76 @@ class ManifestStore:
                 out.append(p)
         return out
 
-    def _commit_against(self, table: str, base: int | None, build) -> dict:
-        """Optimistic-commit helper for long maintenance ops: under the
-        writer lock, re-load the manifest, verify the table has not
-        advanced past ``base``, apply ``build(manifest)`` (which
-        appends the new snapshot and returns the result dict), and
-        swap. Raises ConcurrentCommitError on conflict — the caller's
-        freshly-written data files become orphans, never corruption
-        (unique snap-dir suffixes)."""
-        with self._write_lock(table):
-            m = self._load_manifest(table)
-            if m["current"] != base:
-                raise ConcurrentCommitError(
-                    f"{table}: snapshot advanced {base} -> {m['current']} "
-                    "during maintenance; recompute against the new current"
-                )
-            out = build(m)
-            self._commit_manifest(table, m)
-            return out
+    @staticmethod
+    def _classify(
+        files: list[str], ts_col: str, t0: float, t1: float
+    ) -> tuple[list[str], list[str], list[str]]:
+        """Sort data files against [t0, t1) by the parquet FOOTER
+        min/max of ``ts_col``, without reading any rows:
+
+        - kept: disjoint from the range, carried over untouched;
+        - dropped: wholly inside it, leave the snapshot unread;
+        - straddling: read back with the range filtered out. A file
+          without usable stats could hold anything, so it straddles.
+
+        The bounds agree with the row filter (epoch_bound_exprs): for
+        an integer bound s, floor(t) < s <=> t < s."""
+        kept: list[str] = []
+        dropped: list[str] = []
+        straddling: list[str] = []
+        for f in files:
+            lo, hi = _footer_min_max(f, ts_col)
+            if lo is None:
+                straddling.append(f)
+            elif hi < t0 or lo >= t1:
+                kept.append(f)
+            elif lo >= t0 and hi < t1:
+                dropped.append(f)
+            else:
+                straddling.append(f)
+        return kept, dropped, straddling
+
+    def _splice_range(
+        self,
+        table: str,
+        ts_col: str,
+        t0: float,
+        t1: int,
+        df_new: DataFrame | None,
+        summary: Callable[[list[str], list[str], list[str]], dict],
+    ) -> tuple[int | None, list[str], list[str], list[str]]:
+        """The one range rewrite: the current snapshot's rows with
+        ``ts_col`` in [t0, t1) are replaced by ``df_new``'s rows
+        (``t0=-inf``: an open lower bound). Kept files carry over,
+        dropped files leave the snapshot unread, and the straddlers'
+        rows outside the range are unioned with ``df_new`` and written
+        as one new snapshot, validated against the base it was computed
+        from. ``df_new=None`` inserts nothing; then a range that
+        neither drops nor straddles a file commits nothing.
+        ``summary(kept, dropped, straddling)`` gives the commit summary.
+        Returns (snapshot, kept, dropped, straddling)."""
+        m = self._load_manifest(table)
+        base = m["current"]
+        files = self.expand_files(self._snapshot_paths(m, base))
+        kept, dropped, straddling = self._classify(files, ts_col, t0, t1)
+        if df_new is None and not dropped and not straddling:
+            return base, kept, dropped, straddling
+        if base is None:
+            raise KeyError(f"table {table} is empty — nothing to replace")
+        out = df_new
+        if straddling:
+            sdf = self.spark.read.parquet(*straddling)
+            ts, mk = epoch_bound_exprs(sdf, ts_col)
+            outside = ts >= mk(t1)
+            if t0 > -math.inf:
+                outside = (ts < mk(t0)) | outside
+            sdf = sdf.where(outside)
+            out = sdf if out is None else sdf.unionByName(out)
+        snap = self._commit(
+            table, out, keep=kept, base=base,
+            summary=summary(kept, dropped, straddling),
+        )
+        return snap, kept, dropped, straddling
 
     def expire_snapshots(
         self,
@@ -389,37 +469,17 @@ class ManifestStore:
             }
         total = sum(os.path.getsize(f) for f in small)
         n_out = max(1, -(-total // target_file_bytes))
-        base = m["current"]
-        snap_id = self._new_snap_id(m)
         packed = self.spark.read.parquet(*small).repartition(n_out)
         if sort_within:
             packed = packed.sortWithinPartitions(*sort_within)
-        written = self._write_data(table, packed, snap_id)
-
-        def build(m2: dict) -> dict:
-            m2["snapshots"].append(
-                {
-                    "id": snap_id,
-                    "paths": keep + written,
-                    "ts": time.time(),
-                    "summary": {
-                        "compaction": {
-                            "files_in": len(small),
-                            "files_out": int(n_out),
-                            "bytes": int(total),
-                        }
-                    },
-                }
-            )
-            m2["current"] = snap_id
-            return {
-                "snapshot": snap_id,
-                "files_in": len(small),
-                "files_out": int(n_out),
-                "bytes": int(total),
-            }
-
-        return self._commit_against(table, base, build)
+        stats = {
+            "files_in": len(small), "files_out": int(n_out), "bytes": int(total)
+        }
+        snap = self._commit(
+            table, packed, keep=keep, base=m["current"],
+            summary={"compaction": stats},
+        )
+        return {"snapshot": snap, **stats}
 
     def replace_range(
         self,
@@ -432,131 +492,56 @@ class ManifestStore:
         """Surgical time-range replacement (the Iceberg
         overwrite-by-filter analogue) — the backfill primitive: rows
         with ``ts_col`` in [t0, t1) are replaced by ``df_new``'s rows.
-        Metadata-first like prune_older_than: data files whose parquet
-        footer [min, max] is DISJOINT from the range carry over without
-        being read; only range-straddling files are scanned and
-        rewritten with the range filtered out; df_new's files are
-        written alongside. One atomic manifest swap."""
-        from pyspark.sql import functions as F
+        Metadata-first (``_classify``): files whose parquet footer
+        [min, max] is DISJOINT from the range carry over without being
+        read (``files_kept``), files wholly inside it leave the
+        snapshot unread (``files_dropped``), and only range-straddling
+        files are scanned and rewritten with the range filtered out
+        (``files_rewritten``); df_new's rows are written alongside. One
+        atomic manifest swap."""
 
-        m = self._load_manifest(table)
-        if m["current"] is None:
-            raise KeyError(f"table {table} is empty — nothing to replace")
-        files = self.expand_files(self._snapshot_paths(m, m["current"]))
-        keep: list[str] = []
-        rewrite: list[str] = []
-        for f in files:
-            lo, hi = _footer_min_max(f, ts_col)
-            if lo is not None and hi is not None and (
-                hi < t0_epoch or lo >= t1_epoch
-            ):
-                keep.append(f)
-            else:
-                rewrite.append(f)
-        base = m["current"]
-        snap_id = self._new_snap_id(m)
-        if rewrite:
-            straddling = self.spark.read.parquet(*rewrite)
-            ts, mk = epoch_bound_exprs(straddling, ts_col)
-            outside = straddling.where(
-                (ts < mk(t0_epoch)) | (ts >= mk(t1_epoch))
-            )
-            df_new = outside.unionByName(df_new)
-        written = self._write_data(table, df_new, snap_id)
+        def summary(kept, dropped, straddling):
+            return {"replace_range": {
+                "ts_col": ts_col, "t0": t0_epoch, "t1": t1_epoch,
+                "files_kept": len(kept), "files_rewritten": len(straddling),
+                "files_dropped": len(dropped),
+            }}
 
-        def build(m2: dict) -> dict:
-            m2["snapshots"].append(
-                {
-                    "id": snap_id,
-                    "paths": keep + written,
-                    "ts": time.time(),
-                    "summary": {
-                        "replace_range": {
-                            "ts_col": ts_col,
-                            "t0": t0_epoch,
-                            "t1": t1_epoch,
-                            "files_kept": len(keep),
-                            "files_rewritten": len(rewrite),
-                        }
-                    },
-                }
-            )
-            m2["current"] = snap_id
-            return {
-                "snapshot": snap_id,
-                "files_kept": len(keep),
-                "files_rewritten": len(rewrite),
-            }
-
-        return self._commit_against(table, base, build)
+        snap, kept, dropped, straddling = self._splice_range(
+            table, ts_col, t0_epoch, t1_epoch, df_new, summary
+        )
+        return {
+            "snapshot": snap,
+            "files_kept": len(kept),
+            "files_rewritten": len(straddling),
+            "files_dropped": len(dropped),
+        }
 
     def prune_older_than(self, table: str, ts_col: str, cutoff_epoch: int) -> dict:
         """Retention as a metadata-first operation (the Iceberg
-        partition-drop analogue): classify every data file by its
-        parquet FOOTER min/max of ``ts_col`` — files entirely older
+        partition-drop analogue): the range splice over
+        [-inf, cutoff) with nothing to insert. Files entirely older
         than the cutoff leave the new snapshot without being read or
         rewritten, files entirely newer carry over untouched, and only
         straddling files are scanned and rewritten with the filter
-        applied. Round 1 recomputed and rewrote the whole table.
+        applied. Nothing to drop or rewrite commits nothing.
 
         Dropped files stay on disk because older snapshots still
         reference them (Iceberg keeps them until expire_snapshots);
         the new current snapshot simply stops listing them."""
-        from pyspark.sql import functions as F
 
-        m = self._load_manifest(table)
-        if m["current"] is None:
-            return {"snapshot": None, "dropped": [], "kept": [], "rewritten": []}
-        files = self.expand_files(self._snapshot_paths(m, m["current"]))
-        kept: list[str] = []
-        dropped: list[str] = []
-        straddle: list[str] = []
-        for f in files:
-            lo, hi = _footer_min_max(f, ts_col)
-            if hi is not None and hi < cutoff_epoch:
-                dropped.append(f)
-            elif lo is not None and lo >= cutoff_epoch:
-                kept.append(f)
-            else:  # straddles the cutoff, or no usable stats
-                straddle.append(f)
-        if not dropped and not straddle:
+        def summary(kept, dropped, straddling):
             return {
-                "snapshot": m["current"],
-                "dropped": [],
-                "kept": kept,
-                "rewritten": [],
-            }
-        base = m["current"]
-        snap_id = self._new_snap_id(m)
-        new_paths = list(kept)
-        if straddle:
-            sdf = self.spark.read.parquet(*straddle)
-            ts, mk = epoch_bound_exprs(sdf, ts_col)
-            filtered = sdf.where(ts >= mk(cutoff_epoch))
-            new_paths += self._write_data(table, filtered, snap_id)
-
-        def build(m2: dict) -> dict:
-            m2["snapshots"].append(
-                {
-                    "id": snap_id,
-                    "paths": new_paths,
-                    "ts": time.time(),
-                    "summary": {
-                        "retention_cutoff": cutoff_epoch,
-                        "files_dropped": len(dropped),
-                        "files_rewritten": len(straddle),
-                    },
-                }
-            )
-            m2["current"] = snap_id
-            return {
-                "snapshot": snap_id,
-                "dropped": dropped,
-                "kept": kept,
-                "rewritten": straddle,
+                "retention_cutoff": cutoff_epoch,
+                "files_dropped": len(dropped),
+                "files_rewritten": len(straddling),
             }
 
-        return self._commit_against(table, base, build)
+        snap, kept, dropped, straddling = self._splice_range(
+            table, ts_col, -math.inf, cutoff_epoch, None, summary
+        )
+        return {"snapshot": snap, "dropped": dropped, "kept": kept,
+                "rewritten": straddling}
 
 
 def epoch_bound_exprs(df: "DataFrame", ts_col: str):

@@ -91,9 +91,20 @@ def test_replace_range_touches_only_straddling_files(spark, store):
         F.timestamp_seconds(F.col("epoch")).alias("window_start"),
         "v",
     )
+    before = store.expand_files(store._snapshot_paths(
+        store._load_manifest("r"), store.current_snapshot("r")))
     stats = store.replace_range("r", "window_start", 3600, 7200, new)
     # hours 0 and 2 live in files disjoint from the range: kept as-is
     assert stats["files_kept"] >= 2
+    # the hour-1 file lies wholly inside [3600, 7200): dropped unread
+    assert stats["files_dropped"] == 1
+    assert stats["files_rewritten"] == 0
+    after = store.expand_files(store._snapshot_paths(
+        store._load_manifest("r"), store.current_snapshot("r")))
+    gone = set(before) - set(after)
+    assert len(gone) == 1
+    # it left the current snapshot but stays on disk for time travel
+    assert all(os.path.exists(f) for f in gone)
     got = {
         (r["series_id"], r["window_start"].timestamp(), r["v"])
         for r in store.read("r").collect()
@@ -287,13 +298,22 @@ def test_concurrent_append_during_maintenance_is_not_lost(spark, store):
     assert store.read("c").count() == 350
 
 
-def test_replace_range_conflict_detected(spark, store):
+@pytest.mark.parametrize(
+    "op", ["compact", "replace_range", "prune_older_than"]
+)
+def test_replace_range_conflict_detected(spark, store, op):
+    """Every maintenance op validates its base snapshot at commit: an
+    append landing between its data write and its commit raises
+    ConcurrentCommitError, and the appended rows survive."""
     from opentsdb_rollup_rust_spark.sources.store import ConcurrentCommitError
 
     df = spark.createDataFrame(
         [(float(e), e) for e in (100, 200, 300)], "e double, v long"
     ).select(F.timestamp_seconds(F.col("e")).alias("window_start"), "v")
-    store.append("rr", df)
+    # two single-file appends: compact has two small files to merge,
+    # and each file straddles both ranges below
+    store.append("rr", df.coalesce(1))
+    store.append("rr", df.withColumn("v", F.col("v") + 100).coalesce(1))
 
     orig_write = store._write_data
     hook = {"fired": False}
@@ -308,14 +328,23 @@ def test_replace_range_conflict_detected(spark, store):
     new = spark.createDataFrame([(200.0, 7)], "e double, v long").select(
         F.timestamp_seconds(F.col("e")).alias("window_start"), "v"
     )
+    run = {
+        "compact": lambda: store.compact(
+            "rr", target_file_bytes=512 * 1024 * 1024),
+        "replace_range": lambda: store.replace_range(
+            "rr", "window_start", 150, 250, new),
+        "prune_older_than": lambda: store.prune_older_than(
+            "rr", "window_start", 250),
+    }[op]
     store._write_data = write_then_sneak
     try:
         with pytest.raises(ConcurrentCommitError):
-            store.replace_range("rr", "window_start", 150, 250, new)
+            run()
     finally:
         store._write_data = orig_write
+    assert hook["fired"]
     # the concurrent append survived intact
-    assert store.read("rr").count() == 6
+    assert store.read("rr").count() == 9
 
 
 def test_resume_markers_survive_expiry(spark, store):

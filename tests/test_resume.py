@@ -49,12 +49,22 @@ def test_full_cascade_matches_direct(spark, store):
         assert direct.exceptAll(stored).count() == 0
 
 
-def test_kill_and_resume_no_duplicates(spark, store):
-    """Crash between rollup commit and chunk commit; then re-run."""
-    r1 = run_rollup_job(
-        spark, store, "1m", n_buckets=4, encode=True, fail_before_chunks=True
-    )
-    assert r1.buckets_done == [0, 1, 2, 3]
+def test_kill_and_resume_no_duplicates(spark, store, monkeypatch):
+    """Crash between rollup commit and chunk commit; then re-run. The
+    crash is real: the store raises on the chunks_1m append."""
+    append = store.append
+
+    def crash_on_chunks(table, *a, **kw):
+        if table == "chunks_1m":
+            raise RuntimeError("crash before the chunk commit")
+        return append(table, *a, **kw)
+
+    monkeypatch.setattr(store, "append", crash_on_chunks)
+    with pytest.raises(RuntimeError, match="crash before the chunk commit"):
+        run_rollup_job(spark, store, "1m", n_buckets=4, encode=True)
+    monkeypatch.undo()
+    snap = store.current_snapshot("sequences")
+    assert committed_buckets(store, "rollup_1m", snap) == {0, 1, 2, 3}
     assert not store.exists("chunks_1m")
 
     r2 = run_rollup_job(spark, store, "1m", n_buckets=4, encode=True)
