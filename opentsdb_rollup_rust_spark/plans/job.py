@@ -152,6 +152,81 @@ def _tier_rows(
     )
 
 
+def _bucket_counts(rollup: DataFrame) -> dict[int, tuple[int, int]]:
+    """bucket -> (rows_out, points_in) of rollup rows: one grouped read
+    of the bucket/count columns."""
+    return {
+        r["bucket"]: (r["rows_out"], int(r["points_in"] or 0))
+        for r in rollup.groupBy("bucket")
+        .agg(F.count("*").alias("rows_out"), F.sum("count").alias("points_in"))
+        .collect()
+    }
+
+
+def _append_lineage(
+    spark: SparkSession,
+    store: ManifestStore,
+    run_id: str,
+    tier: str,
+    src_snapshot: int,
+    per_bucket: dict[int, tuple[int, int]],
+) -> None:
+    """One lineage row per bucket, built through Arrow into a local
+    relation (no Python workers) and written as one file."""
+    buckets = sorted(per_bucket)
+    k = len(buckets)
+    lineage = pa.table({
+        "run_id": [run_id] * k,
+        "tier": [tier] * k,
+        "bucket": buckets,
+        "src_snapshot": [src_snapshot] * k,
+        "rows_in": [per_bucket[b][1] for b in buckets],
+        "rows_out": [per_bucket[b][0] for b in buckets],
+    })
+    ldf = spark.createDataFrame(
+        lineage,
+        "run_id string, tier string, bucket int, src_snapshot long, "
+        "rows_in long, rows_out long",
+    ).withColumn("committed_at", F.current_timestamp())
+    store.append("lineage", ldf.coalesce(1))
+
+
+def _recover_lineage(
+    spark: SparkSession,
+    store: ManifestStore,
+    tier: str,
+    src_snapshot: int,
+) -> None:
+    """Lineage rows for the buckets of ``src_snapshot`` that were
+    committed to the rollup table but have none: a run that died after
+    its rollup commit and before its lineage append. Counts come from
+    the committing snapshot's delta and the run_id from its summary. A
+    snapshot that expiry has already retired is skipped: its files,
+    and so its counts, are gone."""
+    rollup_table = f"rollup_{tier}"
+    have: set[int] = set()
+    if store.exists("lineage"):
+        have = {
+            r["bucket"]
+            for r in store.read("lineage")
+            .where((F.col("tier") == tier) & (F.col("src_snapshot") == src_snapshot))
+            .select("bucket").distinct().collect()
+        }
+    for s in store.snapshot_summaries(rollup_table):
+        missing = set(s.get("buckets", [])) - have
+        if s.get("src_snapshot") != src_snapshot or not missing:
+            continue
+        try:
+            delta = store.read_snapshot_delta(rollup_table, s["id"])
+        except KeyError:
+            continue
+        counts = _bucket_counts(delta.where(F.col("bucket").isin(sorted(missing))))
+        if counts:
+            _append_lineage(spark, store, s.get("run_id", ""), tier,
+                            src_snapshot, counts)
+            have |= set(counts)
+
+
 def run_rollup_job(
     spark: SparkSession,
     store: ManifestStore,
@@ -162,7 +237,14 @@ def run_rollup_job(
     encode: bool = True,
     tiers: dict[str, TierSpec] | None = None,
 ) -> JobResult:
-    """Run one tier to completion (idempotent under re-runs)."""
+    """Run one tier to completion (idempotent under re-runs).
+
+    A run that finds every bucket of its source snapshot already
+    committed writes no rollup rows; it only finishes what a crashed
+    run left: the missing chunks, and the lineage rows of committed
+    buckets that have none (``_recover_lineage``, under the crashed
+    run's run_id). Their metrics rows stay missing, because the crashed
+    run's wall time was never recorded."""
     tiers = tiers or DEFAULT_TIERS
     spec = tiers[tier]
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -225,13 +307,7 @@ def run_rollup_job(
     # --- per-bucket stats from the WRITTEN files (no recompute)
     per_bucket: dict[int, tuple[int, int]] = {}
     if rollup_snap is not None:
-        written = store.read_snapshot_delta(rollup_table, rollup_snap)
-        per_bucket = {
-            r["bucket"]: (r["rows_out"], int(r["points_in"] or 0))
-            for r in written.groupBy("bucket")
-            .agg(F.count("*").alias("rows_out"), F.sum("count").alias("points_in"))
-            .collect()
-        }
+        per_bucket = _bucket_counts(store.read_snapshot_delta(rollup_table, rollup_snap))
         rows_out = sum(v[0] for v in per_bucket.values())
         points_in = sum(v[1] for v in per_bucket.values())
 
@@ -240,23 +316,12 @@ def run_rollup_job(
     # --- lineage + metrics (reporting; resume does not depend on them).
     # Rows go through Arrow into a local relation (no Python workers),
     # one data file per append.
+    if rollup_snap is None:
+        _recover_lineage(spark, store, tier, src_snapshot)
     if per_bucket:
         buckets = sorted(per_bucket)
         k = len(buckets)
-        lineage = pa.table({
-            "run_id": [run_id] * k,
-            "tier": [tier] * k,
-            "bucket": buckets,
-            "src_snapshot": [src_snapshot] * k,
-            "rows_in": [per_bucket[b][1] for b in buckets],
-            "rows_out": [per_bucket[b][0] for b in buckets],
-        })
-        ldf = spark.createDataFrame(
-            lineage,
-            "run_id string, tier string, bucket int, src_snapshot long, "
-            "rows_in long, rows_out long",
-        ).withColumn("committed_at", F.current_timestamp())
-        store.append("lineage", ldf.coalesce(1))
+        _append_lineage(spark, store, run_id, tier, src_snapshot, per_bucket)
         pps = points_in / max(wall_ms / 1000.0, 1e-9)
         metrics = pa.table({
             "run_id": [run_id] * k,
@@ -364,14 +429,15 @@ def apply_retention(
     store's footer-stat pruning: whole files entirely past retention
     are dropped from the snapshot WITHOUT a read or rewrite (the
     Iceberg partition-drop analogue); only cutoff-straddling files are
-    rewritten. Returns rows kept, -1 = no-op."""
+    rewritten. Returns rows kept, -1 = no-op: the manifest store's
+    recorded row count, so no Spark job counts them; IcebergStore's
+    DELETE reports no count, so its table is counted."""
     spec = (tiers or DEFAULT_TIERS)[tier]
     table = f"rollup_{tier}"
     if spec.retention_seconds is None or not store.exists(table):
         return -1
     cutoff = now_epoch - spec.retention_seconds
-    store.prune_older_than(table, "window_start", cutoff)
-    try:
-        return store.read(table).count()
-    except KeyError:  # every file aged out — table is empty
-        return 0
+    res = store.prune_older_than(table, "window_start", cutoff)
+    if "rows" in res:
+        return res["rows"]
+    return store.read(table).count()

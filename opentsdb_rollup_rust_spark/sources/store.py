@@ -15,11 +15,30 @@ checkpoints").
 
 Every write is one file-level rewrite of a snapshot, as in Iceberg:
 `ManifestStore` has one commit path (`_commit`) under append,
-overwrite and the maintenance ops, and one footer classifier
-(`_classify`) under one range splice (`_splice_range`). A backfill
+overwrite and the maintenance ops, and one classifier (`_classify`)
+under one range splice (`_splice_range`). A backfill
 (`replace_range`) is a splice that inserts new rows; retention
 (`prune_older_than`) is a splice with an open lower bound and nothing
 to insert.
+
+The manifest (`<root>/<table>/_manifest.json`) is also the table's
+metadata, as an Iceberg manifest is ([ICEBERG-SPEC]):
+
+- ``schema``: the table schema as the parquet reader would infer it
+  (every field nullable), recorded at the first commit. Every read
+  passes it to ``spark.read.schema``, so no read starts the one-task
+  schema-inference job, and a commit whose frame differs from it in a
+  field name or type raises ValueError before writing a file.
+- ``files``: one entry per data file the store wrote, keyed by path:
+  ``rows``, ``bytes`` and ``bounds`` (the [min, max] epoch seconds of
+  every top-level timestamp column), read once from the new files'
+  parquet footers at commit. ``_classify`` takes its bounds from here,
+  ``compact`` its sizes and ``prune_older_than`` the row count it
+  reports.
+
+A manifest written before these keys existed reads the same: a
+missing schema falls back to inference, and a file without an entry
+(or without bounds for the column asked) to its parquet footer.
 
 Cluster note: on a real deployment `ManifestStore` is swapped for an
 Iceberg catalog with zero changes to callers — the surface is
@@ -39,6 +58,15 @@ from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 LINEAGE_SCHEMA = (
     "run_id string, tier string, bucket int, src_snapshot long, "
@@ -62,10 +90,21 @@ class ConcurrentCommitError(RuntimeError):
 class ManifestStore:
     """Snapshot-pinned parquet tables under a root directory.
 
-    Three shared pieces carry every write: ``_classify`` (one footer
+    Three shared pieces carry every write: ``_classify`` (one bounds
     rule: kept / dropped unread / straddling), ``_splice_range``
     (replace_range and prune_older_than) and ``_commit`` (data written
     outside the lock, the manifest swapped under it).
+
+    Manifest format: ``current`` (the current snapshot id),
+    ``snapshots`` (each with ``id``, ``paths``, ``ts``, and
+    ``new_paths`` for appends and ``summary`` when one was given),
+    ``retired_summaries`` (kept through expiry), ``schema`` (the
+    table's nullable schema, JSON) and ``files`` (path -> ``rows``,
+    ``bytes``, ``bounds``). Reads, ``_classify``, ``compact`` and
+    ``prune_older_than``'s row count use them and start no Spark job
+    for them; a manifest that lacks the schema, or an entry, falls
+    back for that piece only to schema inference or to the file's
+    parquet footer (``_footer_entry``).
 
     Concurrency model (mirrors Iceberg's optimistic commits): every
     manifest mutation happens under a per-table writer flock, so two
@@ -152,10 +191,28 @@ class ManifestStore:
           time, else ConcurrentCommitError: the written files become
           orphans, never corruption.
         - ``summary`` is recorded atomically with the data (the
-          Iceberg snapshot-summary analogue); None records none."""
-        written = [] if df is None else self._write_data(
-            table, df, self._new_snap_id(self._load_manifest(table))
-        )
+          Iceberg snapshot-summary analogue); None records none.
+
+        ``df``'s schema must match the recorded one in field names and
+        types (ValueError before anything is written); the first commit
+        records it. Each written file's entry (rows, bytes, timestamp
+        bounds) is read from its footer before the swap and recorded
+        with it."""
+        m = self._load_manifest(table)
+        written: list[str] = []
+        entries: dict[str, dict] = {}
+        schema = None
+        if df is not None:
+            schema = _nullable(df.schema)
+            _check_schema(table, m.get("schema"), schema)
+            written = self._write_data(table, df, self._new_snap_id(m))
+            ts_cols = [
+                f.name for f in schema.fields
+                if isinstance(f.dataType, (TimestampType, TimestampNTZType))
+            ]
+            entries = {
+                f: _footer_entry(f, ts_cols) for f in self.expand_files(written)
+            }
         with self._write_lock(table):
             m = self._load_manifest(table)
             if base is not None and m["current"] != base:
@@ -163,6 +220,10 @@ class ManifestStore:
                     f"{table}: snapshot advanced {base} -> {m['current']} "
                     "during maintenance; recompute against the new current"
                 )
+            if schema is not None:
+                _check_schema(table, m.get("schema"), schema)
+                m.setdefault("schema", schema.jsonValue())
+            m["files"] = {**m.get("files", {}), **entries}
             snap: dict = {"id": self._new_snap_id(m)}
             if keep is None:
                 snap["paths"] = self._snapshot_paths(m, m["current"]) + written
@@ -211,7 +272,7 @@ class ManifestStore:
         m = self._load_manifest(table)
         for s in m["snapshots"]:
             if s["id"] == snap_id:
-                return self.spark.read.parquet(*s.get("new_paths", s["paths"]))
+                return self._reader(m).parquet(*s.get("new_paths", s["paths"]))
         raise KeyError(f"snapshot {snap_id} not found")
 
     def overwrite(self, table: str, df: DataFrame) -> int:
@@ -238,7 +299,15 @@ class ManifestStore:
             if schema is None:
                 raise KeyError(f"table {table} is empty and no schema given")
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(*paths)
+        return self._reader(m).parquet(*paths)
+
+    def _reader(self, m: dict):
+        """``spark.read`` with the recorded schema, so the read starts
+        no schema-inference job; inference only for a manifest written
+        before schemas were recorded."""
+        if "schema" not in m:
+            return self.spark.read
+        return self.spark.read.schema(StructType.fromJson(m["schema"]))
 
     def exists(self, table: str) -> bool:
         return self._load_manifest(table)["current"] is not None
@@ -262,11 +331,23 @@ class ManifestStore:
         return out
 
     @staticmethod
+    def _entry(m: dict, f: str, ts_col: str | None = None) -> dict:
+        """Data file ``f``'s entry in manifest ``m``: rows, bytes and
+        bounds. A file the manifest has no entry for (or no bounds of
+        ``ts_col`` for: a manifest written before entries were
+        recorded, or a non-timestamp column) falls back to its parquet
+        footer."""
+        e = m.get("files", {}).get(f)
+        if e is None or (ts_col is not None and ts_col not in e["bounds"]):
+            return _footer_entry(f, [] if ts_col is None else [ts_col])
+        return e
+
     def _classify(
-        files: list[str], ts_col: str, t0: float, t1: float
+        self, m: dict, files: list[str], ts_col: str, t0: float, t1: float
     ) -> tuple[list[str], list[str], list[str]]:
-        """Sort data files against [t0, t1) by the parquet FOOTER
-        min/max of ``ts_col``, without reading any rows:
+        """Sort data files against [t0, t1) by the min/max of
+        ``ts_col`` that manifest ``m`` recorded from their parquet
+        footers (``_entry``), without reading any rows:
 
         - kept: disjoint from the range, carried over untouched;
         - dropped: wholly inside it, leave the snapshot unread;
@@ -279,7 +360,7 @@ class ManifestStore:
         dropped: list[str] = []
         straddling: list[str] = []
         for f in files:
-            lo, hi = _footer_min_max(f, ts_col)
+            lo, hi = self._entry(m, f, ts_col)["bounds"][ts_col]
             if lo is None:
                 straddling.append(f)
             elif hi < t0 or lo >= t1:
@@ -312,14 +393,14 @@ class ManifestStore:
         m = self._load_manifest(table)
         base = m["current"]
         files = self.expand_files(self._snapshot_paths(m, base))
-        kept, dropped, straddling = self._classify(files, ts_col, t0, t1)
+        kept, dropped, straddling = self._classify(m, files, ts_col, t0, t1)
         if df_new is None and not dropped and not straddling:
             return base, kept, dropped, straddling
         if base is None:
             raise KeyError(f"table {table} is empty — nothing to replace")
         out = df_new
         if straddling:
-            sdf = self.spark.read.parquet(*straddling)
+            sdf = self._reader(m).parquet(*straddling)
             ts, mk = epoch_bound_exprs(sdf, ts_col)
             outside = ts >= mk(t1)
             if t0 > -math.inf:
@@ -388,6 +469,10 @@ class ManifestStore:
                     m.get("retired_summaries", []) + retired
                 )
                 m["snapshots"] = keep
+                if "files" in m:
+                    m["files"] = {
+                        f: e for f, e in m["files"].items() if f not in doomed
+                    }
                 self._commit_manifest(table, m)
         # Deletions happen OUTSIDE the writer lock, so a concurrent
         # expire (or a crash-retry overlapping a prior half-finished
@@ -455,21 +540,19 @@ class ManifestStore:
         if m["current"] is None:
             return {"snapshot": None, "files_in": 0, "files_out": 0, "bytes": 0}
         files = self.expand_files(self._snapshot_paths(m, m["current"]))
-        small_set = {
-            f for f in files if os.path.getsize(f) < target_file_bytes // 2
-        }
-        small = [f for f in files if f in small_set]
-        keep = [f for f in files if f not in small_set]
+        size = {f: self._entry(m, f)["bytes"] for f in files}
+        small = [f for f in files if size[f] < target_file_bytes // 2]
+        keep = [f for f in files if size[f] >= target_file_bytes // 2]
+        total = sum(size[f] for f in small)
         if len(small) <= 1:
             return {
                 "snapshot": m["current"],
                 "files_in": len(small),
                 "files_out": len(small),
-                "bytes": sum(os.path.getsize(f) for f in small),
+                "bytes": total,
             }
-        total = sum(os.path.getsize(f) for f in small)
         n_out = max(1, -(-total // target_file_bytes))
-        packed = self.spark.read.parquet(*small).repartition(n_out)
+        packed = self._reader(m).parquet(*small).repartition(n_out)
         if sort_within:
             packed = packed.sortWithinPartitions(*sort_within)
         stats = {
@@ -492,7 +575,7 @@ class ManifestStore:
         """Surgical time-range replacement (the Iceberg
         overwrite-by-filter analogue) — the backfill primitive: rows
         with ``ts_col`` in [t0, t1) are replaced by ``df_new``'s rows.
-        Metadata-first (``_classify``): files whose parquet footer
+        Metadata-first (``_classify``): files whose recorded footer
         [min, max] is DISJOINT from the range carry over without being
         read (``files_kept``), files wholly inside it leave the
         snapshot unread (``files_dropped``), and only range-straddling
@@ -528,7 +611,10 @@ class ManifestStore:
 
         Dropped files stay on disk because older snapshots still
         reference them (Iceberg keeps them until expire_snapshots);
-        the new current snapshot simply stops listing them."""
+        the new current snapshot simply stops listing them.
+
+        ``rows`` is the current snapshot's row count after the prune,
+        summed from the manifest's file entries (no Spark job)."""
 
         def summary(kept, dropped, straddling):
             return {
@@ -540,8 +626,11 @@ class ManifestStore:
         snap, kept, dropped, straddling = self._splice_range(
             table, ts_col, -math.inf, cutoff_epoch, None, summary
         )
+        m = self._load_manifest(table)
+        files = self.expand_files(self._snapshot_paths(m, m["current"]))
         return {"snapshot": snap, "dropped": dropped, "kept": kept,
-                "rewritten": straddling}
+                "rewritten": straddling,
+                "rows": sum(self._entry(m, f)["rows"] for f in files)}
 
 
 def epoch_bound_exprs(df: "DataFrame", ts_col: str):
@@ -563,14 +652,65 @@ def epoch_bound_exprs(df: "DataFrame", ts_col: str):
     return F.unix_timestamp(F.col(ts_col)), lambda s: F.lit(s)
 
 
-def _footer_min_max(path: str, col_name: str) -> tuple[float | None, float | None]:
-    """(min, max) of a column across a file's row groups, in epoch
-    seconds, read from parquet footer statistics only. (None, None)
-    when stats are unavailable — callers must treat that as 'could
-    contain anything' and rewrite."""
+def _nullable(schema: StructType) -> StructType:
+    """``schema`` as the parquet reader infers it back: every field,
+    element and map value nullable (Spark's ``asNullable``)."""
+
+    def go(t: DataType) -> DataType:
+        if isinstance(t, StructType):
+            return StructType([
+                StructField(f.name, go(f.dataType), True, f.metadata)
+                for f in t.fields
+            ])
+        if isinstance(t, ArrayType):
+            return ArrayType(go(t.elementType), True)
+        if isinstance(t, MapType):
+            return MapType(go(t.keyType), go(t.valueType), True)
+        return t
+
+    return go(schema)
+
+
+def _check_schema(table: str, recorded: dict | None, schema: StructType) -> None:
+    """ValueError when ``schema`` differs from the recorded table
+    schema in a field name or type (order and nullability ignored):
+    files of two schemas would read back with whichever one the reader
+    took. No recorded schema (a new table, or a manifest written before
+    schemas were recorded) accepts any."""
+    if recorded is None:
+        return
+
+    def shape(s: StructType) -> dict[str, str]:
+        return {f.name: f.dataType.simpleString() for f in s.fields}
+
+    old = shape(StructType.fromJson(recorded))
+    if shape(schema) != old:
+        raise ValueError(
+            f"{table}: frame schema {shape(schema)} does not match the "
+            f"table's recorded schema {old}"
+        )
+
+
+def _footer_entry(path: str, ts_cols: list[str]) -> dict:
+    """A data file's manifest entry from its parquet footer: ``rows``,
+    ``bytes`` and ``bounds`` ([min, max] of each of ``ts_cols``). The
+    one place that opens a footer: at commit for the new files, and as
+    the fallback for a file the manifest has no entry for."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
+    return {
+        "rows": md.num_rows,
+        "bytes": os.path.getsize(path),
+        "bounds": {c: list(_footer_min_max(md, c)) for c in ts_cols},
+    }
+
+
+def _footer_min_max(md, col_name: str) -> tuple[float | None, float | None]:
+    """(min, max) of a column across a file's row groups, in epoch
+    seconds, from the footer statistics in ``md`` (a pyarrow
+    FileMetaData) only. (None, None) when stats are unavailable —
+    callers must treat that as 'could contain anything' and rewrite."""
     names = md.schema.names
     if col_name not in names:
         return None, None

@@ -51,7 +51,9 @@ def test_full_cascade_matches_direct(spark, store):
 
 def test_kill_and_resume_no_duplicates(spark, store, monkeypatch):
     """Crash between rollup commit and chunk commit; then re-run. The
-    crash is real: the store raises on the chunks_1m append."""
+    crash is real: the store raises on the chunks_1m append, so the
+    crashed run's lineage rows were never written either; the re-run
+    writes them under the crashed run's run_id."""
     append = store.append
 
     def crash_on_chunks(table, *a, **kw):
@@ -61,7 +63,8 @@ def test_kill_and_resume_no_duplicates(spark, store, monkeypatch):
 
     monkeypatch.setattr(store, "append", crash_on_chunks)
     with pytest.raises(RuntimeError, match="crash before the chunk commit"):
-        run_rollup_job(spark, store, "1m", n_buckets=4, encode=True)
+        run_rollup_job(spark, store, "1m", n_buckets=4, encode=True,
+                       run_id="crashed-run")
     monkeypatch.undo()
     snap = store.current_snapshot("sequences")
     assert committed_buckets(store, "rollup_1m", snap) == {0, 1, 2, 3}
@@ -71,6 +74,17 @@ def test_kill_and_resume_no_duplicates(spark, store, monkeypatch):
     assert r2.buckets_skipped == [0, 1, 2, 3]  # resume skipped all data work
     assert r2.rows_out == 0
     assert store.exists("chunks_1m")  # ...but the missing chunks were encoded
+    # ...and the lost lineage was written: one row per bucket, under the
+    # run that committed the buckets
+    lineage = [
+        (r.bucket, r.run_id, r.rows_out)
+        for r in store.read("lineage")
+        .where((F.col("tier") == "1m") & (F.col("src_snapshot") == snap))
+        .collect()
+    ]
+    assert sorted(b for b, _, _ in lineage) == [0, 1, 2, 3]
+    assert {run for _, run, _ in lineage} == {"crashed-run"}
+    assert sum(n for _, _, n in lineage) == store.read("rollup_1m").count()
 
     # 0 duplicate windows
     stored = store.read("rollup_1m")
