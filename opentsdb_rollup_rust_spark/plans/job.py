@@ -429,15 +429,12 @@ def apply_retention(
     store's footer-stat pruning: whole files entirely past retention
     are dropped from the snapshot WITHOUT a read or rewrite (the
     Iceberg partition-drop analogue); only cutoff-straddling files are
-    rewritten. Returns rows kept, -1 = no-op: the manifest store's
-    recorded row count, so no Spark job counts them; IcebergStore's
-    DELETE reports no count, so its table is counted."""
+    rewritten. Returns rows kept (the prune result's ``rows``: the
+    manifest store sums its recorded row counts, so no Spark job
+    counts them), -1 = no-op."""
     spec = (tiers or DEFAULT_TIERS)[tier]
     table = f"rollup_{tier}"
     if spec.retention_seconds is None or not store.exists(table):
         return -1
     cutoff = now_epoch - spec.retention_seconds
-    res = store.prune_older_than(table, "window_start", cutoff)
-    if "rows" in res:
-        return res["rows"]
-    return store.read(table).count()
+    return store.prune_older_than(table, "window_start", cutoff)["rows"]

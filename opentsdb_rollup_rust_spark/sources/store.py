@@ -22,23 +22,21 @@ under one range splice (`_splice_range`). A backfill
 to insert.
 
 The manifest (`<root>/<table>/_manifest.json`) is also the table's
-metadata, as an Iceberg manifest is ([ICEBERG-SPEC]):
+metadata, as an Iceberg manifest is ([ICEBERG-SPEC]). A snapshot is
+its list of data files: its ``paths`` name parquet files, never
+directories, and each listed file has an entry in ``files``.
 
 - ``schema``: the table schema as the parquet reader would infer it
   (every field nullable), recorded at the first commit. Every read
   passes it to ``spark.read.schema``, so no read starts the one-task
   schema-inference job, and a commit whose frame differs from it in a
   field name or type raises ValueError before writing a file.
-- ``files``: one entry per data file the store wrote, keyed by path:
-  ``rows``, ``bytes`` and ``bounds`` (the [min, max] epoch seconds of
-  every top-level timestamp column), read once from the new files'
-  parquet footers at commit. ``_classify`` takes its bounds from here,
-  ``compact`` its sizes and ``prune_older_than`` the row count it
-  reports.
-
-A manifest written before these keys existed reads the same: a
-missing schema falls back to inference, and a file without an entry
-(or without bounds for the column asked) to its parquet footer.
+- ``files``: one entry per data file that some snapshot lists, keyed
+  by path: ``rows``, ``bytes`` and ``bounds`` (the [min, max] epoch
+  seconds of every top-level timestamp column), read once from the
+  new files' parquet footers at commit. ``_classify`` takes its
+  bounds from here, ``compact`` its sizes and ``prune_older_than`` the
+  row count it reports. No reader opens a footer or walks a directory.
 
 Cluster note: on a real deployment `ManifestStore` is swapped for an
 Iceberg catalog with zero changes to callers — the surface is
@@ -48,6 +46,7 @@ append / overwrite / read(snapshot_id) / current_snapshot.
 from __future__ import annotations
 
 import fcntl
+import glob
 import json
 import math
 import os
@@ -95,16 +94,16 @@ class ManifestStore:
     (replace_range and prune_older_than) and ``_commit`` (data written
     outside the lock, the manifest swapped under it).
 
-    Manifest format: ``current`` (the current snapshot id),
-    ``snapshots`` (each with ``id``, ``paths``, ``ts``, and
-    ``new_paths`` for appends and ``summary`` when one was given),
+    Manifest format (a new manifest starts with every key):
+    ``current`` (the current snapshot id), ``snapshots`` (each with
+    ``id``, ``paths``: the data files it lists, ``new_paths``: the
+    files its commit wrote, ``ts`` and ``summary``),
     ``retired_summaries`` (kept through expiry), ``schema`` (the
-    table's nullable schema, JSON) and ``files`` (path -> ``rows``,
-    ``bytes``, ``bounds``). Reads, ``_classify``, ``compact`` and
-    ``prune_older_than``'s row count use them and start no Spark job
-    for them; a manifest that lacks the schema, or an entry, falls
-    back for that piece only to schema inference or to the file's
-    parquet footer (``_footer_entry``).
+    table's nullable schema, JSON; None until the first commit) and
+    ``files`` (path -> ``rows``, ``bytes``, ``bounds``, for exactly the
+    files some snapshot lists). Reads, ``_classify``, ``compact``,
+    ``prune_older_than``'s row count and expiry use these and start no
+    Spark job for them.
 
     Concurrency model (mirrors Iceberg's optimistic commits): every
     manifest mutation happens under a per-table writer flock, so two
@@ -145,7 +144,8 @@ class ManifestStore:
     def _load_manifest(self, table: str) -> dict:
         p = self._manifest_path(table)
         if not os.path.exists(p):
-            return {"current": None, "snapshots": []}
+            return {"current": None, "snapshots": [], "retired_summaries": [],
+                    "schema": None, "files": {}}
         with open(p) as f:
             return json.load(f)
 
@@ -158,6 +158,8 @@ class ManifestStore:
         os.replace(tmp, p)
 
     def _write_data(self, table: str, df: DataFrame, snap_id: int) -> list[str]:
+        """Write ``df`` into a new snapshot directory; returns its data
+        files."""
         # unique suffix: two writers computing against the same base
         # (e.g. a stream append racing a compaction) must never write
         # into the same directory — the loser's files become orphans
@@ -166,7 +168,7 @@ class ManifestStore:
             self.root, table, f"snap-{snap_id}-{uuid.uuid4().hex[:8]}"
         )
         df.write.mode("overwrite").parquet(out)
-        return [out]
+        return sorted(glob.glob(os.path.join(out, "*.parquet")))
 
     def _new_snap_id(self, manifest: dict) -> int:
         return (manifest["current"] or 0) + 1
@@ -183,15 +185,16 @@ class ManifestStore:
         _write_data OUTSIDE the lock (the directory name is
         collision-free, so a streaming micro-batch never waits behind a
         long batch write); only the manifest swap holds the writer
-        lock. The new snapshot lists ``keep`` plus the written files.
+        lock. The new snapshot lists ``keep`` plus the written files,
+        and records the written files as its ``new_paths``.
 
         - ``keep=None`` appends: the files merge onto whatever snapshot
-          is current at swap time, and are recorded as its new_paths.
+          is current at swap time.
         - ``base`` (maintenance ops) must still be current at swap
           time, else ConcurrentCommitError: the written files become
           orphans, never corruption.
         - ``summary`` is recorded atomically with the data (the
-          Iceberg snapshot-summary analogue); None records none.
+          Iceberg snapshot-summary analogue); None records {}.
 
         ``df``'s schema must match the recorded one in field names and
         types (ValueError before anything is written); the first commit
@@ -204,15 +207,13 @@ class ManifestStore:
         schema = None
         if df is not None:
             schema = _nullable(df.schema)
-            _check_schema(table, m.get("schema"), schema)
+            _check_schema(table, m["schema"], schema)
             written = self._write_data(table, df, self._new_snap_id(m))
             ts_cols = [
                 f.name for f in schema.fields
                 if isinstance(f.dataType, (TimestampType, TimestampNTZType))
             ]
-            entries = {
-                f: _footer_entry(f, ts_cols) for f in self.expand_files(written)
-            }
+            entries = {f: _footer_entry(f, ts_cols) for f in written}
         with self._write_lock(table):
             m = self._load_manifest(table)
             if base is not None and m["current"] != base:
@@ -221,18 +222,16 @@ class ManifestStore:
                     "during maintenance; recompute against the new current"
                 )
             if schema is not None:
-                _check_schema(table, m.get("schema"), schema)
-                m.setdefault("schema", schema.jsonValue())
-            m["files"] = {**m.get("files", {}), **entries}
-            snap: dict = {"id": self._new_snap_id(m)}
+                _check_schema(table, m["schema"], schema)
+                m["schema"] = m["schema"] or schema.jsonValue()
+            m["files"].update(entries)
             if keep is None:
-                snap["paths"] = self._snapshot_paths(m, m["current"]) + written
-                snap["new_paths"] = written
-            else:
-                snap["paths"] = keep + written
-            snap["ts"] = time.time()
-            if summary is not None:
-                snap["summary"] = summary
+                keep = self._snapshot_paths(m, m["current"])
+            snap = {
+                "id": self._new_snap_id(m), "paths": keep + written,
+                "new_paths": written, "ts": time.time(),
+                "summary": summary or {},
+            }
             m["snapshots"].append(snap)
             m["current"] = snap["id"]
             self._commit_manifest(table, m)
@@ -252,27 +251,26 @@ class ManifestStore:
         makes resume exactly-once: the marker and the data are one
         manifest swap.
         """
-        return self._commit(table, df, summary=summary or {})
+        return self._commit(table, df, summary=summary)
 
     def snapshot_summaries(self, table: str) -> list[dict]:
         """All commit summaries — including those of snapshots whose
         data files expire_snapshots has reclaimed (retired_summaries):
         resume markers must outlive the data-file GC."""
         m = self._load_manifest(table)
-        retired = [
-            {"id": r["id"], **r.get("summary", {})}
-            for r in m.get("retired_summaries", [])
-        ]
-        return retired + [
-            {"id": s["id"], **s.get("summary", {})} for s in m["snapshots"]
+        return [
+            {"id": s["id"], **s["summary"]}
+            for s in m["retired_summaries"] + m["snapshots"]
         ]
 
     def read_snapshot_delta(self, table: str, snap_id: int) -> DataFrame:
-        """Only the files ADDED by ``snap_id`` (incremental read)."""
+        """Only the files WRITTEN by ``snap_id`` (incremental read): an
+        append's new files, or a splice's rewritten and inserted rows,
+        never the files it kept."""
         m = self._load_manifest(table)
         for s in m["snapshots"]:
             if s["id"] == snap_id:
-                return self._reader(m).parquet(*s.get("new_paths", s["paths"]))
+                return self._reader(m).parquet(*s["new_paths"])
         raise KeyError(f"snapshot {snap_id} not found")
 
     def overwrite(self, table: str, df: DataFrame) -> int:
@@ -303,10 +301,7 @@ class ManifestStore:
 
     def _reader(self, m: dict):
         """``spark.read`` with the recorded schema, so the read starts
-        no schema-inference job; inference only for a manifest written
-        before schemas were recorded."""
-        if "schema" not in m:
-            return self.spark.read
+        no schema-inference job."""
         return self.spark.read.schema(StructType.fromJson(m["schema"]))
 
     def exists(self, table: str) -> bool:
@@ -314,45 +309,23 @@ class ManifestStore:
 
     # ----------------------------------------------------------- retention
 
-    def expand_files(self, paths: list[str]) -> list[str]:
-        """Snapshot paths (files or directories) -> concrete parquet
-        data files."""
-        out: list[str] = []
-        for p in paths:
-            if os.path.isdir(p):
-                for root, _dirs, fs in os.walk(p):
-                    out.extend(
-                        os.path.join(root, f)
-                        for f in sorted(fs)
-                        if f.endswith(".parquet")
-                    )
-            else:
-                out.append(p)
-        return out
-
     @staticmethod
-    def _entry(m: dict, f: str, ts_col: str | None = None) -> dict:
-        """Data file ``f``'s entry in manifest ``m``: rows, bytes and
-        bounds. A file the manifest has no entry for (or no bounds of
-        ``ts_col`` for: a manifest written before entries were
-        recorded, or a non-timestamp column) falls back to its parquet
-        footer."""
-        e = m.get("files", {}).get(f)
-        if e is None or (ts_col is not None and ts_col not in e["bounds"]):
-            return _footer_entry(f, [] if ts_col is None else [ts_col])
-        return e
-
     def _classify(
-        self, m: dict, files: list[str], ts_col: str, t0: float, t1: float
+        m: dict, files: list[str], ts_col: str, t0: float, t1: float
     ) -> tuple[list[str], list[str], list[str]]:
         """Sort data files against [t0, t1) by the min/max of
         ``ts_col`` that manifest ``m`` recorded from their parquet
-        footers (``_entry``), without reading any rows:
+        footers, without reading any rows:
 
         - kept: disjoint from the range, carried over untouched;
         - dropped: wholly inside it, leave the snapshot unread;
         - straddling: read back with the range filtered out. A file
-          without usable stats could hold anything, so it straddles.
+          without recorded bounds for ``ts_col`` (no stats, or not a
+          timestamp column) could hold anything, so it straddles.
+
+        A 0-row file (Spark writes one when partition 0 of a write is
+        empty) holds nothing and is in no list: a committing splice
+        leaves it out unread, and alone it never makes one commit.
 
         The bounds agree with the row filter (epoch_bound_exprs): for
         an integer bound s, floor(t) < s <=> t < s."""
@@ -360,7 +333,10 @@ class ManifestStore:
         dropped: list[str] = []
         straddling: list[str] = []
         for f in files:
-            lo, hi = self._entry(m, f, ts_col)["bounds"][ts_col]
+            e = m["files"][f]
+            if e["rows"] == 0:
+                continue
+            lo, hi = e["bounds"].get(ts_col, (None, None))
             if lo is None:
                 straddling.append(f)
             elif hi < t0 or lo >= t1:
@@ -392,7 +368,7 @@ class ManifestStore:
         Returns (snapshot, kept, dropped, straddling)."""
         m = self._load_manifest(table)
         base = m["current"]
-        files = self.expand_files(self._snapshot_paths(m, base))
+        files = self._snapshot_paths(m, base)
         kept, dropped, straddling = self._classify(m, files, ts_col, t0, t1)
         if df_new is None and not dropped and not straddling:
             return base, kept, dropped, straddling
@@ -448,31 +424,19 @@ class ManifestStore:
                 return {"expired": 0, "deleted_files": 0}
             keep = m["snapshots"][-keep_last:]
             expired = m["snapshots"][:-keep_last]
-            protected: set[str] = set()
-            for s in keep:
-                protected.update(self.expand_files(s["paths"]))
-            doomed: set[str] = set()
-            for s in expired:
-                doomed.update(self.expand_files(s["paths"]))
-            doomed -= protected
-            retired = [
-                {"id": s["id"], "summary": s["summary"]}
-                for s in expired
-                if s.get("summary")
-            ]
+            protected = {f for s in keep for f in s["paths"]}
+            doomed = {f for s in expired for f in s["paths"]} - protected
             if expired:
                 # commit the shrunken manifest FIRST (still under the
                 # writer lock): a crash mid-delete leaves unreferenced
                 # files (orphans, collected by the next expiry's age
                 # sweep), never a live snapshot with missing files
-                m["retired_summaries"] = (
-                    m.get("retired_summaries", []) + retired
-                )
+                m["retired_summaries"] += [
+                    {"id": s["id"], "summary": s["summary"]}
+                    for s in expired if s["summary"]
+                ]
                 m["snapshots"] = keep
-                if "files" in m:
-                    m["files"] = {
-                        f: e for f, e in m["files"].items() if f not in doomed
-                    }
+                m["files"] = {f: m["files"][f] for f in sorted(protected)}
                 self._commit_manifest(table, m)
         # Deletions happen OUTSIDE the writer lock, so a concurrent
         # expire (or a crash-retry overlapping a prior half-finished
@@ -481,19 +445,16 @@ class ManifestStore:
         # first, which is success, not failure.
         for f in doomed:
             Path(f).unlink(missing_ok=True)
-        # orphan collection: age-guarded sweep of data files and snap
-        # directories no snapshot references
+        # orphan collection: age-guarded sweep of the snap directories
+        # that hold no file a retained snapshot lists
         cutoff = time.time() - orphan_grace_seconds
         n_orphans = 0
-        retained_dirs = {p for s in keep for p in s["paths"]}
+        live_dirs = {os.path.dirname(f) for f in protected}
         tdir = os.path.join(self.root, table)
         for entry in sorted(os.listdir(tdir)):
             d = os.path.join(tdir, entry)
-            if not os.path.isdir(d) or d in retained_dirs:
+            if not os.path.isdir(d) or d in live_dirs:
                 continue
-            live = set(self.expand_files([d])) & protected
-            if live:
-                continue  # a retained snapshot references into this dir
             try:
                 if os.path.getmtime(d) > cutoff:
                     continue  # possibly an in-flight write — too young
@@ -539,8 +500,8 @@ class ManifestStore:
         m = self._load_manifest(table)
         if m["current"] is None:
             return {"snapshot": None, "files_in": 0, "files_out": 0, "bytes": 0}
-        files = self.expand_files(self._snapshot_paths(m, m["current"]))
-        size = {f: self._entry(m, f)["bytes"] for f in files}
+        files = self._snapshot_paths(m, m["current"])
+        size = {f: m["files"][f]["bytes"] for f in files}
         small = [f for f in files if size[f] < target_file_bytes // 2]
         keep = [f for f in files if size[f] >= target_file_bytes // 2]
         total = sum(size[f] for f in small)
@@ -627,10 +588,10 @@ class ManifestStore:
             table, ts_col, -math.inf, cutoff_epoch, None, summary
         )
         m = self._load_manifest(table)
-        files = self.expand_files(self._snapshot_paths(m, m["current"]))
         return {"snapshot": snap, "dropped": dropped, "kept": kept,
                 "rewritten": straddling,
-                "rows": sum(self._entry(m, f)["rows"] for f in files)}
+                "rows": sum(m["files"][f]["rows"]
+                            for f in self._snapshot_paths(m, m["current"]))}
 
 
 def epoch_bound_exprs(df: "DataFrame", ts_col: str):
@@ -675,8 +636,7 @@ def _check_schema(table: str, recorded: dict | None, schema: StructType) -> None
     """ValueError when ``schema`` differs from the recorded table
     schema in a field name or type (order and nullability ignored):
     files of two schemas would read back with whichever one the reader
-    took. No recorded schema (a new table, or a manifest written before
-    schemas were recorded) accepts any."""
+    took. A new table (no recorded schema) accepts any."""
     if recorded is None:
         return
 
@@ -694,8 +654,7 @@ def _check_schema(table: str, recorded: dict | None, schema: StructType) -> None
 def _footer_entry(path: str, ts_cols: list[str]) -> dict:
     """A data file's manifest entry from its parquet footer: ``rows``,
     ``bytes`` and ``bounds`` ([min, max] of each of ``ts_cols``). The
-    one place that opens a footer: at commit for the new files, and as
-    the fallback for a file the manifest has no entry for."""
+    one place that opens a footer, once per file the commit wrote."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
@@ -932,6 +891,8 @@ class IcebergStore:
             "dropped": [],  # Iceberg handles file classification itself
             "kept": [],
             "rewritten": [],
+            # the DELETE reports no count: the table is counted
+            "rows": self.read(table).count(),
         }
 
     def expire_snapshots(

@@ -5,6 +5,7 @@ checks — these ops must never change what a query sees except where
 the backfill intends to.
 """
 
+import glob
 import os
 
 import pytest
@@ -22,9 +23,9 @@ def store(spark, tmp_path):
     return ManifestStore(spark, str(tmp_path / "store"))
 
 
-def _file_count(store, table):
+def _files(store, table):
     m = store._load_manifest(table)
-    return len(store.expand_files(store._snapshot_paths(m, m["current"])))
+    return store._snapshot_paths(m, m["current"])
 
 
 def test_compact_merges_small_files_preserving_content(spark, store):
@@ -36,13 +37,13 @@ def test_compact_merges_small_files_preserving_content(spark, store):
         )
     before = store.read("t")
     before_rows = before.collect()
-    n_before = _file_count(store, "t")
+    n_before = len(_files(store, "t"))
     assert n_before >= 24
     snap_before = store.current_snapshot("t")
 
     stats = store.compact("t", target_file_bytes=512 * 1024 * 1024)
     assert stats["files_in"] == n_before
-    n_after = _file_count(store, "t")
+    n_after = len(_files(store, "t"))
     assert n_after == stats["files_out"] < n_before
 
     # content identical
@@ -91,16 +92,14 @@ def test_replace_range_touches_only_straddling_files(spark, store):
         F.timestamp_seconds(F.col("epoch")).alias("window_start"),
         "v",
     )
-    before = store.expand_files(store._snapshot_paths(
-        store._load_manifest("r"), store.current_snapshot("r")))
+    before = _files(store, "r")
     stats = store.replace_range("r", "window_start", 3600, 7200, new)
     # hours 0 and 2 live in files disjoint from the range: kept as-is
     assert stats["files_kept"] >= 2
     # the hour-1 file lies wholly inside [3600, 7200): dropped unread
     assert stats["files_dropped"] == 1
     assert stats["files_rewritten"] == 0
-    after = store.expand_files(store._snapshot_paths(
-        store._load_manifest("r"), store.current_snapshot("r")))
+    after = _files(store, "r")
     gone = set(before) - set(after)
     assert len(gone) == 1
     # it left the current snapshot but stays on disk for time travel
@@ -114,6 +113,38 @@ def test_replace_range_touches_only_straddling_files(spark, store):
         for s, e, v in rows
     }
     assert got == expect
+
+
+def test_snapshot_delta_is_what_the_commit_wrote(spark, store):
+    """read_snapshot_delta of a splice returns the rows it wrote (the
+    straddler's rows outside the range and the inserted ones), never a
+    kept file's; a prune that only drops files wrote nothing."""
+
+    def hour(h, v):
+        return spark.createDataFrame(
+            [(f"s{i}", h * 3600 + i * 60, v) for i in range(60)],
+            "series_id string, epoch long, v long",
+        ).select(
+            "series_id",
+            F.timestamp_seconds(F.col("epoch")).alias("window_start"),
+            "v",
+        )
+
+    for h in range(3):
+        store.append("d", hour(h, h).coalesce(1))
+    ws = F.unix_timestamp("window_start")
+    # the hour-1 file straddles [3600, 5400); hours 0 and 2 are kept
+    res = store.replace_range(
+        "d", "window_start", 3600, 5400, hour(1, 9).where(ws < 5400)
+    )
+    assert (res["files_kept"], res["files_rewritten"]) == (2, 1)
+    delta = store.read_snapshot_delta("d", res["snapshot"])
+    assert delta.count() == 60
+    assert_df_equal(delta, store.read("d").where((ws >= 3600) & (ws < 7200)))
+
+    res = store.prune_older_than("d", "window_start", 3600)
+    assert (len(res["dropped"]), res["rewritten"]) == (1, [])
+    assert store.read_snapshot_delta("d", res["snapshot"]).count() == 0
 
 
 def test_backfill_restores_corrupted_tier_exactly(spark, store):
@@ -228,16 +259,12 @@ def test_expire_snapshots_reclaims_disk(spark, store):
     store.compact("g", target_file_bytes=512 * 1024 * 1024)
     rows_before = sorted(map(repr, store.read("g").collect()))
     old_snap = store.current_snapshot("g") - 1
-    n_files_before = len(
-        store.expand_files([str(p) for p in [store.root + "/g"]])
-    )
+    n_files_before = len(glob.glob(os.path.join(store.root, "g", "*", "*.parquet")))
 
     stats = store.expire_snapshots("g", keep_last=1)
     assert stats["expired"] == 4  # 4 appends + compact = 5 snaps, keep 1
     assert stats["deleted_files"] > 0
-    n_files_after = len(
-        store.expand_files([str(p) for p in [store.root + "/g"]])
-    )
+    n_files_after = len(glob.glob(os.path.join(store.root, "g", "*", "*.parquet")))
     assert n_files_after < n_files_before
 
     # the current snapshot is fully intact

@@ -129,7 +129,7 @@ def test_lineage_and_metrics_rows(spark, store):
     for table in ("lineage", "metrics"):
         m = store._load_manifest(table)
         snap = next(s for s in m["snapshots"] if s["id"] == m["current"])
-        assert len(store.expand_files(snap["new_paths"])) == 1, table
+        assert len(snap["new_paths"]) == 1, table
 
 
 def test_job_stats_ride_the_chunk_write(spark, store, monkeypatch):
@@ -197,9 +197,7 @@ def test_retention_prunes_files_without_rewrite(spark, tmp_path):
     s.append("t", mk(1))  # day 1 — fully expired
     s.append("t", mk(2, span=2))  # days 2-3 — straddles the cutoff
     s.append("t", mk(4))  # day 4 — fully retained
-    files_before = s.expand_files(
-        s._snapshot_paths(s._load_manifest("t"), s.current_snapshot("t"))
-    )
+    files_before = s._snapshot_paths(s._load_manifest("t"), s.current_snapshot("t"))
     mtimes = {f: os.path.getmtime(f) for f in files_before}
 
     cutoff = 3 * day

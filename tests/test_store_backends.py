@@ -91,7 +91,8 @@ def test_prune_older_than_semantics(spark, store):
         F.timestamp_seconds(F.col("e")).alias("window_start")
     )
     store.append("r", df)
-    store.prune_older_than("r", "window_start", 250)
+    res = store.prune_older_than("r", "window_start", 250)
+    assert res["rows"] == 2
     kept = [
         r.e
         for r in store.read("r")

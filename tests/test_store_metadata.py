@@ -1,14 +1,12 @@
 """The manifest as table metadata: ManifestStore records each table's
 schema and each data file's rows, bytes and timestamp bounds at
 commit, and reads, classification, compaction and retention use them
-instead of starting Spark jobs or opening footers. Manifests written
-before these keys existed must read, classify and count the same.
+instead of starting Spark jobs or opening footers. A snapshot is its
+list of data files, each with an entry.
 """
 
 from __future__ import annotations
 
-import json
-import math
 import os
 import shutil
 from contextlib import contextmanager
@@ -38,34 +36,29 @@ TABLES = [
 @pytest.fixture(scope="module")
 def cascade_root(spark, tmp_path_factory):
     """A small cascade store (every tier, chunks, lineage, metrics),
-    built once; tests that change it work on a copy. One bucket, so
-    each rollup append is one non-empty file: a write whose partition 0
-    is empty adds a 0-row file without stats, which every prune
-    classifies as straddling and rewrites."""
+    built once; tests that change it work on a copy. Four buckets hash
+    to fewer than four partitions, and a write whose partition 0 is
+    empty adds a 0-row file (no row groups, so no stats): each rollup
+    table holds one."""
     root = str(tmp_path_factory.mktemp("cascade") / "store")
     store = ManifestStore(spark, root)
     store.append("sequences", synth_sequences(spark, 500))
-    run_cascade(spark, store, n_buckets=1)
+    run_cascade(spark, store, n_buckets=4)
     return root
 
 
-def _copy_store(spark, src: str, dst: str, strip: bool = False) -> ManifestStore:
+def _copy_store(spark, src: str, dst: str) -> ManifestStore:
     """A copy of the store at ``src`` whose manifests point at its own
-    files; ``strip`` removes the recorded schema and file entries, as in
-    a manifest written before they existed."""
+    files."""
     shutil.copytree(src, dst)
     for mp in Path(dst).glob("*/_manifest.json"):
-        m = json.loads(mp.read_text().replace(src, dst))
-        if strip:
-            m.pop("schema", None)
-            m.pop("files", None)
-        mp.write_text(json.dumps(m))
+        mp.write_text(mp.read_text().replace(src, dst))
     return ManifestStore(spark, dst)
 
 
 def _current_files(store: ManifestStore, table: str) -> list[str]:
     m = store._load_manifest(table)
-    return store.expand_files(store._snapshot_paths(m, m["current"]))
+    return store._snapshot_paths(m, m["current"])
 
 
 def _window_bounds(store: ManifestStore, table: str = "rollup_1m") -> tuple[int, int]:
@@ -96,8 +89,7 @@ def test_store_reads_start_no_spark_job(spark, cascade_root, tmp_path):
     # every table stays under Spark's 32-path parallel-listing threshold,
     # past which the file listing itself runs as a job
     for t in TABLES:
-        assert len(store._snapshot_paths(store._load_manifest(t),
-                                         store.current_snapshot(t))) < 32, t
+        assert len(_current_files(store, t)) < 32, t
     with _job_group(spark, "store-reads") as jobs:
         for t in TABLES:
             store.read(t)
@@ -166,51 +158,77 @@ def test_read_schema_equals_parquet_inference(spark, cascade_root, tmp_path):
     assert dict(store.read("api_pts").dtypes)["tags"] == "map<string,string>"
 
 
-def test_pre_change_manifests_read_classify_and_count_the_same(
+def test_zero_row_file_is_never_read_kept_or_rewritten(
     spark, cascade_root, tmp_path
 ):
-    """A store built through backfill, retention and compaction, copied
-    twice: once as written, once with every manifest stripped of its
-    schema and file entries. The stripped copy falls back to schema
-    inference and the footers and must agree on everything."""
-    built = _copy_store(spark, cascade_root, str(tmp_path / "built"))
-    lo, hi = _window_bounds(built)
-    backfill_tier(spark, built, "1m", lo + 5 * DAY, lo + 8 * DAY, n_buckets=1)
-    apply_retention(spark, built, "1m", now_epoch=hi + 2 * DAY)
-    built.compact("rollup_1m", sort_within=("series_id", "window_start"))
+    """A 0-row file holds nothing: a splice leaves it out of the new
+    snapshot unread and counts it nowhere, and a prune that would
+    otherwise change nothing commits nothing."""
+    store = _copy_store(spark, cascade_root, str(tmp_path / "store"))
+    t = "rollup_1m"
+    # the cascade only appended to the table: every entry is current
+    entries = store._load_manifest(t)["files"]
+    empty = sorted(f for f, e in entries.items() if e["rows"] == 0)
+    full = sorted(f for f, e in entries.items() if e["rows"] > 0)
+    assert empty, "the 4-bucket write left no 0-row file"
+    lo, _hi = _window_bounds(store, t)
+    snap = store.current_snapshot(t)
 
-    new = _copy_store(spark, built.root, str(tmp_path / "new"))
-    old = _copy_store(spark, built.root, str(tmp_path / "old"), strip=True)
-    assert "schema" not in old._load_manifest("rollup_1m")
-    assert "files" in new._load_manifest("rollup_1m")
+    with _job_group(spark, "zero-row-prune") as jobs:
+        res = store.prune_older_than(t, "window_start", lo)
+    assert jobs == []
+    assert res["snapshot"] == snap == store.current_snapshot(t)
+    assert res["dropped"] == res["rewritten"] == []
+    assert sorted(res["kept"]) == full
 
-    for t in TABLES:
-        a, b = new.read(t), old.read(t)
-        assert a.schema == b.schema, t
-        assert_df_equal(a, b)
+    before = store.read(t)
+    ws = F.unix_timestamp("window_start")
+    t0, t1 = lo + 5 * DAY, lo + 8 * DAY
+    res = store.replace_range(
+        t, "window_start", t0, t1, before.where((ws >= t0) & (ws < t1))
+    )
+    counted = [res[k] for k in ("files_kept", "files_dropped", "files_rewritten")]
+    assert sum(counted) == len(full) and counted[2] > 0
+    assert not set(empty) & set(_current_files(store, t))
+    assert_df_equal(store.read(t), before)
 
-    def rel(store, files):
-        return sorted(os.path.relpath(f, store.root) for f in files)
 
-    ranges = [
-        (-math.inf, hi - 3 * DAY),
-        (lo, lo + DAY),
-        (lo + 6 * DAY, lo + 9 * DAY),
-        (hi - DAY, hi + 1),
-        (hi + DAY, hi + 2 * DAY),
-    ]
-    for t, col in (("rollup_1m", "window_start"), ("rollup_1h", "window_start"),
-                   ("chunks_1m", "chunk_start"), ("lineage", "committed_at")):
-        for t0, t1 in ranges:
-            got = [
-                [rel(s, part) for part in s._classify(
-                    s._load_manifest(t), _current_files(s, t), col, t0, t1)]
-                for s in (new, old)
-            ]
-            assert got[0] == got[1], (t, t0, t1)
+def _assert_one_manifest_format(store: ManifestStore) -> None:
+    """Every snapshot of every table lists parquet data files with
+    entries, and the entries are exactly the files some retained
+    snapshot lists."""
+    for t in sorted(os.listdir(store.root)):
+        m = store._load_manifest(t)
+        listed: set[str] = set()
+        for s in m["snapshots"]:
+            for f in s["paths"]:
+                assert f.endswith(".parquet") and os.path.isfile(f), (t, f)
+            assert set(s["new_paths"]) <= set(s["paths"]), (t, s["id"])
+            listed.update(s["paths"])
+        assert set(m["files"]) == listed, t
 
-    # 1m: a straddling prune; 1h: a no-op; 1d keeps everything (-1)
+
+def test_every_snapshot_lists_data_files_with_entries(spark, cascade_root, tmp_path):
+    store = _copy_store(spark, cascade_root, str(tmp_path / "store"))
+    _assert_one_manifest_format(store)
+    lo, hi = _window_bounds(store)
+    backfill_tier(spark, store, "1m", lo + 5 * DAY, lo + 8 * DAY, n_buckets=4)
+    _assert_one_manifest_format(store)
+    for tier in ("1m", "1h"):
+        apply_retention(spark, store, tier, now_epoch=hi + 2 * DAY)
+    _assert_one_manifest_format(store)
+    rows = {t: store.read(t).count() for t in TABLES}
     for tier in ("1m", "1h", "1d"):
-        kept = apply_retention(spark, new, tier, now_epoch=hi + 4 * DAY)
-        assert apply_retention(spark, old, tier, now_epoch=hi + 4 * DAY) == kept
-        assert kept == (-1 if tier == "1d" else new.read(f"rollup_{tier}").count())
+        store.compact(f"rollup_{tier}", sort_within=("series_id", "window_start"))
+    _assert_one_manifest_format(store)
+    for t in TABLES:
+        store.expire_snapshots(t, keep_last=2, orphan_grace_seconds=0)
+    _assert_one_manifest_format(store)
+    assert {t: store.read(t).count() for t in TABLES} == rows
+    # the sweep left exactly the snapshot directories that hold a
+    # listed file
+    for t in TABLES:
+        m = store._load_manifest(t)
+        tdir = os.path.join(store.root, t)
+        on_disk = {e.path for e in os.scandir(tdir) if e.is_dir()}
+        assert on_disk == {os.path.dirname(f) for f in m["files"]}, t
