@@ -21,7 +21,10 @@ row-count + schema + value-hash comparison is bit-exact):
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -57,6 +60,8 @@ from opentsdb_rollup_rust_spark.pipeline.sampling import (
     split_assign,
 )
 from opentsdb_rollup_rust_spark.sources.synth import MAX_LEN, VOCAB
+
+_HERE = os.path.dirname(os.path.abspath(__file__))
 
 
 # ---------------------------------------------------------------- helpers
@@ -1654,7 +1659,7 @@ def _q_api_query_tier(spark, sf_dir):
         downsample=Downsample("7200s", "sum", fill="zero"),
         rate=RateOptions(),
     )
-    return api_query(pts, spec, tier=tier, tier_interval="1h")
+    return api_query(pts, spec, tiers=[(tier, "1h")])
 
 
 def _q_api_query_exp(spark, sf_dir):
@@ -1873,7 +1878,7 @@ def _q_api_query_fallback(spark, sf_dir):
         downsample=Downsample("5400s", "sum", fill="none"),
         rollup_usage="fallback_raw",
     )
-    return api_query(pts, spec, tier=tier, tier_interval="1h")
+    return api_query(pts, spec, tiers=[(tier, "1h")])
 
 
 def _q_api_query_linear(spark, sf_dir):
@@ -1966,7 +1971,7 @@ def _q_api_query_hist_tier(spark, sf_dir):
         ),
         downsample=Downsample("7200s", "sum", fill="none"),
     )
-    return api_query_hist(pts, spec, (950,), tier=tier, tier_interval="1h")
+    return api_query_hist(pts, spec, (950,), tiers=[(tier, "1h")])
 
 
 def _q_api_query_json(spark, sf_dir):
@@ -1978,8 +1983,6 @@ def _q_api_query_json(spark, sf_dir):
     the day-shifted, zero-filled, counter-wrapped composition direct
     from raw, so a mis-parsed field (shift dropped, counterMax
     ignored, fill mis-read) cannot hash-match."""
-    import json
-
     from opentsdb_rollup_rust_spark.plans.api_query import (
         api_query,
         parse_query_json,
@@ -3009,6 +3012,20 @@ def _q_udaf_hist(spark, sf_dir):
     )
 
 
+def order_by_last_check(qs: dict, root: str = _HERE) -> dict:
+    """``qs`` reordered by the last driver round that checked each key
+    (a key of ``root``/CORRECTNESS_r<N>.json), oldest first; a key no
+    round checked comes before all. Declared order stands within a
+    round, and with no such file at all."""
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            for k in json.load(f):
+                last[k] = max(last.get(k, 0), rnd)
+    return dict(sorted(qs.items(), key=lambda kv: last.get(kv[0], 0)))
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from opentsdb_rollup_rust_spark.pipeline.queries import PIPELINE_QUERIES
 
@@ -3119,127 +3136,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
     qs.update(PIPELINE_QUERIES)
 
-    # The driver gate samples 50 of the registered queries preserving
-    # dict order. Round-5 front, per the r4 VERDICT rotation policy:
-    # first the keys NEW or CHANGED this round (they must land in
-    # CORRECTNESS_r05), then every other key ordered OLDEST driver
-    # evidence first (r1 keys, then r2, then r3 — the r4-green keys
-    # rotate out; all keys are additionally re-verified locally each
-    # round via scripts/check_oracle.py). The r3-evidence keys that
-    # no longer fit the 50 slots are front-of-line for r06:
-    # rollup_fused, tok_topk, win_delta, win_moving, win_rank,
-    # win_rate, win_topk, and (displaced by this round's nineteen new
-    # api_query keys) derive_points, filter_range, filter_retention,
-    # filter_series, gapfill_ffill, gapfill_zero, join_anti,
-    # join_broadcast, join_equi, join_range, join_semi, plus — after
-    # the session-5 trio — agg_first_last, agg_interp, agg_percentile,
-    # — after the session-6 trio — udaf_hist, agg_dev, agg_distinct,
-    # and — after the session-7 additions — set_union, sort_global,
-    # sort_limit, text_tokens. Session 9 (query_tag_filters_not)
-    # shifts the boundary one more. Note codec_stats (oracle-less,
-    # rows-only) did NOT consume one of r04's 50 oracle slots, so
-    # counting oracled keys the 50-slot sample ends at set_except;
-    # set_intersect onward is r06 front-of-line.
-    front = [
-        # new this round (the composed /api/query endpoint + the
-        # session-2 additions: expression endpoint, multi-sub-query
-        # request envelope, percentile downsampler; session-3:
-        # timeShift, gexp selectors, rollupUsage fallback; session-5:
-        # tsuid sub-queries + aggregator none, 0all whole-range
-        # downsample, gexp movingAverage/sumSeries; session-6: dev /
-        # p<permille> / mimmin/mimmax cross-series aggregators, gexp
-        # diffSeries/divideSeries; session-7: first/last downsamplers,
-        # gexp multiplySeries, the delete flag over the store, the
-        # ep estimated-percentile aggregator family)
-        # session-9: the last two documented TagVFilter types
-        # (not_iliteral_or, not_key) over an optional-key tag stream,
-        # and the GET query-string request form (parse_query_string)
-        "api_query_qs",
-        "query_tag_filters_not",
-        "api_query_first_last",
-        "api_query_gexp_multiply",
-        "api_query_delete_read",
-        "api_query_ep",
-        "api_query_dev",
-        "api_query_p50",
-        "api_query_gexp_combine",
-        "api_query_tsuid_none",
-        "api_query_0all",
-        "api_query_gexp_moving",
-        "api_query_shift",
-        "api_query_gexp",
-        "api_query_fallback",
-        "api_query_linear",
-        "api_query_hist",
-        "api_query_hist_tier",
-        "api_query_json",
-        "api_query_tier_multi",
-        "pipeline_build",
-        "api_query_ds_rate",
-        "api_query_group_avg",
-        "api_query_tier",
-        "api_query_exp",
-        "api_query_multi",
-        "api_query_p95",
-        # changed this round: minhash hot-bucket cap (engine+oracle,
-        # also shared by the components oracle), ann_recall panel cap
-        # + literal-TRUE floor oracle, asof struct-wrap, lane-parallel
-        # decode (codec_roundtrip + codec_check both execute it)
-        "dedup_minhash",
-        "ann_recall",
-        "dedup_components",
-        "join_asof",
-        "codec_roundtrip",
-        "codec_check",
-        # driver evidence from r1
-        "dedup_exact",
-        "dedup_jaccard",
-        "dedup_simhash",
-        "text_fingerprint",
-        "text_langid",
-        "text_quality",
-        # driver evidence from r2
-        "codec_pruned_read",
-        "codec_stats",
-        "fn_array",
-        "fn_bucket",
-        "fn_hash",
-        "fn_invariant",
-        "fn_json",
-        "fn_map",
-        "fn_math",
-        "fn_string",
-        "scan_project",
-        "set_except",
-        "set_intersect",
-        "set_union",
-        "sort_global",
-        "sort_limit",
-        "text_tokens",
-        "udaf_hist",
-        # driver evidence from r3
-        "agg_dev",
-        "agg_distinct",
-        "agg_first_last",
-        "agg_interp",
-        "agg_percentile",
-        "agg_rollup_sets",
-        "agg_salted",
-        "derive_points",
-        "filter_range",
-        "filter_retention",
-        "filter_series",
-        "gapfill_ffill",
-        "gapfill_zero",
-        "join_anti",
-        "join_broadcast",
-        "join_equi",
-        "join_range",
-        "join_semi",
-    ]
-    qs = {k: qs[k] for k in front} | {
-        k: v for k, v in qs.items() if k not in front
-    }
+    # The driver gate samples the first 50 keys in dict order: put the
+    # keys whose driver evidence is oldest first (see order_by_last_check).
+    qs = order_by_last_check(qs)
 
     def _pinned(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:

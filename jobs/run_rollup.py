@@ -36,6 +36,8 @@ from opentsdb_rollup_rust_spark.sources.store import (  # noqa: E402
 )
 from opentsdb_rollup_rust_spark.sources.synth import synth_sequences  # noqa: E402
 
+REPORT_TABLES = ("lineage", "metrics")
+
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
@@ -56,10 +58,10 @@ def main(argv=None) -> int:
                          "instead of running the job")
     ap.add_argument("--compact", action="store_true",
                     help="run small-file compaction on the tier table(s) "
-                         "after the job / instead of it with --tier")
+                         "and the report tables after the job")
     ap.add_argument("--expire-keep", type=int, default=None,
                     help="expire all but the newest N snapshots per tier "
-                         "table (GC superseded data files)")
+                         "and report table (GC superseded data files)")
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
@@ -123,27 +125,32 @@ def main(argv=None) -> int:
             kept = apply_retention(spark, store, tier, args.retention_now)
             print(json.dumps({"retention_tier": tier, "rows_kept": kept}))
 
+    # The report tables gain a file per tier every run. `sequences`
+    # stays out: a compaction advances its snapshot id, resume keys on
+    # that id (committed_buckets), so the next run would append every
+    # tier again.
     if args.compact:
-        for tier in tiers:
-            table = f"rollup_{tier}"
+        for table in [f"rollup_{t}" for t in tiers] + list(REPORT_TABLES):
             if store.exists(table):
+                rollup = table.startswith("rollup_")
+                sort = ("series_id", "window_start") if rollup else None
                 stats = with_retry(
                     f"compact:{table}",
-                    lambda table=table: store.compact(
-                        table, sort_within=("series_id", "window_start")
+                    lambda table=table, sort=sort: store.compact(
+                        table, sort_within=sort
                     ),
                 )
                 if stats is not None:
                     print(json.dumps({"compact_table": table, **stats}))
 
     if args.expire_keep is not None:
-        for tier in tiers:
-            for table in (f"rollup_{tier}", f"chunks_{tier}"):
-                if store.exists(table):
-                    stats = store.expire_snapshots(
-                        table, keep_last=args.expire_keep
-                    )
-                    print(json.dumps({"expire_table": table, **stats}))
+        tier_tables = [f"{k}_{t}" for t in tiers for k in ("rollup", "chunks")]
+        for table in tier_tables + list(REPORT_TABLES):
+            if store.exists(table):
+                stats = store.expire_snapshots(
+                    table, keep_last=args.expire_keep
+                )
+                print(json.dumps({"expire_table": table, **stats}))
 
     spark.stop()
     return 1 if failures else 0

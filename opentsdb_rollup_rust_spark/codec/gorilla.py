@@ -64,7 +64,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from ..config import INTERVAL_SECONDS
+from ..config import INTERVAL_SECONDS, STORED_AGGS
 
 U64 = np.uint64
 _ONE = U64(1)
@@ -776,12 +776,12 @@ def encode_chunks(
     sec = INTERVAL_SECONDS[interval]
     chunk_sec = sec * chunk_points
     stack_args = []
-    for agg in ("sum", "count", "min", "max"):
+    for agg in STORED_AGGS:
         stack_args += [F.lit(agg), F.col(agg)]
     long_df = rollup.select(
         "series_id",
         F.unix_timestamp("window_start").cast("long").alias("epoch"),
-        F.stack(F.lit(4), *stack_args).alias("agg", "value"),
+        F.stack(F.lit(len(STORED_AGGS)), *stack_args).alias("agg", "value"),
     ).withColumn(
         "chunk_start", (F.floor(F.col("epoch") / chunk_sec) * chunk_sec).cast("long")
     )

@@ -31,7 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..config import resolve_interval_seconds
+from ..config import STORED_AGGS, resolve_interval_seconds
+from .rollup import ROLLUP_COLS
 
 FILL_POLICIES = ("none", "zero", "null", "nan", "ffill", "interp")
 
@@ -68,9 +69,7 @@ def gap_fill(rollup: DataFrame, interval: str, policy: str = "zero") -> DataFram
     ).withColumn("interval", F.lit(interval))
 
     if policy == "null":
-        return joined.select(
-            "series_id", "window_start", "interval", "sum", "count", "min", "max"
-        )
+        return joined.select(*ROLLUP_COLS)
     if policy == "nan":
         # OpenTSDB's NaN fill is query-output semantics: missing values
         # surface as NaN doubles (count stays an exact 0 long). Never
@@ -104,11 +103,9 @@ def gap_fill(rollup: DataFrame, interval: str, policy: str = "zero") -> DataFram
             .rowsBetween(Window.unboundedPreceding, 0)
         )
         out = joined
-        for c in ("sum", "count", "min", "max"):
+        for c in STORED_AGGS:
             out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))
-        return out.select(
-            "series_id", "window_start", "interval", "sum", "count", "min", "max"
-        )
+        return out.select(*ROLLUP_COLS)
     # interp — integer lerp between the bracketing observed windows.
     # The spine spans each series' OWN [min, max] observed range, so
     # every synthetic window has both a previous and a next

@@ -23,62 +23,63 @@ property of this plan. No UDFs anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..config import SERIES_SEP, TOKEN_STATS, resolve_interval_seconds
+from ..config import SERIES_SEP, STORED_AGGS, TOKEN_STATS, resolve_interval_seconds
 from ..functions.timeutil import time_bucket
 
-ROLLUP_COLS = ("series_id", "window_start", "interval", "sum", "count", "min", "max")
+ROLLUP_COLS = ("series_id", "window_start", "interval", *STORED_AGGS)
+
+#: The stored-aggregate rule, the one place it is written: for each
+#: stored column, (aggregate over raw values, merge over stored rows).
+#: sum->sum, count->sum, min->min, max->max are all decomposable, so a
+#: coarser window is an exact merge of finer ones (A2, and the
+#: sub-aggregate sharing of Factor Windows). Every rollup builder,
+#: batch or streaming, takes its aggregates from here.
+STORED_RULE = dict(
+    zip(STORED_AGGS, ((F.sum, F.sum), (F.count, F.sum), (F.min, F.min), (F.max, F.max)))
+)
+
+
+def stored_aggs(prefix: str = "") -> list[Column]:
+    """The stored columns aggregated from the raw ``value`` column, each
+    aliased ``prefix`` + its name."""
+    return [STORED_RULE[a][0]("value").alias(prefix + a) for a in STORED_AGGS]
+
+
+def merged_aggs() -> list[Column]:
+    """The stored columns merged from rows that already store them."""
+    return [STORED_RULE[a][1](a).alias(a) for a in STORED_AGGS]
+
+
+def _tier_select(agg: DataFrame, key: str, label: str) -> DataFrame:
+    return agg.select("series_id", key, F.lit(label).alias("interval"), *STORED_AGGS)
+
+
+def reaggregate(finer: DataFrame, window_key: Column | str, label: str) -> DataFrame:
+    """Tier rows at ``label`` from finer stored rows, merged per
+    (series_id, ``window_key``); the key column is, or is aliased,
+    ``window_start``. The cascade (A2), the calendar tiers (A17) and
+    the salted rollup's second phase (A5) are all this one merge."""
+    merged = finer.groupBy("series_id", window_key).agg(*merged_aggs())
+    return _tier_select(merged, "window_start", label)
 
 
 def tumbling_rollup(points: DataFrame, interval: str) -> DataFrame:
     """A1: points(series_id, ts, value) -> rollup rows at ``interval``."""
     sec = resolve_interval_seconds(interval)
-    return (
-        points.groupBy(
-            "series_id", time_bucket("ts", sec).alias("window_start")
-        )
-        .agg(
-            F.sum("value").alias("sum"),
-            F.count("value").alias("count"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-        )
-        .select(
-            "series_id",
-            "window_start",
-            F.lit(interval).alias("interval"),
-            "sum",
-            "count",
-            "min",
-            "max",
-        )
-    )
+    agg = points.groupBy(
+        "series_id", time_bucket("ts", sec).alias("window_start")
+    ).agg(*stored_aggs())
+    return _tier_select(agg, "window_start", interval)
 
 
 def cascade_reagg(finer: DataFrame, interval: str) -> DataFrame:
     """A2: re-aggregate a finer rollup tier to ``interval``."""
     sec = resolve_interval_seconds(interval)
-    return (
-        finer.groupBy(
-            "series_id", time_bucket("window_start", sec).alias("window_start")
-        )
-        .agg(
-            F.sum("sum").alias("sum"),
-            F.sum("count").alias("count"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-        )
-        .select(
-            "series_id",
-            "window_start",
-            F.lit(interval).alias("interval"),
-            "sum",
-            "count",
-            "min",
-            "max",
-        )
+    return reaggregate(
+        finer, time_bucket("window_start", sec).alias("window_start"), interval
     )
 
 
@@ -104,26 +105,8 @@ def calendar_rollup(finer: DataFrame, unit: str = "week") -> DataFrame:
         raise ValueError(
             f"unsupported calendar unit {unit!r}; one of {sorted(_CALENDAR_UNITS)}"
         ) from None
-    return (
-        finer.groupBy(
-            "series_id",
-            F.date_trunc(unit, F.col("window_start")).alias("window_start"),
-        )
-        .agg(
-            F.sum("sum").alias("sum"),
-            F.sum("count").alias("count"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-        )
-        .select(
-            "series_id",
-            "window_start",
-            F.lit(label).alias("interval"),
-            "sum",
-            "count",
-            "min",
-            "max",
-        )
+    return reaggregate(
+        finer, F.date_trunc(unit, F.col("window_start")).alias("window_start"), label
     )
 
 
@@ -154,24 +137,8 @@ def calendar_rollup_tz(
         .cast("long")
         .alias("w_start")
     )
-    return (
-        finer.groupBy("series_id", w_start)
-        .agg(
-            F.sum("sum").alias("sum"),
-            F.sum("count").alias("count"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-        )
-        .select(
-            "series_id",
-            "w_start",
-            F.lit("1dc-" + tz).alias("interval"),
-            "sum",
-            "count",
-            "min",
-            "max",
-        )
-    )
+    merged = finer.groupBy("series_id", w_start).agg(*merged_aggs())
+    return _tier_select(merged, "w_start", "1dc-" + tz)
 
 
 def fused_tier_rollup(
@@ -208,32 +175,32 @@ def fused_rollup_wide(
     sec = resolve_interval_seconds(interval)
     win = (F.floor(F.col("ts_sec") / F.lit(sec).cast("long")) * sec).cast("long")
 
-    def stat_aggs(src: dict[str, str]) -> list:
-        aggs = []
-        for s in TOKEN_STATS:
-            aggs += [
-                F.sum(src["sum"].format(s)).alias(f"sum_{s}"),
-                F.min(src["min"].format(s)).alias(f"min_{s}"),
-                F.max(src["max"].format(s)).alias(f"max_{s}"),
-            ]
-        return aggs
+    def stat_aggs(merge: bool) -> list:
+        # per stat: sum/min/max buffers (the count is per sequence,
+        # shared by all stats), aggregated from the stat column or
+        # merged from phase-1 buffers by the stored-aggregate rule
+        return [
+            STORED_RULE[a][merge](f"{a}_{s}" if merge else s).alias(f"{a}_{s}")
+            for s in TOKEN_STATS
+            for a in ("sum", "min", "max")
+        ]
 
     if salts > 0:
         phase1 = (
             wide.withColumn("salt", F.pmod(F.xxhash64("ts_sec"), F.lit(salts)))
             .groupBy("source", win.alias("win"), "salt")
             .agg(
-                *stat_aggs({"sum": "{0}", "min": "{0}", "max": "{0}"}),
+                *stat_aggs(False),
                 F.count("*").alias("cnt"),
             )
         )
         agg = phase1.groupBy("source", "win").agg(
-            *stat_aggs({"sum": "sum_{0}", "min": "min_{0}", "max": "max_{0}"}),
+            *stat_aggs(True),
             F.sum("cnt").alias("cnt"),
         )
     else:
         agg = wide.groupBy("source", win.alias("win")).agg(
-            *stat_aggs({"sum": "{0}", "min": "{0}", "max": "{0}"}),
+            *stat_aggs(False),
             F.count("*").alias("cnt"),
         )
 
@@ -281,15 +248,9 @@ def preaggregate(rollup: DataFrame, group_expr) -> DataFrame:
     """A4: collapse the series dimension — aggregate across series per
     window. ``group_expr`` maps series_id -> coarser key (e.g. source
     prefix); sum/count re-add, min/max re-extremize."""
-    return (
-        rollup.groupBy(group_expr.alias("group_key"), "window_start", "interval")
-        .agg(
-            F.sum("sum").alias("sum"),
-            F.sum("count").alias("count"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-        )
-    )
+    return rollup.groupBy(
+        group_expr.alias("group_key"), "window_start", "interval"
+    ).agg(*merged_aggs())
 
 
 # --------------------------------------------------- histogram tier (A14/A15)

@@ -14,9 +14,8 @@ salted == unsalted exactly.
 
 At 10^12 scale phase 1's partial aggregation already collapses
 per-task data, so the extra shuffle is narrow (|series x salt x
-windows| rows). topk_hot_series feeds an optional targeted variant
-(salt only the detected hot series); the default salts uniformly,
-which is simpler and near-free given the narrow phase-1 output.
+windows| rows) and salting every series uniformly is near-free.
+topk_hot_series, the skew detector, is a query in its own right.
 """
 
 from __future__ import annotations
@@ -26,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..config import INTERVAL_SECONDS
 from ..functions.timeutil import time_bucket
+from .rollup import reaggregate, stored_aggs
 
 
 def salted_rollup(points: DataFrame, interval: str, salts: int = 16) -> DataFrame:
@@ -34,78 +34,9 @@ def salted_rollup(points: DataFrame, interval: str, salts: int = 16) -> DataFram
     phase1 = (
         points.withColumn("salt", F.pmod(F.xxhash64("ts"), F.lit(salts)))
         .groupBy("series_id", "salt", time_bucket("ts", sec).alias("window_start"))
-        .agg(
-            F.sum("value").alias("sum"),
-            F.count("value").alias("count"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-        )
+        .agg(*stored_aggs())
     )
-    return (
-        phase1.groupBy("series_id", "window_start")
-        .agg(
-            F.sum("sum").alias("sum"),
-            F.sum("count").alias("count"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-        )
-        .select(
-            "series_id",
-            "window_start",
-            F.lit(interval).alias("interval"),
-            "sum",
-            "count",
-            "min",
-            "max",
-        )
-    )
-
-
-def targeted_salted_rollup(
-    points: DataFrame,
-    interval: str,
-    hot_series_ids: list[str],
-    salts: int = 16,
-) -> DataFrame:
-    """A5 targeted variant: salt ONLY the series detected hot (feed it
-    topk_hot_series output — k rows, a legitimate driver-side collect).
-    One pass, one conditional salt expression: cold series keep salt 0,
-    so phase-1 output is |cold series x windows| + |hot x salts x
-    windows| instead of inflating every series by the salt factor.
-    Result == tumbling_rollup exactly (decomposable aggs, golden
-    test)."""
-    sec = INTERVAL_SECONDS[interval]
-    is_hot = F.col("series_id").isin(list(hot_series_ids))
-    salt = (
-        F.when(is_hot, F.pmod(F.xxhash64("ts"), F.lit(salts)))
-        .otherwise(F.lit(0).cast("long"))
-    )
-    phase1 = points.groupBy(
-        "series_id", salt.alias("salt"), time_bucket("ts", sec).alias("window_start")
-    ).agg(
-        F.sum("value").alias("sum"),
-        F.count("value").alias("count"),
-        F.min("value").alias("min"),
-        F.max("value").alias("max"),
-    )
-    return (
-        phase1.groupBy("series_id", "window_start")
-        .agg(
-            F.sum("sum").alias("sum"),
-            F.sum("count").alias("count"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-        )
-        .select(
-            "series_id",
-            "window_start",
-            F.lit(interval).alias("interval"),
-            "sum",
-            "count",
-            "min",
-            "max",
-        )
-    )
+    return reaggregate(phase1, "window_start", interval)
 
 
 def topk_hot_series(points: DataFrame, k: int = 10) -> DataFrame:

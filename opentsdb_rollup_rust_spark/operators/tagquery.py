@@ -44,6 +44,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..config import STORED_AGGS
+from .rollup import stored_aggs
+
 
 @dataclass(frozen=True)
 class TagFilter:
@@ -200,19 +203,11 @@ def tag_filter_rollup(
         w_start,
         "value",
     )
-    agg = narrow.groupBy(*group_tags, "w_start").agg(
-        F.sum("value").alias("sum"),
-        F.count("value").alias("count"),
-        F.min("value").alias("min"),
-        F.max("value").alias("max"),
-    )
+    agg = narrow.groupBy(*group_tags, "w_start").agg(*stored_aggs())
     return agg.select(
         *group_tags,
         "w_start",
-        "sum",
-        "count",
-        "min",
-        "max",
+        *STORED_AGGS,
         (F.col("sum").cast("double") / F.col("count").cast("double")).alias(
             "avg"
         ),

@@ -50,7 +50,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..config import resolve_interval_seconds
+from ..config import STORED_AGGS, resolve_interval_seconds
+from ..operators.rollup import STORED_RULE, stored_aggs
 from ..operators.tagquery import (
     TagFilter,
     compile_tag_filter,
@@ -61,7 +62,10 @@ from ..operators.tagquery import (
 #: ppm quantization scale for avg / rate outputs (see module doc).
 Q_SCALE = 1_000_000
 
-_DS_AGGS = ("sum", "count", "min", "max", "avg")
+#: the downsamplers answered from sum/count/min/max alone — so also
+#: from a stored tier ([OTSDB-ROLLUP]: avg is never stored, it
+#: re-derives from sum+count)
+_DS_AGGS = (*STORED_AGGS, "avg")
 
 #: OpenTSDB's order-dependent downsamplers ([OTSDB-AGG]: "first" /
 #: "last" return the first/last data point of the window and are
@@ -335,25 +339,19 @@ def _bucket_expr(spec: QuerySpec, sec: int, ts_sec_expr: Column) -> Column:
 def _choose_tier(
     spec: QuerySpec,
     sec: int,
-    tier: DataFrame | None,
-    tier_interval: str | None,
     tiers,
     pre_reason: str | None = None,
 ):
     """Tier-list selection shared by api_query and api_query_hist:
-    normalize the legacy single-tier form, compute the alignment
-    refusal reasons (0all needs [start, end) aligned to the BEST-MATCH
-    tier — a finer-but-aligned fallback candidate is refused
-    conservatively rather than special-cased; epoch-grid intervals
-    need a bucket-aligned range), and apply the rollup_usage policy
+    compute the alignment refusal reasons (0all needs [start, end)
+    aligned to the BEST-MATCH tier — a finer-but-aligned fallback
+    candidate is refused conservatively rather than special-cased;
+    epoch-grid intervals need a bucket-aligned range), and apply the
+    rollup_usage policy
     via select_rollup_tier (which raises loudly under nofallback).
     ``pre_reason`` carries a caller-specific refusal that takes
     precedence (api_query's non-decomposable downsample aggregator).
     Returns the chosen tier DataFrame, or None for the raw path."""
-    if tier is not None and tiers:
-        raise ValueError("pass either tier/tier_interval or tiers, not both")
-    if tier is not None:
-        tiers = [(tier, tier_interval)]
     if not tiers:
         return None
     spec_reason = pre_reason
@@ -494,14 +492,8 @@ def _ppm_div(num: str, den: str) -> str:
 
 
 def _ds_agg_expr(agg: str) -> Column:
-    if agg == "sum":
-        return F.sum("value")
-    if agg == "count":
-        return F.count("value")
-    if agg == "min":
-        return F.min("value")
-    if agg == "max":
-        return F.max("value")
+    if agg in STORED_RULE:
+        return STORED_RULE[agg][0]("value")
     # avg, ppm-quantized in pure int64 (sum*1e6 then integer floor-div)
     return F.expr(_ppm_div(f"sum(value) * {Q_SCALE}", "count(value)"))
 
@@ -572,12 +564,7 @@ def build_tagged_tier(
     w_start = (F.floor(ts_sec / F.lit(sec)).cast("long") * F.lit(sec)).alias(
         "w_start"
     )
-    aggs = [
-        F.sum("value").alias("sum"),
-        F.count("value").alias("count"),
-        F.min("value").alias("min"),
-        F.max("value").alias("max"),
-    ]
+    aggs = stored_aggs()
     if STORED_SERIES_COL in points.columns:
         g = points.select(
             F.col(metric_col),
@@ -593,10 +580,7 @@ def build_tagged_tier(
             F.col("_tags").alias(tags_col),
             STORED_SERIES_COL,
             "w_start",
-            "sum",
-            "count",
-            "min",
-            "max",
+            *STORED_AGGS,
         )
     g = points.select(
         F.col(metric_col),
@@ -608,31 +592,16 @@ def build_tagged_tier(
         metric_col,
         F.map_from_entries("_ent").alias(tags_col),
         "w_start",
-        "sum",
-        "count",
-        "min",
-        "max",
+        *STORED_AGGS,
     )
-
-
-#: downsample aggregators answerable from a sum/count/min/max tier
-#: (decomposable family — [OTSDB-ROLLUP]: avg is never stored, it
-#: re-derives from sum+count)
-_TIER_ROUTABLE = ("sum", "count", "min", "max", "avg")
 
 
 def _tier_ds_agg_expr(agg: str) -> Column:
     """Stage-3 re-aggregation FROM TIER ROWS (each carrying the
     stored sum/count/min/max of one fine window): the factor-window
     rewrite every rollup read in this engine uses (plans/tier_router)."""
-    if agg == "sum":
-        return F.sum("sum")
-    if agg == "count":
-        return F.sum("count")
-    if agg == "min":
-        return F.min("min")
-    if agg == "max":
-        return F.max("max")
+    if agg in STORED_RULE:
+        return STORED_RULE[agg][1](agg)
     return F.expr(_ppm_div(f"sum(sum) * {Q_SCALE}", "sum(count)"))
 
 
@@ -684,8 +653,6 @@ def api_query(
     tags_col: str = "tags",
     ts_col: str = "ts",
     value_col: str = "value",
-    tier: DataFrame | None = None,
-    tier_interval: str | None = None,
     tiers: list[tuple[DataFrame, str]] | None = None,
 ) -> DataFrame:
     """Execute ``spec`` over a tagged point stream.
@@ -693,10 +660,11 @@ def api_query(
     ``points``: (metric_col string, ts_col timestamp, value_col long,
     tags_col map<string,string>).
 
-    ``tier``/``tier_interval``: optional MATERIALIZED rollup tier —
-    (metric_col, tags_col, w_start epoch long, sum, count, min, max)
-    at ``tier_interval`` granularity, e.g. the stored output of
-    build_tagged_tier. When the spec's downsample interval is a
+    ``tiers``: optional MATERIALIZED rollup tiers, each a (frame,
+    interval) pair — (metric_col, tags_col, w_start epoch long, sum,
+    count, min, max) at that interval, e.g. the stored output of
+    build_tagged_tier; the spec's rollup_usage picks one
+    (select_rollup_tier). When the spec's downsample interval is a
     multiple of the tier's, its aggregator is decomposable, and the
     query range is bucket-aligned, stage 3 RE-AGGREGATES FROM THE TIER
     (the P5 factor-window route: a 2h query over a 1h tier touches 2
@@ -740,8 +708,6 @@ def api_query(
             tags_col=tags_col,
             ts_col=ts_col,
             value_col=value_col,
-            tier=tier,
-            tier_interval=tier_interval,
             tiers=tiers,
         )
         return out.withColumn(
@@ -762,13 +728,11 @@ def api_query(
     tier = _choose_tier(
         spec,
         sec,
-        tier,
-        tier_interval,
         tiers,
         pre_reason=(
             f"downsample aggregator {ds.aggregator!r} is not "
             "answerable from a sum/count/min/max tier"
-            if ds.aggregator not in _TIER_ROUTABLE  # p*/first/last
+            if ds.aggregator not in _DS_AGGS  # p*/first/last
             else None
         ),
     )
@@ -790,10 +754,7 @@ def api_query(
             ],
             series_expr.alias("_series"),
             _bucket_expr(spec, sec, F.col("w_start")).alias("w_start"),
-            "sum",
-            "count",
-            "min",
-            "max",
+            *STORED_AGGS,
         )
         # --- 3. factor-window re-aggregation (sec/tsec rows per bucket)
         per_series = narrow.groupBy(*group_tags, "_series", "w_start").agg(
@@ -1755,8 +1716,6 @@ def api_query_hist(
     tags_col: str = "tags",
     ts_col: str = "ts",
     value_col: str = "value",
-    tier: DataFrame | None = None,
-    tier_interval: str | None = None,
     tiers: list[tuple[DataFrame, str]] | None = None,
 ) -> DataFrame:
     """/api/query with ``percentiles`` on a histogram metric
@@ -1775,8 +1734,8 @@ def api_query_hist(
     IS the aggregation; OpenTSDB renders no fill for histogram
     queries); ``rate`` is refused.
 
-    ``tier``/``tier_interval``: optional build_tagged_hist_tier
-    output — factor-window count re-aggregation under the same
+    ``tiers``: optional (build_tagged_hist_tier output, interval)
+    pairs — factor-window count re-aggregation under the same
     servability rules and rollup_usage policy as api_query's tier
     route (percentile estimates from a re-aggregated histogram are
     IDENTICAL, not approximated twice: counts are exact).
@@ -1806,8 +1765,6 @@ def api_query_hist(
             tags_col=tags_col,
             ts_col=ts_col,
             value_col=value_col,
-            tier=tier,
-            tier_interval=tier_interval,
             tiers=tiers,
         )
         return out.withColumn(
@@ -1828,7 +1785,7 @@ def api_query_hist(
     # are for). The series identity itself is not an output dimension
     # on this endpoint, only the predicate is used (resolved per
     # branch so a stored identity column is honored on either frame).
-    tier = _choose_tier(spec, sec, tier, tier_interval, tiers)
+    tier = _choose_tier(spec, sec, tiers)
 
     if tier is not None:
         _, row_pred = _series_and_pred(

@@ -42,7 +42,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..config import INTERVAL_SECONDS
+from ..config import INTERVAL_SECONDS, STORED_AGGS
+from ..operators.rollup import stored_aggs
 
 POINT_SCHEMA = StructType(
     [
@@ -64,19 +65,11 @@ def read_points_stream(spark, path: str, max_files_per_trigger: int | None = Non
 
 
 def _agg_select(grouped, interval: str):
-    return grouped.agg(
-        F.sum("value").alias("sum"),
-        F.count("value").alias("count"),
-        F.min("value").alias("min"),
-        F.max("value").alias("max"),
-    ).select(
+    return grouped.agg(*stored_aggs()).select(
         "series_id",
         F.col("window.start").alias("window_start"),
         F.lit(interval).alias("interval"),
-        "sum",
-        "count",
-        "min",
-        "max",
+        *STORED_AGGS,
     )
 
 
@@ -129,21 +122,13 @@ def streaming_tag_filter_rollup(
     return (
         narrow.withWatermark("ts", watermark)
         .groupBy(*group_tags, F.window("ts", f"{sec} seconds"))
-        .agg(
-            F.sum("value").alias("sum"),
-            F.count("value").alias("count"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-        )
+        .agg(*stored_aggs())
         .select(
             *group_tags,
             F.unix_timestamp(F.col("window.start"))
             .cast("long")
             .alias("w_start"),
-            "sum",
-            "count",
-            "min",
-            "max",
+            *STORED_AGGS,
         )
     )
 
@@ -242,19 +227,10 @@ def streaming_api_query_downsample(
     agged = (
         narrow.withWatermark("ts", watermark)
         .groupBy(*group_tags, "_series", F.window("ts", f"{sec} seconds"))
-        .agg(
-            F.sum("value").alias("_sum"),
-            F.count("value").alias("_count"),
-            F.min("value").alias("_min"),
-            F.max("value").alias("_max"),
-            *order_aggs,
-        )
+        .agg(*stored_aggs(prefix="_"), *order_aggs)
     )
     v = {
-        "sum": F.col("_sum"),
-        "count": F.col("_count"),
-        "min": F.col("_min"),
-        "max": F.col("_max"),
+        **{a: F.col("_" + a) for a in STORED_AGGS},
         # ppm-quantized int64 avg — the batch _ds_agg_expr rule
         # (floor via pmod, so negative sums match batch exactly)
         "avg": F.expr(_ppm_div(f"_sum * {Q_SCALE}", "_count")),
@@ -345,20 +321,12 @@ def streaming_session_rollup(
     return (
         points.withWatermark("ts", watermark)
         .groupBy("series_id", F.session_window("ts", gap))
-        .agg(
-            F.sum("value").alias("sum"),
-            F.count("value").alias("count"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-        )
+        .agg(*stored_aggs())
         .select(
             "series_id",
             F.col("session_window.start").alias("session_start"),
             F.col("session_window.end").alias("session_end"),
-            "sum",
-            "count",
-            "min",
-            "max",
+            *STORED_AGGS,
         )
     )
 
@@ -381,9 +349,9 @@ FFILL_STATE_SCHEMA = StructType(
 
 
 def _ffill_batch(series_id, batch: pd.DataFrame, last_w, last_s, sec: int):
-    """Shared forward-fill core for ST4/ST6: fold one sorted batch of
+    """ST4's forward-fill core: fold one sorted batch of
     (window_start, sum) rows into (rows, new_state). Pinned by the ST4
-    golden test; ST6 adds only API plumbing around it."""
+    golden test."""
     rows = []
     for _, r in batch.sort_values("window_start").iterrows():
         w = int(r["window_start"].timestamp())
@@ -410,6 +378,9 @@ def stateful_forward_fill(rollup_rows: DataFrame, interval: str) -> DataFrame:
     applyInPandasWithState = Arrow-batched per-group stateful compute;
     state is scoped to the series key, the same partitioning axis the
     batch engine buckets on, so state shuffles once per micro-batch.
+    At scale, the RocksDB state-store provider
+    (spark.sql.streaming.stateStore.providerClass) backs this state
+    like any other streaming state.
     """
     sec = INTERVAL_SECONDS[interval]
 
@@ -432,64 +403,6 @@ def stateful_forward_fill(rollup_rows: DataFrame, interval: str) -> DataFrame:
         FFILL_STATE_SCHEMA,
         "append",
         GroupStateTimeout.NoTimeout,
-    )
-
-
-def tws_available() -> bool:
-    """transformWithState needs google.protobuf in the Python workers
-    (its state-server protocol); absent in this sandbox."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stateful_forward_fill_tws(rollup_rows: DataFrame, interval: str) -> DataFrame:
-    """ST6: the ST4 forward-fill on Spark 4's transformWithState API
-    (StatefulProcessor + typed ValueState) — the successor to
-    applyInPandasWithState, backed by the RocksDB state store at scale
-    (spark.sql.streaming.stateStore.providerClass must be the RocksDB
-    provider). The fill logic is the SAME _ffill_batch core ST4's
-    golden test pins; only the state plumbing differs. The API needs
-    google.protobuf in the Python workers (tws_available probes it) —
-    absent in this sandbox, so the parity test skips here and runs on
-    any standard deployment."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    sec = INTERVAL_SECONDS[interval]
-
-    class FFill(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("ffill", FFILL_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            (series_id,) = key
-            if self._state.exists():
-                last_w, last_s = self._state.get()
-            else:
-                last_w, last_s = None, None
-            batch = pd.concat(list(rows), ignore_index=True)
-            out, last_w, last_s = _ffill_batch(
-                series_id, batch, last_w, last_s, sec
-            )
-            self._state.update((last_w, last_s))
-            yield pd.DataFrame(
-                out, columns=["series_id", "window_start", "sum", "filled"]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return rollup_rows.groupBy("series_id").transformWithStateInPandas(
-        statefulProcessor=FFill(),
-        outputStructType=FFILL_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
     )
 
 

@@ -214,7 +214,7 @@ def test_tier_route_equals_raw_direct(spark):
         routed = {
             tuple(r)
             for r in api_query(
-                pts, spec, tier=tier, tier_interval="1h"
+                pts, spec, tiers=[(tier, "1h")]
             ).collect()
         }
         assert raw == routed, f"ds_agg={ds_agg}"
@@ -235,8 +235,7 @@ def test_tier_route_refuses_unservable_specs(spark):
         api_query(
             pts,
             QuerySpec(**base, start=0, end=7200, downsample=Downsample("1m")),
-            tier=tier,
-            tier_interval="1h",
+            tiers=[(tier, "1h")],
         )
     # unaligned query range
     with pytest.raises(ValueError, match="aligned"):
@@ -245,8 +244,7 @@ def test_tier_route_refuses_unservable_specs(spark):
             QuerySpec(
                 **base, start=60, end=7260, downsample=Downsample("7200s")
             ),
-            tier=tier,
-            tier_interval="1h",
+            tiers=[(tier, "1h")],
         )
 
 
@@ -326,8 +324,7 @@ def test_percentile_refuses_tier_route(spark):
                 end=7200,
                 downsample=Downsample("7200s", "p950"),
             ),
-            tier=tier,
-            tier_interval="1h",
+            tiers=[(tier, "1h")],
         )
 
 
@@ -551,11 +548,11 @@ def test_rollup_usage_fallback_runs_raw(spark):
         downsample=Downsample("90s", "sum"),
     )
     with pytest.raises(ValueError, match="rollup_usage=nofallback"):
-        api_query(pts, spec, tier=tier, tier_interval="1h")
+        api_query(pts, spec, tiers=[(tier, "1h")])
     from dataclasses import replace
 
     fb = replace(spec, rollup_usage="fallback_raw")
-    got = api_query(pts, fb, tier=tier, tier_interval="1h").collect()
+    got = api_query(pts, fb, tiers=[(tier, "1h")]).collect()
     want = api_query(pts, fb).collect()
     assert sorted((r.w_start, r.value) for r in got) == sorted(
         (r.w_start, r.value) for r in want
@@ -717,7 +714,7 @@ def test_hist_tier_route_equals_raw(spark):
     )
     raw = api_query_hist(pts, spec, (500, 990)).collect()
     routed = api_query_hist(
-        pts, spec, (500, 990), tier=tier, tier_interval="1800s"
+        pts, spec, (500, 990), tiers=[(tier, "1800s")]
     ).collect()
     key = lambda r: (r.host, r.w_start, r.permille)
     assert sorted(map(tuple, routed), key=str) == sorted(
@@ -729,10 +726,10 @@ def test_hist_tier_route_equals_raw(spark):
 
     bad = replace(spec, downsample=Downsample("3000s", "sum"))
     with pytest.raises(ValueError, match="multiple"):
-        api_query_hist(pts, bad, (500,), tier=tier, tier_interval="1800s")
+        api_query_hist(pts, bad, (500,), tiers=[(tier, "1800s")])
     fb = replace(bad, rollup_usage="fallback_raw")
     got = api_query_hist(
-        pts, fb, (500,), tier=tier, tier_interval="1800s"
+        pts, fb, (500,), tiers=[(tier, "1800s")]
     ).collect()
     want = api_query_hist(pts, fb, (500,)).collect()
     assert sorted(map(tuple, got), key=str) == sorted(map(tuple, want), key=str)
@@ -880,8 +877,7 @@ def test_multi_tier_selection_policies(spark):
     }
     want3 = {tuple(r) for r in api_query(pts, spec3).collect()}
     assert got3 == want3
-    with pytest.raises(ValueError, match="not both"):
-        api_query(pts, spec, tier=tiers[0][0], tier_interval="1h", tiers=tiers)
+
 
 def test_aggregator_none_passes_series_through(spark):
     """aggregator='none' (OpenTSDB's no-aggregation mode): every input
@@ -1087,20 +1083,19 @@ def test_0all_tier_route(spark):
     want = {tuple(r) for r in api_query(pts, spec).collect()}
     got = {
         tuple(r)
-        for r in api_query(pts, spec, tier=tier, tier_interval="1h").collect()
+        for r in api_query(pts, spec, tiers=[(tier, "1h")]).collect()
     }
     assert got == want and got
     unaligned = replace(spec, start=1800, end=7200)
     with pytest.raises(ValueError, match="0all tier routing"):
-        api_query(pts, unaligned, tier=tier, tier_interval="1h")
+        api_query(pts, unaligned, tiers=[(tier, "1h")])
     raw = {tuple(r) for r in api_query(pts, unaligned).collect()}
     fb = {
         tuple(r)
         for r in api_query(
             pts,
             replace(unaligned, rollup_usage="fallback_raw"),
-            tier=tier,
-            tier_interval="1h",
+            tiers=[(tier, "1h")],
         ).collect()
     }
     assert fb == raw
@@ -1572,8 +1567,7 @@ def test_first_last_refuse_tier_route(spark):
                     end=7200,
                     downsample=Downsample("7200s", agg),
                 ),
-                tier=tier,
-                tier_interval="1h",
+                tiers=[(tier, "1h")],
             ).collect()
 
 

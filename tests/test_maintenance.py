@@ -418,3 +418,28 @@ def test_orphan_collection_is_age_guarded(spark, store):
     assert stats["orphans_removed"] > 0
     assert not os.path.exists(orphan)
     assert store.read("o").count() == 100  # live data untouched
+
+
+def test_cli_compact_and_expire_cover_report_tables(spark, tmp_path, monkeypatch):
+    """jobs/run_rollup.py --compact --expire-keep 1 also folds the report
+    tables: after three job runs each of lineage and metrics lists one
+    data file, keeps one snapshot, and reads back the same rows."""
+    import jobs.run_rollup as rr
+
+    monkeypatch.setattr(rr, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    root = str(tmp_path / "cli")
+    base = ["--root", root, "--buckets", "2", "--no-encode"]
+    for _ in range(3):
+        assert rr.main(base + ["--synthesize", "100"]) == 0
+    store = ManifestStore(spark, root)
+    report = ("lineage", "metrics")
+    before = {t: sorted(map(tuple, store.read(t).collect())) for t in report}
+    assert all(len(_files(store, t)) > 1 for t in report)
+
+    # no new sequences: the job appends nothing, then maintenance runs
+    assert rr.main(base + ["--compact", "--expire-keep", "1"]) == 0
+    for t in report:
+        assert len(_files(store, t)) == 1, t
+        assert len(store._load_manifest(t)["snapshots"]) == 1, t
+        assert sorted(map(tuple, store.read(t).collect())) == before[t], t

@@ -341,3 +341,32 @@ def test_tag_read_partition_pruned(spark, tmp_path_factory):
     # directory pruning visible: only one of the two dc partitions read
     assert "PartitionFilters: []" not in plan
     assert q.collect()[0]["s"] > 0
+
+
+def test_queries_ordered_oldest_driver_evidence_first(tmp_path):
+    """The driver samples the first 50 queries() keys: keys no
+    CORRECTNESS_r<N>.json round checked come first, then by the last
+    round that checked them, oldest first; declared order breaks ties
+    and stands alone when no such file exists."""
+    import json
+    import os
+
+    import __spark_entry__ as E
+
+    declared = {k: None for k in ("a", "b", "c", "d", "e", "f")}
+    assert list(E.order_by_last_check(declared, str(tmp_path))) == list(declared)
+    for rnd, keys in ((1, "abcf"), (2, "ab"), (3, "f")):
+        with open(tmp_path / f"CORRECTNESS_r0{rnd}.json", "w") as f:
+            json.dump({k: {"hash_match": True} for k in keys}, f)
+    # d, e never checked; c last in r1; a, b in r2; f in r3
+    assert list(E.order_by_last_check(declared, str(tmp_path))) == list("decabf")
+
+    # the repo's own evidence: the sample holds no key the newest round
+    # already checked
+    root = os.path.dirname(os.path.abspath(E.__file__))
+    rounds = sorted(
+        f for f in os.listdir(root) if f.startswith("CORRECTNESS_r")
+    )
+    with open(os.path.join(root, rounds[-1])) as f:
+        newest = set(json.load(f))
+    assert not set(list(E.queries())[:50]) & newest

@@ -67,20 +67,42 @@ def test_preaggregate_collapses_series(points):
     assert total == points.count()
 
 
-def test_targeted_salting_matches_unsalted(points):
-    """Golden: salting only the detected hot series changes shuffle
-    layout, never results; detector -> targeted agg is the intended
-    composition."""
-    from opentsdb_rollup_rust_spark.operators.skew import (
-        targeted_salted_rollup,
-        topk_hot_series,
-    )
+def test_calendar_month_equals_direct_from_raw(spark):
+    """A17 month tier ('1nc'): the 1d tier merged per calendar month
+    equals a direct sum/count/min/max of the raw points per month,
+    over months of 31, 29 (leap February) and 31 days."""
+    import calendar
+    import datetime as dt
 
-    hot = [r["series_id"] for r in topk_hot_series(points, k=3).collect()]
-    got = targeted_salted_rollup(points, "1h", hot, salts=8)
-    want = tumbling_rollup(points, "1h")
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
+    from opentsdb_rollup_rust_spark.operators.rollup import calendar_rollup
+
+    t0 = calendar.timegm((2024, 1, 20, 0, 0, 0))
+    t1 = calendar.timegm((2024, 3, 10, 0, 0, 0))
+    rows = [
+        (f"s{i % 2}", t, (t // 3600) % 97 - 40)
+        for i, t in enumerate(range(t0, t1, 5 * 3600 + 17))
+    ]
+    want = {}
+    for sid, t, v in rows:
+        d = dt.datetime.fromtimestamp(t, dt.timezone.utc)
+        key = (sid, calendar.timegm((d.year, d.month, 1, 0, 0, 0)))
+        s_, c, mn, mx = want.get(key, (0, 0, v, v))
+        want[key] = (s_ + v, c + 1, min(mn, v), max(mx, v))
+    assert {k[1] for k in want} == {
+        calendar.timegm((2024, m, 1, 0, 0, 0)) for m in (1, 2, 3)
+    }
+
+    pts = spark.createDataFrame(rows, "series_id string, t long, value long").select(
+        "series_id", F.timestamp_seconds("t").alias("ts"), "value"
+    )
+    got = {
+        (r["series_id"], r["ws"]): (r["sum"], r["count"], r["min"], r["max"])
+        for r in calendar_rollup(tumbling_rollup(pts, "1d"), "month")
+        .where(F.col("interval") == "1nc")
+        .select("*", F.unix_timestamp("window_start").alias("ws"))
+        .collect()
+    }
+    assert got == want
 
 
 def test_fused_rollup_matches_long_form(spark, sequences):

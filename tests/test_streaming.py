@@ -287,66 +287,6 @@ def test_legacy_seed_capped_by_own_checkpoint_commits(tmp_path):
     assert _seed_replay_mark(store2, "t", "me", str(ckpt), True) == 1
 
 
-def test_stateful_forward_fill_tws_parity(spark, tmp_path):
-    """ST6 == ST4: the transformWithState (Spark 4 StatefulProcessor +
-    RocksDB state store) forward-fill produces the identical output to
-    the applyInPandasWithState implementation. Skips where the TWS
-    state-server protocol's google.protobuf dependency is absent (this
-    sandbox); the fill logic itself is the shared _ffill_batch core
-    that ST4's golden test pins either way."""
-    import datetime as dt
-
-    from opentsdb_rollup_rust_spark.streaming.rollup_stream import (
-        stateful_forward_fill_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("google.protobuf not available for transformWithState")
-
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        ("s1", base, 10),
-        ("s1", base + dt.timedelta(hours=3), 40),
-        ("s2", base + dt.timedelta(hours=1), 7),
-    ]
-    df = spark.createDataFrame(
-        rows, "series_id string, window_start timestamp, sum long"
-    )
-    d = str(tmp_path / "roll_tws.parquet")
-    df.write.parquet(d)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(
-                "series_id string, window_start timestamp, sum long"
-            ).parquet(d)
-        )
-        name = _memname()
-        run_to_memory_table(stateful_forward_fill_tws(stream, "1h"), name, "append")
-        got = {
-            (r["series_id"], r["window_start"]): (r["sum"], r["filled"])
-            for r in spark.table(name).collect()
-        }
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    e = int(base.replace(tzinfo=dt.timezone.utc).timestamp())
-    assert got[("s1", e)] == (10, 0)
-    assert got[("s1", e + 3600)] == (10, 1)
-    assert got[("s1", e + 7200)] == (10, 1)
-    assert got[("s1", e + 10800)] == (40, 0)
-    assert got[("s2", e + 3600)] == (7, 0)
-    assert len(got) == 5
-
-
 def test_streaming_dedup_across_batches(spark, points, points_dir, tmp_path):
     """ST8: the input is delivered TWICE in separate files, forced into
     separate micro-batches (maxFilesPerTrigger=1) — dedup state must
