@@ -8,7 +8,8 @@ Examples:
       --root /tmp/rollup_store --synthesize 100000 --tier all \
       --buckets 32 --salts 16
 
-  # resume a single tier after a crash (re-runs only missing buckets)
+  # resume a single tier after a crash (finishes the splice a crashed
+  # run left; a tier whose source is unchanged writes nothing)
   spark-submit --py-files engine.zip jobs/run_rollup.py \
       --root /tmp/rollup_store --tier 1h --run-id retry-1
 
@@ -57,8 +58,8 @@ def main(argv=None) -> int:
                          "--tier from its source (chunk-coherent splice) "
                          "instead of running the job")
     ap.add_argument("--compact", action="store_true",
-                    help="run small-file compaction on the tier table(s) "
-                         "and the report tables after the job")
+                    help="run small-file compaction on sequences, the tier "
+                         "table(s) and the report tables after the job")
     ap.add_argument("--expire-keep", type=int, default=None,
                     help="expire all but the newest N snapshots per tier "
                          "and report table (GC superseded data files)")
@@ -125,12 +126,13 @@ def main(argv=None) -> int:
             kept = apply_retention(spark, store, tier, args.retention_now)
             print(json.dumps({"retention_tier": tier, "rows_kept": kept}))
 
-    # The report tables gain a file per tier every run. `sequences`
-    # stays out: a compaction advances its snapshot id, resume keys on
-    # that id (committed_buckets), so the next run would append every
-    # tier again.
+    # `sequences` gains a file per write task every late batch and the
+    # report tables a file per tier every run. A compaction of
+    # `sequences` changes no tier: the job's changed range skips
+    # compaction commits.
     if args.compact:
-        for table in [f"rollup_{t}" for t in tiers] + list(REPORT_TABLES):
+        tables = ["sequences"] + [f"rollup_{t}" for t in tiers] + list(REPORT_TABLES)
+        for table in tables:
             if store.exists(table):
                 rollup = table.startswith("rollup_")
                 sort = ("series_id", "window_start") if rollup else None

@@ -16,10 +16,10 @@ checkpoints").
 Every write is one file-level rewrite of a snapshot, as in Iceberg:
 `ManifestStore` has one commit path (`_commit`) under append,
 overwrite and the maintenance ops, and one classifier (`_classify`)
-under one range splice (`_splice_range`). A backfill
-(`replace_range`) is a splice that inserts new rows; retention
-(`prune_older_than`) is a splice with an open lower bound and nothing
-to insert.
+under one range splice (`_splice_range`). Every tier write
+(`replace_range`, from the job and from a backfill) is a splice that
+inserts new rows; retention (`prune_older_than`) is a splice with an
+open lower bound and nothing to insert.
 
 The manifest (`<root>/<table>/_manifest.json`) is also the table's
 metadata, as an Iceberg manifest is ([ICEBERG-SPEC]). A snapshot is
@@ -57,6 +57,7 @@ from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DataType,
@@ -190,9 +191,9 @@ class ManifestStore:
 
         - ``keep=None`` appends: the files merge onto whatever snapshot
           is current at swap time.
-        - ``base`` (maintenance ops) must still be current at swap
-          time, else ConcurrentCommitError: the written files become
-          orphans, never corruption.
+        - ``base`` (maintenance ops; 0 = no snapshot yet) must still be
+          current at swap time, else ConcurrentCommitError: the written
+          files become orphans, never corruption.
         - ``summary`` is recorded atomically with the data (the
           Iceberg snapshot-summary analogue); None records {}.
 
@@ -216,7 +217,7 @@ class ManifestStore:
             entries = {f: _footer_entry(f, ts_cols) for f in written}
         with self._write_lock(table):
             m = self._load_manifest(table)
-            if base is not None and m["current"] != base:
+            if base is not None and (m["current"] or 0) != base:
                 raise ConcurrentCommitError(
                     f"{table}: snapshot advanced {base} -> {m['current']} "
                     "during maintenance; recompute against the new current"
@@ -246,17 +247,17 @@ class ManifestStore:
         """New snapshot = previous file set + newly written files.
 
         ``summary`` is arbitrary commit metadata recorded atomically
-        with the data (the Iceberg snapshot-summary analogue) — the
-        job uses it to mark (tier, src_snapshot, buckets) done, which
-        makes resume exactly-once: the marker and the data are one
-        manifest swap.
+        with the data (the Iceberg snapshot-summary analogue); the
+        streaming sink marks its batch ids with it, and the job's
+        splices (``replace_range``) their source snapshot, so marker
+        and data are one manifest swap.
         """
         return self._commit(table, df, summary=summary)
 
     def snapshot_summaries(self, table: str) -> list[dict]:
-        """All commit summaries — including those of snapshots whose
-        data files expire_snapshots has reclaimed (retired_summaries):
-        resume markers must outlive the data-file GC."""
+        """All commit summaries, oldest first — including expired
+        snapshots' (retired_summaries): resume markers must outlive the
+        data-file GC."""
         m = self._load_manifest(table)
         return [
             {"id": s["id"], **s["summary"]}
@@ -352,18 +353,19 @@ class ManifestStore:
         table: str,
         ts_col: str,
         t0: float,
-        t1: int,
+        t1: float,
         df_new: DataFrame | None,
         summary: Callable[[list[str], list[str], list[str]], dict],
     ) -> tuple[int | None, list[str], list[str], list[str]]:
         """The one range rewrite: the current snapshot's rows with
         ``ts_col`` in [t0, t1) are replaced by ``df_new``'s rows
-        (``t0=-inf``: an open lower bound). Kept files carry over,
+        (``-inf`` / ``inf``: an open bound). Kept files carry over,
         dropped files leave the snapshot unread, and the straddlers'
         rows outside the range are unioned with ``df_new`` and written
         as one new snapshot, validated against the base it was computed
-        from. ``df_new=None`` inserts nothing; then a range that
-        neither drops nor straddles a file commits nothing.
+        from (none: the table's first commit). ``df_new=None`` inserts
+        nothing; then a range that neither drops nor straddles a file
+        commits nothing.
         ``summary(kept, dropped, straddling)`` gives the commit summary.
         Returns (snapshot, kept, dropped, straddling)."""
         m = self._load_manifest(table)
@@ -372,19 +374,17 @@ class ManifestStore:
         kept, dropped, straddling = self._classify(m, files, ts_col, t0, t1)
         if df_new is None and not dropped and not straddling:
             return base, kept, dropped, straddling
-        if base is None:
-            raise KeyError(f"table {table} is empty — nothing to replace")
         out = df_new
         if straddling:
             sdf = self._reader(m).parquet(*straddling)
             ts, mk = epoch_bound_exprs(sdf, ts_col)
-            outside = ts >= mk(t1)
+            outside = ts >= mk(t1) if t1 < math.inf else F.lit(False)
             if t0 > -math.inf:
                 outside = (ts < mk(t0)) | outside
             sdf = sdf.where(outside)
             out = sdf if out is None else sdf.unionByName(out)
         snap = self._commit(
-            table, out, keep=kept, base=base,
+            table, out, keep=kept, base=base or 0,
             summary=summary(kept, dropped, straddling),
         )
         return snap, kept, dropped, straddling
@@ -410,12 +410,12 @@ class ManifestStore:
              the age guard is what keeps the sweep from destroying it
              (Iceberg's remove_orphan_files has the same guard).
 
-        Expired snapshots' SUMMARIES are retained in the manifest
-        (``retired_summaries``): the job's exactly-once resume reads
-        committed-bucket markers from snapshot_summaries(), and GC of
-        data files must never forget which work was committed — losing
-        the markers would double-append entire tiers. Irreversible for
-        the data files by design."""
+        Expired snapshots' ids and SUMMARIES are retained in the
+        manifest (``retired_summaries``): the job's resume reads the
+        source snapshot each tier consumed, and the source's commits
+        after it, from snapshot_summaries() — a lost one would redo
+        whole tiers or hide a change. Irreversible for the data files
+        by design."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         with self._write_lock(table):
@@ -432,8 +432,7 @@ class ManifestStore:
                 # files (orphans, collected by the next expiry's age
                 # sweep), never a live snapshot with missing files
                 m["retired_summaries"] += [
-                    {"id": s["id"], "summary": s["summary"]}
-                    for s in expired if s["summary"]
+                    {"id": s["id"], "summary": s["summary"]} for s in expired
                 ]
                 m["snapshots"] = keep
                 m["files"] = {f: m["files"][f] for f in sorted(protected)}
@@ -530,29 +529,30 @@ class ManifestStore:
         table: str,
         ts_col: str,
         t0_epoch: int,
-        t1_epoch: int,
+        t1_epoch: float,
         df_new: DataFrame,
+        summary: dict | None = None,
     ) -> dict:
         """Surgical time-range replacement (the Iceberg
-        overwrite-by-filter analogue) — the backfill primitive: rows
-        with ``ts_col`` in [t0, t1) are replaced by ``df_new``'s rows.
-        Metadata-first (``_classify``): files whose recorded footer
-        [min, max] is DISJOINT from the range carry over without being
-        read (``files_kept``), files wholly inside it leave the
-        snapshot unread (``files_dropped``), and only range-straddling
-        files are scanned and rewritten with the range filtered out
-        (``files_rewritten``); df_new's rows are written alongside. One
-        atomic manifest swap."""
+        overwrite-by-filter analogue) — the tier write: rows with
+        ``ts_col`` in [t0, t1) (open at +-inf) are replaced by
+        ``df_new``'s rows. Metadata-first (``_classify``): files whose
+        recorded footer [min, max] is DISJOINT from the range carry over
+        without being read (``files_kept``), files wholly inside it
+        leave the snapshot unread (``files_dropped``), and only
+        range-straddling files are scanned and rewritten with the range
+        filtered out (``files_rewritten``); df_new's rows are written
+        alongside. One atomic manifest swap, recording ``summary``."""
 
-        def summary(kept, dropped, straddling):
-            return {"replace_range": {
+        def commit_summary(kept, dropped, straddling):
+            return {**(summary or {}), "replace_range": {
                 "ts_col": ts_col, "t0": t0_epoch, "t1": t1_epoch,
                 "files_kept": len(kept), "files_rewritten": len(straddling),
                 "files_dropped": len(dropped),
             }}
 
         snap, kept, dropped, straddling = self._splice_range(
-            table, ts_col, t0_epoch, t1_epoch, df_new, summary
+            table, ts_col, t0_epoch, t1_epoch, df_new, commit_summary
         )
         return {
             "snapshot": snap,
@@ -606,8 +606,6 @@ def epoch_bound_exprs(df: "DataFrame", ts_col: str):
     and integer bound s, floor(t) >= s <=> t >= s and
     floor(t) < s <=> t < s — identical rows kept. Non-timestamp
     columns (string ts etc.) keep the unix_timestamp parse."""
-    from pyspark.sql import functions as F
-
     if dict(df.dtypes).get(ts_col) == "timestamp":
         return F.col(ts_col), lambda s: F.timestamp_seconds(F.lit(s))
     return F.unix_timestamp(F.col(ts_col)), lambda s: F.lit(s)
@@ -803,9 +801,9 @@ class IcebergStore:
         ).first()
         return int(row.snapshot_id) if row else None
 
-    def append(self, table: str, df: DataFrame, summary: dict | None = None) -> int:
-        import json
-
+    def _writer(self, table: str, df: DataFrame, summary: dict | None):
+        """``df.writeTo`` the table (created if missing), ``summary`` as
+        snapshot properties."""
         q = self._qual(table)
         if not self.exists(table):
             # create from the schema alone: running df's own plan here
@@ -815,14 +813,15 @@ class IcebergStore:
         w = df.writeTo(q)
         for k, v in (summary or {}).items():
             w = w.option(f"snapshot-property.{k}", json.dumps(v))
-        w.append()
+        return w
+
+    def append(self, table: str, df: DataFrame, summary: dict | None = None) -> int:
+        self._writer(table, df, summary).append()
         snap = self.current_snapshot(table)
         assert snap is not None
         return snap
 
     def snapshot_summaries(self, table: str) -> list[dict]:
-        import json
-
         if not self.exists(table):
             return []
         out = []
@@ -973,27 +972,22 @@ class IcebergStore:
         table: str,
         ts_col: str,
         t0_epoch: int,
-        t1_epoch: int,
+        t1_epoch: float,
         df_new: DataFrame,
+        summary: dict | None = None,
     ) -> dict:
         """Range replacement via Iceberg overwrite-by-filter
         (`writeTo(...).overwrite(cond)`): Iceberg classifies data files
         against the predicate with its column stats — disjoint files
         carry over untouched, straddlers rewrite — exactly the
-        footer-based behavior ManifestStore.replace_range hand-rolls."""
-        from datetime import datetime, timezone
-
-        from pyspark.sql import functions as F
-
-        def lit(e: int):
-            return F.lit(
-                datetime.fromtimestamp(e, tz=timezone.utc).strftime(
-                    "%Y-%m-%d %H:%M:%S"
-                )
-            ).cast("timestamp")
-
-        cond = (F.col(ts_col) >= lit(t0_epoch)) & (F.col(ts_col) < lit(t1_epoch))
-        df_new.writeTo(self._qual(table)).overwrite(cond)
+        footer-based behavior ManifestStore.replace_range hand-rolls.
+        Creates a missing table and records ``summary`` as append does."""
+        ts, cond = F.col(ts_col), F.lit(True)
+        if t0_epoch > -math.inf:
+            cond = ts >= F.timestamp_seconds(F.lit(t0_epoch))
+        if t1_epoch < math.inf:
+            cond = cond & (ts < F.timestamp_seconds(F.lit(t1_epoch)))
+        self._writer(table, df_new, summary).overwrite(cond)
         return {
             "snapshot": self.current_snapshot(table),
             "files_kept": -1,  # Iceberg classifies internally

@@ -443,3 +443,30 @@ def test_cli_compact_and_expire_cover_report_tables(spark, tmp_path, monkeypatch
         assert len(_files(store, t)) == 1, t
         assert len(store._load_manifest(t)["snapshots"]) == 1, t
         assert sorted(map(tuple, store.read(t).collect())) == before[t], t
+
+
+def test_cli_compact_covers_sequences_and_changes_no_tier(spark, tmp_path, monkeypatch):
+    """jobs/run_rollup.py --compact folds `sequences` too, and the next
+    run changes no tier: the job's changed range skips compaction
+    commits, so compacting the source is not new data."""
+    import jobs.run_rollup as rr
+    from opentsdb_rollup_rust_spark.operators.points import derive_points
+    from opentsdb_rollup_rust_spark.operators.rollup import tumbling_rollup
+
+    monkeypatch.setattr(rr, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    root = str(tmp_path / "cli")
+    base = ["--root", root, "--buckets", "2"]
+    assert rr.main(base + ["--synthesize", "200"]) == 0
+    store = ManifestStore(spark, root)
+    store.append("sequences", synth_sequences(spark, 100, doc_offset=200))
+    assert len(_files(store, "sequences")) > 1
+    assert rr.main(base + ["--compact"]) == 0
+    assert len(_files(store, "sequences")) == 1
+    tables = [f"{k}_{t}" for t in ("1m", "1h", "1d") for k in ("rollup", "chunks")]
+    snaps = {t: store.current_snapshot(t) for t in tables}
+
+    assert rr.main(base) == 0
+    assert {t: store.current_snapshot(t) for t in tables} == snaps
+    assert_df_equal(store.read("rollup_1m").drop("bucket"),
+                    tumbling_rollup(derive_points(store.read("sequences")), "1m"))

@@ -7,7 +7,8 @@ assert 0 duplicate windows and lineage records the skip.
 import pytest
 from pyspark.sql import functions as F
 
-from opentsdb_rollup_rust_spark.operators.points import derive_points
+from opentsdb_rollup_rust_spark.config import DEFAULT_TIERS
+from opentsdb_rollup_rust_spark.operators.points import derive_points, event_time
 from opentsdb_rollup_rust_spark.operators.rollup import tumbling_rollup
 from opentsdb_rollup_rust_spark.plans.job import (
     apply_retention,
@@ -22,6 +23,8 @@ from opentsdb_rollup_rust_spark.sources.store import (
     ManifestStore,
 )
 from opentsdb_rollup_rust_spark.sources.synth import synth_sequences
+
+from .conftest import assert_df_equal
 
 
 @pytest.fixture()
@@ -49,19 +52,49 @@ def test_full_cascade_matches_direct(spark, store):
         assert direct.exceptAll(stored).count() == 0
 
 
+def _assert_chunks_match(store, tier):
+    """chunks_<tier> decoded and pivoted back equal the stored tier."""
+    from opentsdb_rollup_rust_spark.codec.gorilla import decode_chunks
+
+    dec = (
+        decode_chunks(store.read(f"chunks_{tier}"))
+        .groupBy("series_id", "window_start")
+        .pivot("agg", ["sum", "count", "min", "max"])
+        .agg(F.first("value"))
+    )
+    cols = ("series_id", "window_start", "sum", "count", "min", "max")
+    assert_df_equal(dec.select(*cols), store.read(f"rollup_{tier}").select(*cols))
+
+
+def _late_batch(spark, n, doc_offset, t0, t1):
+    """Sequences whose event time falls in [t0, t1): late data for a
+    known range."""
+    ev = F.unix_timestamp(event_time("doc_id"))
+    return synth_sequences(spark, n, doc_offset=doc_offset).where((ev >= t0) & (ev < t1))
+
+
+def _window_bounds(store, tier):
+    return store.read(f"rollup_{tier}").agg(
+        F.min(F.unix_timestamp("window_start")), F.max(F.unix_timestamp("window_start"))
+    ).first()
+
+
 def test_kill_and_resume_no_duplicates(spark, store, monkeypatch):
-    """Crash between rollup commit and chunk commit; then re-run. The
-    crash is real: the store raises on the chunks_1m append, so the
-    crashed run's lineage rows were never written either; the re-run
-    writes them under the crashed run's run_id."""
-    append = store.append
+    """Crash between the rollup splice and the chunk splice; then
+    re-run. The crash is real: the store raises on the chunks_1m splice
+    (the one call a chunk commit makes), so the crashed run's lineage
+    rows were never written either; the re-run writes them under the
+    crashed run's run_id. Then the same crash on a second source
+    snapshot: the re-run encodes only the range the rollup splice
+    recorded."""
+    replace_range = store.replace_range
 
     def crash_on_chunks(table, *a, **kw):
         if table == "chunks_1m":
             raise RuntimeError("crash before the chunk commit")
-        return append(table, *a, **kw)
+        return replace_range(table, *a, **kw)
 
-    monkeypatch.setattr(store, "append", crash_on_chunks)
+    monkeypatch.setattr(store, "replace_range", crash_on_chunks)
     with pytest.raises(RuntimeError, match="crash before the chunk commit"):
         run_rollup_job(spark, store, "1m", n_buckets=4, encode=True,
                        run_id="crashed-run")
@@ -105,14 +138,88 @@ def test_kill_and_resume_no_duplicates(spark, store, monkeypatch):
     decoded_n = decode_chunks(store.read("chunks_1m")).count()
     assert decoded_n == stored.count() * 4  # 4 aggs per window
 
+    # a second source snapshot: late data for two days, the same crash
+    lo, _ = _window_bounds(store, "1m")
+    day = 86400
+    t0 = lo // day * day + 10 * day
+    store.append("sequences", _late_batch(spark, 1500, 500, t0, t0 + 2 * day))
+    monkeypatch.setattr(store, "replace_range", crash_on_chunks)
+    with pytest.raises(RuntimeError, match="crash before the chunk commit"):
+        run_rollup_job(spark, store, "1m", n_buckets=4, run_id="crashed-run-2")
+    monkeypatch.undo()
+    snap2 = store.current_snapshot("sequences")
+    rng = next(s["range"] for s in store.snapshot_summaries("rollup_1m")
+               if s.get("src_snapshot") == snap2)
+    assert t0 <= rng[0] < rng[1] <= t0 + 2 * day  # the late batch's windows
+
+    calls = []
+
+    def record(table, *a, **kw):
+        calls.append((table, *a[:3]))
+        return replace_range(table, *a, **kw)
+
+    monkeypatch.setattr(store, "replace_range", record)
+    r3 = run_rollup_job(spark, store, "1m", n_buckets=4)
+    monkeypatch.undo()
+    assert r3.rows_out == 0 and r3.bytes_per_point > 0
+    chunk_s = DEFAULT_TIERS["1m"].chunk_seconds
+    c0, c1 = rng[0] // chunk_s * chunk_s, -(-rng[1] // chunk_s) * chunk_s
+    assert calls == [("chunks_1m", "chunk_start", c0, c1)]  # only the recorded range
+    direct = tumbling_rollup(derive_points(store.read("sequences")), "1m")
+    stored = store.read("rollup_1m").drop("bucket")
+    assert_df_equal(stored, direct)
+    _assert_chunks_match(store, "1m")
+
 
 def test_new_snapshot_triggers_reprocess(spark, store):
-    run_rollup_job(spark, store, "1m", n_buckets=4, encode=False)
-    n1 = store.read("rollup_1m").count()
-    store.append("sequences", synth_sequences(spark, 100))
-    r = run_rollup_job(spark, store, "1m", n_buckets=4, encode=False)
-    assert r.buckets_skipped == []  # new snapshot => all buckets redone
-    assert store.read("rollup_1m").count() > n1
+    """A new source snapshot splices the windows it changed into every
+    tier: after a second batch each tier equals a direct rollup of all
+    sequences (no double count), and the chunks follow."""
+    run_cascade(spark, store, n_buckets=4, encode=True)
+    store.append("sequences", synth_sequences(spark, 100, doc_offset=500))
+    results = run_cascade(spark, store, n_buckets=4, encode=True)
+    assert all(r.buckets_skipped == [] and r.rows_out > 0 for r in results)
+    pts = derive_points(store.read("sequences"))
+    for tier in ("1m", "1h", "1d"):
+        stored = store.read(f"rollup_{tier}").drop("bucket")
+        assert_df_equal(stored, tumbling_rollup(pts, tier))
+        _assert_chunks_match(store, tier)
+
+
+def test_rerun_at_other_n_buckets_writes_nothing(spark, store):
+    """Resume keys on the source snapshot alone: a re-run at n_buckets=8
+    after a run at 4 on the same snapshot commits nothing."""
+    run_rollup_job(spark, store, "1m", n_buckets=4)
+    tables = ("rollup_1m", "chunks_1m")
+    snaps = {t: store.current_snapshot(t) for t in tables}
+    rows = store.read("rollup_1m").count()
+    r = run_rollup_job(spark, store, "1m", n_buckets=8)
+    assert (r.rows_out, r.buckets_done, r.bytes_per_point) == (0, [], 0.0)
+    assert {t: store.current_snapshot(t) for t in tables} == snaps
+    assert store.read("rollup_1m").count() == rows
+
+
+def test_finer_retention_does_not_shrink_coarser_tiers(spark, store):
+    """A 1m retention and then a new source snapshot: the cascade
+    recomputes 1h and 1d only inside the late batch's range (equal to a
+    direct rollup there); their rows outside it are unchanged, though
+    the 1m rows under them are gone."""
+    run_cascade(spark, store, n_buckets=4, encode=False)
+    lo, _ = _window_bounds(store, "1d")
+    day = 86400
+    before = {t: store.read(f"rollup_{t}").drop("bucket") for t in ("1h", "1d")}
+    before = {t: spark.createDataFrame(df.collect(), df.schema) for t, df in before.items()}
+    assert apply_retention(spark, store, "1m", now_epoch=lo + 31 * day) > 0
+    t0, t1 = lo + 26 * day, lo + 28 * day  # inside what 1m keeps
+    store.append("sequences", _late_batch(spark, 1500, 500, t0, t1))
+    run_cascade(spark, store, n_buckets=4, encode=False)
+    ws = F.unix_timestamp("window_start")
+    inside = (ws >= t0) & (ws < t1)
+    pts = derive_points(store.read("sequences"))
+    for tier in ("1h", "1d"):
+        stored = store.read(f"rollup_{tier}").drop("bucket")
+        assert_df_equal(stored.where(~inside), before[tier].where(~inside))
+        assert_df_equal(stored.where(inside), tumbling_rollup(pts, tier).where(inside))
 
 
 def test_lineage_and_metrics_rows(spark, store):

@@ -9,6 +9,8 @@ so the job layer never branches on backend type.
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -121,6 +123,23 @@ def test_compact_and_replace_range_surface(spark, store):
     store.replace_range("m", "window_start", 150, 350, new)
     got = sorted(r.v for r in store.read("m").collect())
     assert got == [7, 100, 400, 1100, 1400]
+
+
+def test_replace_range_into_missing_table_is_its_first_commit(spark, store):
+    """A splice into a table with no snapshot writes what an append
+    would (same rows, same schema) and records its summary."""
+    df = spark.createDataFrame(
+        [(float(e), e) for e in (100, 200, 300)], "e double, v long"
+    ).select(F.timestamp_seconds(F.col("e")).alias("window_start"), "v")
+    store.append("a", df)
+    whole = [-math.inf, math.inf]
+    res = store.replace_range("r", "window_start", *whole, df,
+                              summary={"src_snapshot": 3, "range": whole})
+    assert store.current_snapshot("r") == res["snapshot"]
+    assert store.read("r").schema == store.read("a").schema
+    assert sorted(store.read("r").collect()) == sorted(store.read("a").collect())
+    summary = {s["id"]: s for s in store.snapshot_summaries("r")}[res["snapshot"]]
+    assert summary["src_snapshot"] == 3 and summary["range"] == whole
 
 
 def test_iceberg_create_leaves_observation_to_the_write(spark, monkeypatch):
