@@ -892,22 +892,30 @@ def pruned_read(
     table the metadata predicate is a plain column filter: it pushes
     to the scan (footer min/max row-group skip; TIMESTAMP_MICROS so
     the stats exist — see sources.store), so at 100 TB the decode cost
-    scales with |range|, not |table|.
+    scales with |range|, not |table|. It is written on the raw
+    ``chunk_start`` against timestamp literals — one (interval, span)
+    term per tier — because a predicate over ``unix_timestamp(
+    chunk_start)`` cannot push.
     """
+    from functools import reduce
+
     from pyspark.sql import functions as F
 
-    span = F.element_at(
-        F.create_map(
-            *[
-                x
+    cs = F.col("chunk_start")
+
+    def at(sec: int):
+        return F.timestamp_seconds(F.lit(sec))
+
+    kept = chunks.filter(
+        (cs < at(t1))
+        & reduce(
+            lambda a, b: a | b,
+            [
+                (F.col("interval") == k) & (cs > at(t0 - v * chunk_points))
                 for k, v in INTERVAL_SECONDS.items()
-                for x in (F.lit(k), F.lit(v * chunk_points))
-            ]
-        ),
-        F.col("interval"),
-    ).cast("long")
-    cs = F.unix_timestamp("chunk_start").cast("long")
-    kept = chunks.filter((cs < F.lit(t1)) & (cs + span > F.lit(t0)))
+            ],
+        )
+    )
     dec = decode_chunks(kept)
     ws = F.unix_timestamp("window_start").cast("long")
     return dec.filter((ws >= F.lit(t0)) & (ws < F.lit(t1)))

@@ -2,9 +2,9 @@
 
 Fill policies mirror the OpenTSDB downsampler fill policies
 (docs.opentsdb.net "Downsampling"):
-  none  — missing windows absent (no spine join at all)
+  none  — missing windows absent (no fill pass at all)
   zero  — value columns 0, count 0
-  null  — spine row present, typed nulls
+  null  — filled row present, typed nulls
   nan   — query-output render: missing values as NaN doubles (count 0)
   ffill — forward-fill: carry last observed value per series
   interp — linear interpolation between the bracketing observed
@@ -12,158 +12,152 @@ Fill policies mirror the OpenTSDB downsampler fill policies
           EXACT integer arithmetic: floor-division lerp so Spark and
           any ANSI-SQL oracle agree bit-for-bit (no float division)
 
-Step 1 (J1): dense per-series window spine LEFT JOIN observed windows.
-The spine is generated with sequence()+explode over each series' own
-[min, max] window range — distributed, proportional to output size,
-no driver loop. Step 2 (W1/J2): forward-fill is a window function
-(last ignorenulls over unbounded-preceding row frame) — the as-of-join
-semantics without a join.
+One kernel (``fill_gaps``) serves every fill, here and in
+``/api/query`` (plans/api_query.api_query_finish): each observed row
+emits itself plus the gap up to the next observed row of its series,
+as one ``explode(sequence(...))``. The row's neighbours come from one
+window over the series keys ordered by time, so a fill is one
+(series)-partitioned sort over the observed rows — one scan of the
+input, no spine, no join, nothing persisted.
 
-Scale note: the spine explode produces |series| x |windows| rows — the
-same cardinality the fill output must have, so it cannot be avoided;
-it shuffles once on (series_id) for the window function. For zero/null
-fill there is no window function and the left join is a plain
-shuffle-hash/SMJ on (series_id, window_start).
+Scale note: the explode produces |series| x |windows| rows — the
+same cardinality the fill output must have, so it cannot be avoided.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import STORED_AGGS, resolve_interval_seconds
-from .rollup import ROLLUP_COLS
 
 FILL_POLICIES = ("none", "zero", "null", "nan", "ffill", "interp")
 
 
-def window_spine(rollup: DataFrame, interval: str) -> DataFrame:
-    """Dense (series_id, window_start) spine spanning each series'
-    observed [min, max] window range at ``interval``."""
-    sec = resolve_interval_seconds(interval)
-    bounds = rollup.groupBy("series_id").agg(
-        F.min("window_start").alias("w0"), F.max("window_start").alias("w1")
-    )
-    return bounds.select(
-        "series_id",
-        F.explode(
-            F.sequence(
-                F.col("w0"),
-                F.col("w1"),
-                F.expr(f"INTERVAL {sec} SECONDS"),
-            )
-        ).alias("window_start"),
-    )
-
-
 def gap_fill(rollup: DataFrame, interval: str, policy: str = "zero") -> DataFrame:
-    """Fill missing windows of a single-interval rollup frame."""
+    """Fill missing windows of a single-interval rollup frame, each
+    series between its own first and last window."""
     if policy not in FILL_POLICIES:
         raise ValueError(f"unknown fill policy {policy!r}")
     if policy == "none":
         return rollup
-
-    spine = window_spine(rollup, interval)
-    joined = spine.join(
-        rollup.drop("interval"), ["series_id", "window_start"], "left"
-    ).withColumn("interval", F.lit(interval))
-
-    if policy == "null":
-        return joined.select(*ROLLUP_COLS)
+    # interp leaves count out of the lerp: interpolating an event count
+    # is meaningless, so a filled window keeps the count-0 marker that
+    # zero and nan give it too
+    cols = ("sum", "min", "max") if policy == "interp" else STORED_AGGS
+    out = fill_gaps(
+        rollup.select(
+            "series_id", F.unix_timestamp("window_start").alias("_t"), *STORED_AGGS
+        ),
+        ["series_id"],
+        "_t",
+        cols,
+        resolve_interval_seconds(interval),
+        {"nan": "null", "interp": "linear"}.get(policy, policy),
+    )
+    vals = {c: F.col(c) for c in STORED_AGGS}
+    if policy in ("nan", "interp"):
+        vals["count"] = F.coalesce("count", F.lit(0).cast("long"))
     if policy == "nan":
         # OpenTSDB's NaN fill is query-output semantics: missing values
         # surface as NaN doubles (count stays an exact 0 long). Never
         # stored — tiers keep exact longs; this is a read-path render.
-        nan = F.lit(float("nan"))
-        return joined.select(
-            "series_id",
-            "window_start",
-            "interval",
-            F.coalesce(F.col("sum").cast("double"), nan).alias("sum"),
-            F.coalesce("count", F.lit(0).cast("long")).alias("count"),
-            F.coalesce(F.col("min").cast("double"), nan).alias("min"),
-            F.coalesce(F.col("max").cast("double"), nan).alias("max"),
-        )
-    if policy == "zero":
-        # count 0 marks the window as synthetic; min/max 0 matches the
-        # OpenTSDB zero-fill (NaN-free numeric zero substitution).
-        return joined.select(
-            "series_id",
-            "window_start",
-            "interval",
-            F.coalesce("sum", F.lit(0).cast("long")).alias("sum"),
-            F.coalesce("count", F.lit(0).cast("long")).alias("count"),
-            F.coalesce("min", F.lit(0).cast("long")).alias("min"),
-            F.coalesce("max", F.lit(0).cast("long")).alias("max"),
-        )
-    if policy == "ffill":
-        w = (
-            Window.partitionBy("series_id")
-            .orderBy("window_start")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        out = joined
-        for c in STORED_AGGS:
-            out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))
-        return out.select(*ROLLUP_COLS)
-    # interp — integer lerp between the bracketing observed windows.
-    # The spine spans each series' OWN [min, max] observed range, so
-    # every synthetic window has both a previous and a next
-    # observation; no edge-null handling is needed. count stays 0 on
-    # synthetic windows (the same "this row was made up" marker the
-    # zero policy uses) — interpolating an event count is meaningless.
-    #
-    # Exactness discipline (memory: cross-engine-exactness): the lerp
-    # uses FLOOR division implemented purely in int64 —
-    #   prev + (next - prev) * dt_num // dt_den
-    # with // as floor via pmod: (a - pmod(a, b)) / b is an exact
-    # multiple, so the final divide is exact in any engine; Spark's
-    # `div` truncation never sees a negative exact-multiple mismatch.
-    wprev = (
-        Window.partitionBy("series_id")
-        .orderBy("window_start")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wnext = (
-        Window.partitionBy("series_id")
-        .orderBy("window_start")
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-    ws = F.unix_timestamp("window_start").cast("long")
-    observed = F.col("count").isNotNull()
-    out = joined.withColumn("_ws", ws)
-    out = out.withColumn(
-        "_pt", F.last(F.when(observed, F.col("_ws")), ignorenulls=True).over(wprev)
-    ).withColumn(
-        "_nt", F.first(F.when(observed, F.col("_ws")), ignorenulls=True).over(wnext)
-    )
-    out = out.withColumn("_den", F.col("_nt") - F.col("_pt"))
-    for c in ("sum", "min", "max"):
-        out = (
-            out.withColumn(f"_p_{c}", F.last(c, ignorenulls=True).over(wprev))
-            .withColumn(f"_n_{c}", F.first(c, ignorenulls=True).over(wnext))
-            .withColumn(
-                f"_num_{c}",
-                (F.col(f"_n_{c}") - F.col(f"_p_{c}"))
-                * (F.col("_ws") - F.col("_pt")),
-            )
-        )
-
-    def _lerp(c: str) -> F.Column:
-        # `div` is Spark's bigint division (truncating); fed an exact
-        # floor multiple it IS floor division, and it never leaves int64
-        # (a double `/` would go lossy past 2^53).
-        fdiv = F.expr(f"(_num_{c} - pmod(_num_{c}, _den)) div _den")
-        return (
-            F.when(observed, F.col(c)).otherwise(F.col(f"_p_{c}") + fdiv).alias(c)
-        )
-
+        for c in ("sum", "min", "max"):
+            vals[c] = F.coalesce(F.col(c).cast("double"), F.lit(float("nan")))
+    ts_type = rollup.schema["window_start"].dataType
     return out.select(
         "series_id",
-        "window_start",
-        "interval",
-        _lerp("sum"),
-        F.coalesce("count", F.lit(0).cast("long")).alias("count"),
-        _lerp("min"),
-        _lerp("max"),
+        F.timestamp_seconds("_t").cast(ts_type).alias("window_start"),
+        F.lit(interval).alias("interval"),
+        *(vals[c].alias(c) for c in STORED_AGGS),
     )
+
+
+def fill_gaps(
+    df: DataFrame,
+    keys: Sequence[str],
+    t: str,
+    cols: Sequence[str],
+    step: int,
+    policy: str,
+    lo: int | None = None,
+    hi: int | None = None,
+) -> DataFrame:
+    """Fill every missing ``step`` of each series in one pass.
+
+    ``df`` has one row per (``keys``, ``t``); ``t`` is an epoch-second
+    long aligned to ``step``. Each row emits its own ``t`` (with its
+    own values) and every ``t`` up to, not including, the next row of
+    its series. A series' first row also emits back to ``lo`` and its
+    last row up to ``hi``, when given; otherwise a series is filled
+    between its own first and last row. On an emitted ``t`` that is
+    not the row's own, each column of ``cols`` is
+
+    - ``zero``: 0;
+    - ``null``: null;
+    - ``ffill``: the row's value (null before the first row);
+    - ``linear``: the floor lerp between the row and the next one of
+      its series, in exact int64 (null before the first row and after
+      the last).
+
+    Every other column of ``df`` keeps its value on the row's own ``t``
+    and is null on the rows it emits. The output has ``df``'s columns.
+    """
+    if policy not in ("zero", "null", "ffill", "linear"):
+        raise ValueError(f"unknown fill policy {policy!r}")
+    keys, cols = list(keys), list(cols)
+    w = Window.partitionBy(*keys).orderBy(t)
+    # Spark rejects window functions inside a generator, so each row's
+    # neighbours become columns of a select before the explode
+    nb = df.select(
+        "*",
+        F.lag(t).over(w).alias("_pt"),
+        F.lead(t).over(w).alias("_nt"),
+        *(F.lead(c).over(w).alias(f"_n_{c}") for c in cols if policy == "linear"),
+    )
+    own = F.col(t)
+    start = own
+    if lo is not None:
+        start = F.when(F.col("_pt").isNull(), F.least(F.lit(lo), own)).otherwise(own)
+    last_end = own if hi is None else F.greatest(F.lit(hi), own)
+    # a duplicate (keys, t) makes the next t this t: the clamp keeps
+    # sequence's end >= start, so the row emits itself and never raises
+    end = F.greatest(F.coalesce(F.col("_nt") - F.lit(step), last_end), own)
+    seq = F.sequence(start, end, F.lit(step).cast("long"))
+    staged = nb.select("*", F.explode(seq).alias("_ft"))
+    ft, is_own = F.col("_ft"), F.col("_ft") == own
+
+    def filled(c: str) -> Column:
+        v = F.col(c)
+        if policy == "zero":
+            return F.when(is_own, v).otherwise(F.lit(0).cast("long"))
+        if policy == "ffill":
+            return F.when(ft >= own, v)
+        if policy == "linear":
+            lerp = _floor_lerp(f"`{c}`", f"`_n_{c}`", f"`{t}`", "_nt", "_ft")
+            return F.when(is_own, v).when(ft > own, F.expr(lerp))
+        return F.when(is_own, v)
+
+    return staged.select(
+        *[
+            ft.alias(t) if c == t
+            else c if c in keys
+            else filled(c).alias(c) if c in cols
+            else F.when(is_own, F.col(c)).alias(c)
+            for c in df.columns
+        ]
+    )
+
+
+def _floor_lerp(v0: str, v1: str, t0: str, t1: str, t: str) -> str:
+    """SQL for ``v0 + (v1 - v0) * (t - t0) // (t1 - t0)`` with Python's
+    floor ``//``, in int64 only. ``a - pmod(a, b)`` is an exact
+    multiple of ``b`` (pmod takes the divisor's sign), so the
+    truncating ``div`` of it IS floor division — the rule the DuckDB
+    oracle reproduces bit-for-bit, where a double ``/`` would go lossy
+    past 2^53."""
+    num = f"(({v1} - {v0}) * ({t} - {t0}))"
+    den = f"({t1} - {t0})"
+    return f"{v0} + ({num} - pmod({num}, {den})) div {den}"

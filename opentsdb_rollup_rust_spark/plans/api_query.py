@@ -29,11 +29,12 @@ filter + narrow projection (groupBy tag values extracted from the
 map BEFORE any shuffle, the tag map itself never leaves the scan
 stage). Shuffle #1 is the per-series downsample — keyed by (series
 identity, bucket), i.e. the already-aggregated cardinality. Every
-later step (fill spine join, cross-series aggregation, the rate
-window) runs on downsampled rows: |series x buckets|, independent of
-raw point count. Fill's spine is generated from the group's own
-distinct-series set (an aggregate of shuffle #1's output), so no
-driver collect and no magic dimension table.
+later step (fill, cross-series aggregation, the rate window) runs on
+downsampled rows: |series x buckets|, independent of raw point
+count. Fill is one series-keyed pass over shuffle #1's output
+(operators/gapfill.fill_gaps): each observed bucket emits itself and
+the gap up to its series' next one, so there is no driver collect, no
+dimension table, no join and nothing persisted.
 
 Cross-engine exactness (the repo-wide oracle discipline): values stay
 int64 end to end; `avg` (downsample or aggregator) and `rate` are
@@ -51,6 +52,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import STORED_AGGS, resolve_interval_seconds
+from ..operators.gapfill import fill_gaps
 from ..operators.rollup import STORED_RULE, stored_aggs
 from ..operators.tagquery import (
     TagFilter,
@@ -872,102 +874,25 @@ def api_query_finish(per_series: DataFrame, spec: QuerySpec) -> DataFrame:
     sec = _ds_seconds(spec)
     group_tags = _group_tag_keys(spec)
 
-    # --- 4. fill: dense bucket spine over the ALIGNED QUERY RANGE per
-    # observed series (not per-series observed min/max — every series
-    # of a group must share buckets or the cross-series aggregate
-    # silently skews). Spine cardinality = |series| x |buckets|.
+    # --- 4. fill over the ALIGNED QUERY RANGE per observed series
+    # (not per-series observed min/max — every series of a group must
+    # share buckets or the cross-series aggregate silently skews):
+    # |series| x |buckets| rows out of one series-keyed pass
+    # (operators/gapfill.fill_gaps). "null" keeps nulls and "linear"
+    # leaves them off a series' observed edges; both fall out of the
+    # null-skipping aggregates below (OpenTSDB's null render policy,
+    # and OpenTSDB emits nothing off the edges either).
     if ds.fill != "none":
-        # the fill consumes per_series TWICE (spine's distinct-series
-        # set + the join probe). Catalyst cannot reuse the exchange
-        # across the two branches — column pruning gives the spine
-        # branch a narrower aggregate, so without this persist the RAW
-        # SCAN runs twice (verified on the executed plan). Persisting
-        # the downsampled intermediate (|series x buckets| rows — the
-        # query's own output cardinality, orders of magnitude below
-        # the raw stream) caps the plan at one raw scan; lazy, spills
-        # to disk, evictable.
-        per_series = per_series.persist()
         if _is_0all(spec):
             # single whole-range bucket anchored at start
             first_b = last_b = spec.start
         else:
             first_b = spec.start // sec * sec
             last_b = (spec.end - 1) // sec * sec
-        series_dim = per_series.select(*group_tags, "_series").distinct()
-        spine = series_dim.select(
-            *group_tags,
-            "_series",
-            F.explode(
-                F.sequence(
-                    F.lit(first_b).cast("long"),
-                    F.lit(last_b).cast("long"),
-                    F.lit(sec).cast("long"),
-                )
-            ).alias("w_start"),
+        per_series = fill_gaps(
+            per_series, [*group_tags, "_series"], "w_start", ["v"], sec,
+            ds.fill, lo=first_b, hi=last_b,
         )
-        filled = spine.join(
-            per_series, [*group_tags, "_series", "w_start"], "left"
-        )
-        if ds.fill == "zero":
-            filled = filled.withColumn(
-                "v", F.coalesce("v", F.lit(0).cast("long"))
-            )
-        elif ds.fill == "ffill":
-            wf = (
-                Window.partitionBy(*group_tags, "_series")
-                .orderBy("w_start")
-                .rowsBetween(Window.unboundedPreceding, 0)
-            )
-            filled = filled.withColumn("v", F.last("v", ignorenulls=True).over(wf))
-        elif ds.fill == "linear":
-            # OpenTSDB's linear fill policy: lerp between the
-            # bracketing observed buckets of the SAME series; spine
-            # buckets before a series' first / after its last
-            # observation stay null (they fall out of the null-
-            # skipping aggregates — OpenTSDB emits nothing there
-            # either). Exactness discipline (the J2b gapfill rule):
-            # pure-int64 floor lerp — prev + (next-prev)*dt // den
-            # with // as floor via pmod, so DuckDB reproduces it
-            # bit-for-bit. An observed bucket degenerates to its own
-            # value (dt = 0), so no observed/synthetic branch needed.
-            wp = (
-                Window.partitionBy(*group_tags, "_series")
-                .orderBy("w_start")
-                .rowsBetween(Window.unboundedPreceding, 0)
-            )
-            wn = (
-                Window.partitionBy(*group_tags, "_series")
-                .orderBy("w_start")
-                .rowsBetween(0, Window.unboundedFollowing)
-            )
-            obs_w = F.when(F.col("v").isNotNull(), F.col("w_start"))
-            filled = (
-                filled.withColumn("_pt", F.last(obs_w, ignorenulls=True).over(wp))
-                .withColumn("_nt", F.first(obs_w, ignorenulls=True).over(wn))
-                .withColumn("_pv", F.last("v", ignorenulls=True).over(wp))
-                .withColumn("_nv", F.first("v", ignorenulls=True).over(wn))
-            )
-            num = (F.col("_nv") - F.col("_pv")) * (
-                F.col("w_start") - F.col("_pt")
-            )
-            den = F.col("_nt") - F.col("_pt")
-            lerp = F.col("_pv") + F.expr(
-                "(_lnum - pmod(_lnum, _lden)) div _lden"
-            )
-            filled = (
-                filled.withColumn("_lnum", num)
-                .withColumn("_lden", den)
-                .withColumn(
-                    "v",
-                    F.when(F.col("v").isNotNull(), F.col("v")).otherwise(
-                        F.when(den > 0, lerp)  # null off both edges
-                    ),
-                )
-                .drop("_pt", "_nt", "_pv", "_nv", "_lnum", "_lden")
-            )
-        # "null": keep nulls; they fall out of the null-skipping
-        # aggregates below (OpenTSDB's null render policy)
-        per_series = filled
 
     # --- 5. aggregation across the series of each group, per bucket.
     # aggregator "none" (OpenTSDB's no-aggregation mode) skips the
@@ -1524,8 +1449,8 @@ def gexp_apply(
                 )
             # roster + stream both consume `out`: without a persist
             # the whole upstream composition (raw scan included) runs
-            # twice — the same column-pruning-diverges-the-branches
-            # reuse failure the fill spine hit (see api_query_finish).
+            # twice: column pruning diverges the two branches, so
+            # Catalyst cannot reuse one exchange for both.
             # |groups x buckets| rows: lazy, evictable, output-sized.
             out = out.persist()
             roster = out.agg(

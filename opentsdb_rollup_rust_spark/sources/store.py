@@ -14,8 +14,8 @@ job needs (BASELINE.json:6 "resumable from Iceberg-snapshot
 checkpoints").
 
 Every write is one file-level rewrite of a snapshot, as in Iceberg:
-`ManifestStore` has one commit path (`_commit`) under append,
-overwrite and the maintenance ops, and one classifier (`_classify`)
+`ManifestStore` has one commit path (`_commit`) under append and
+the maintenance ops, and one classifier (`_classify`)
 under one range splice (`_splice_range`). Every tier write
 (`replace_range`, from the job and from a backfill) is a splice that
 inserts new rows; retention (`prune_older_than`) is a splice with an
@@ -40,7 +40,8 @@ directories, and each listed file has an entry in ``files``.
 
 Cluster note: on a real deployment `ManifestStore` is swapped for an
 Iceberg catalog with zero changes to callers — the surface is
-append / overwrite / read(snapshot_id) / current_snapshot.
+append / replace_range / read(snapshot_id) / current_snapshot and the
+maintenance ops.
 """
 
 from __future__ import annotations
@@ -273,10 +274,6 @@ class ManifestStore:
             if s["id"] == snap_id:
                 return self._reader(m).parquet(*s["new_paths"])
         raise KeyError(f"snapshot {snap_id} not found")
-
-    def overwrite(self, table: str, df: DataFrame) -> int:
-        """New snapshot replacing the whole table (retention rewrite)."""
-        return self._commit(table, df, keep=[])
 
     def _snapshot_paths(self, manifest: dict, snap_id: int | None) -> list[str]:
         if snap_id is None:
@@ -743,7 +740,8 @@ class IcebergStore:
                              rewrites only straddlers — the same
                              file-granularity behavior ManifestStore
                              implements by hand over parquet footers
-      overwrite           -> createOrReplace
+      replace_range       -> writeTo(t).overwrite(cond), the
+                             overwrite-by-filter the splice mirrors
 
     Requires a configured catalog, e.g.::
 
@@ -864,12 +862,6 @@ class IcebergStore:
         return self.spark.read.option("snapshot-id", str(snap_id)).table(
             self._qual(table)
         )
-
-    def overwrite(self, table: str, df: DataFrame) -> int:
-        df.writeTo(self._qual(table)).createOrReplace()
-        snap = self.current_snapshot(table)
-        assert snap is not None
-        return snap
 
     def prune_older_than(self, table: str, ts_col: str, cutoff_epoch: int) -> dict:
         from datetime import datetime, timezone

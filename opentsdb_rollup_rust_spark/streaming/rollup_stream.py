@@ -144,9 +144,9 @@ def streaming_api_query_downsample(
     downsample) as one watermarked streaming aggregation, emitting
     exactly the per-series frame (*group tags, _series, w_start, v)
     that plans.api_query.api_query_finish consumes. The read-side
-    stages (fill spine, cross-series aggregate, rate) are NOT
+    stages (fill, cross-series aggregate, rate) are NOT
     streamable as a second aggregation in the same query (Spark
-    forbids chained streaming aggs, and the fill spine needs the
+    forbids chained streaming aggs, and the fill needs the
     completed bucket set anyway), and they don't need to be: reads
     finish the materialized frame through the SAME api_query_finish
     code path as the batch endpoint, so the split point is the one

@@ -1333,12 +1333,12 @@ def test_parse_query_json_percent_aggregator_names():
 
 
 def test_single_scan_persists_pinned_in_plan(spark):
-    """The two reuse-failure fixes stay fixed: with fill on, the
-    spine/probe branches must read the persisted per-series frame
-    (InMemoryTableScan), and a gexp selector/combiner must read its
-    persisted output rather than recomputing the composition — column
-    pruning diverges the branches, so without the persists the raw
-    scan runs twice (verified during development; this pins it)."""
+    """The raw point frame is scanned once. With fill on, the fill is
+    one series-keyed pass over the downsampled frame (one scan, nothing
+    persisted); a gexp selector/combiner must read its persisted
+    output rather than recomputing the composition — column pruning
+    diverges its branches, so without the persist the raw scan runs
+    twice (verified during development; this pins it)."""
     from opentsdb_rollup_rust_spark.plans.api_query import api_query_gexp
 
     rows = [
@@ -1357,12 +1357,44 @@ def test_single_scan_persists_pinned_in_plan(spark):
     filled = api_query(_pts(spark, rows), spec)
     filled.write.format("noop").mode("overwrite").save()
     plan = filled._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= 2  # spine dim + probe
+    assert plan.count("Scan ExistingRDD") == 1, plan
+    assert "InMemoryTableScan" not in plan, plan
 
     sel = api_query_gexp(_pts(spark, rows), spec, (("highestMax", 1),))
     sel.write.format("noop").mode("overwrite").save()
     plan = sel._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan  # ranking + semi-join share it
+
+
+def test_fill_leaves_no_cache_entry(spark, tmp_path):
+    """A fill persists nothing: after /api/query requests under zero,
+    ffill and linear fill and a filled read_rollup, the session's
+    cache is as empty as before them (a leaked entry would also be
+    matched, and read, by every later query with the same plan)."""
+    from opentsdb_rollup_rust_spark.operators.rollup import tumbling_rollup
+    from opentsdb_rollup_rust_spark.plans.tier_router import read_rollup
+    from opentsdb_rollup_rust_spark.sources.store import ManifestStore
+
+    pts = _pts(
+        spark,
+        [("m", 0, 10, HOST_A), ("m", 180, 16, HOST_A), ("m", 60, 50, HOST_B)],
+    )
+    spark.catalog.clearCache()  # cached fixtures and earlier gexp requests
+    for fill in ("zero", "ffill", "linear"):
+        spec = QuerySpec(
+            metric="m",
+            start=0,
+            end=240,
+            aggregator="sum",
+            filters=(TagFilter("iwildcard", "host", "*", group_by=True),),
+            downsample=Downsample("1m", "sum", fill=fill),
+        )
+        api_query(pts, spec).collect()
+    store = ManifestStore(spark, str(tmp_path / "store"))
+    store.append("rollup_1m", tumbling_rollup(pts, "1m"))
+    # the metric's windows 0, 1 and 3, with window 2 filled
+    assert read_rollup(store, 60, fill="zero").count() == 4
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_hist_tsuid_and_0all_modes(spark):

@@ -2,11 +2,18 @@
 downsampler fill policies): one series, windows {0,1,4,5}, gaps {2,3}."""
 
 import datetime as dt
+import math
+from functools import reduce
 
+import pandas as pd
 import pytest
+from hypothesis import example, given, settings, strategies as st
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from opentsdb_rollup_rust_spark.config import STORED_AGGS as STORED
 from opentsdb_rollup_rust_spark.operators.gapfill import gap_fill
+from opentsdb_rollup_rust_spark.operators.tagquery import TagFilter
 
 BASE = dt.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -158,13 +165,31 @@ def test_interp_property_random_sparse_series(spark):
 
 
 def test_interp_plan_single_shuffle(points_1h):
-    # The two neighbor-search frames share one (series_id)-partitioned
-    # sort, so the whole fill must cost exactly ONE exchange beyond the
-    # rollup's own aggregation — a second would mean the backward and
-    # forward windows repartitioned independently.
-    plan = gap_fill(points_1h, "1h", "interp")._jdf.queryExecution().executedPlan().toString()
+    # The fill kernel's neighbours (lag, lead) share one
+    # (series_id)-partitioned sort, so the whole fill costs exactly ONE
+    # exchange — no spine, no join, no exchange per window frame. The
+    # round-robin input makes that exchange needed: a one-partition
+    # frame (this fixture's) is already clustered by any key.
+    spread = points_1h.repartition(4)
+    plan = gap_fill(spread, "1h", "interp")._jdf.queryExecution().executedPlan().toString()
     n_exchanges = plan.count("Exchange hashpartitioning(series_id")
-    assert n_exchanges <= 2, plan  # spine/join + window; never one per frame
+    assert n_exchanges == 1, plan
+
+
+def test_read_rollup_fill_scans_tier_once(spark, points_1h, tmp_path):
+    # each observed row emits its own gap, so the fill needs no bounds
+    # aggregate joined back to the rows: the tier is read by one scan
+    from opentsdb_rollup_rust_spark.plans.tier_router import read_rollup
+    from opentsdb_rollup_rust_spark.sources.store import ManifestStore
+
+    store = ManifestStore(spark, str(tmp_path / "store"))
+    store.append("rollup_1h", points_1h)
+    for fill in ("zero", "ffill", "interp"):
+        df = read_rollup(store, 3600, fill=fill)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == 1, plan
+        assert "Join" not in plan, plan
+        assert df.count() == gap_fill(points_1h, "1h", fill).count()
 
 
 def test_calendar_rollup_cascade_matches_direct(points):
@@ -293,3 +318,161 @@ def test_asof_join_rejects_colliding_fact_columns(spark):
         )
         with _pt.raises(ValueError, match="collide"):
             asof_join(facts, dims, fact_ts="ts_e")
+
+
+# --- differential: the fill kernel against a pandas recompute ---------
+
+T0 = 1704067200  # aligned to every step used below
+STEP = 60
+POLICIES = ("zero", "null", "nan", "ffill", "interp")
+
+
+def _lerp(v0, v1, i0, i1, i):
+    return v0 + (v1 - v0) * (i - i0) * STEP // ((i1 - i0) * STEP)
+
+
+def _expect_series(obs: dict, lo: int, hi: int, policy: str) -> dict:
+    """{window index: value} of one filled series over [lo, hi]."""
+    s = pd.Series(obs, dtype="float64").sort_index()
+    idx = s.index.tolist()
+    out = {}
+    for i in range(lo, hi + 1):
+        if i in obs:
+            out[i] = obs[i]
+        elif policy == "zero":
+            out[i] = 0
+        elif policy == "ffill":
+            prev = s[s.index < i]
+            out[i] = None if prev.empty else int(prev.iloc[-1])
+        elif policy in ("linear", "interp"):
+            before = [j for j in idx if j < i]
+            after = [j for j in idx if j > i]
+            out[i] = (
+                _lerp(obs[before[-1]], obs[after[0]], before[-1], after[0], i)
+                if before and after
+                else None
+            )
+        else:
+            out[i] = None
+    return out
+
+
+_series_st = st.dictionaries(
+    st.tuples(st.sampled_from("ab"), st.sampled_from(["r0", "r1", "r2"])),
+    st.dictionaries(st.integers(0, 11), st.integers(-1000, 1000), min_size=1, max_size=8),
+    max_size=5,
+)
+
+
+@settings(max_examples=6, deadline=None)
+@given(data=_series_st, lo=st.integers(-3, 0), hi=st.integers(11, 14), all0=st.booleans())
+@example(data={}, lo=-2, hi=13, all0=False)  # no series observed anything
+@example(data={("a", "r0"): {5: 7}}, lo=-2, hi=13, all0=False)  # one row
+@example(data={("a", "r0"): {0: 1, 11: 2}, ("b", "r1"): {3: 4}}, lo=0, hi=11, all0=True)
+def test_fill_kernel_differential(spark, data, lo, hi, all0):
+    """Every gap_fill policy (each series between its own first and
+    last window) and every /api/query fill (each series over the
+    aligned query range, edges unobserved when the range is wider than
+    the data; 0all is one bucket at start) equals a pandas recompute."""
+    from opentsdb_rollup_rust_spark.plans.api_query import (
+        Downsample,
+        QuerySpec,
+        api_query_finish,
+    )
+
+    if all0:  # one whole-range bucket: each series' one row at start
+        data = {k: {lo: next(iter(obs.values()))} for k, obs in data.items()}
+    rows = [(h, r, i, v) for (h, r), obs in data.items() for i, v in obs.items()]
+    base = spark.createDataFrame(rows, "host string, rack string, i int, v long")
+    ws = F.timestamp_seconds(F.lit(T0) + F.col("i") * STEP)
+
+    # gap_fill: one frame per series, sum/min/max distinct per row
+    rollup = base.select(
+        F.concat_ws("|", "host", "rack").alias("series_id"),
+        ws.alias("window_start"),
+        F.lit("1m").alias("interval"),
+        F.col("v").alias("sum"),
+        (F.abs("v") % 7 + 1).cast("long").alias("count"),
+        (F.col("v") - 3).alias("min"),
+        (F.col("v") * 2).alias("max"),
+    )
+    # one job per example: every policy's output in one union (doubles
+    # hold these values exactly, and nan's NaN)
+    filled = reduce(
+        DataFrame.unionByName,
+        [
+            gap_fill(rollup, "1m", pol).select(
+                F.lit(pol).alias("pol"),
+                "series_id",
+                F.expr(f"(unix_timestamp(window_start) - {T0}) div {STEP}").alias("i"),
+                *(F.col(c).cast("double").alias(c) for c in STORED),
+            )
+            for pol in POLICIES
+        ],
+    )
+    got = {
+        (r.pol, r.series_id, r.i): tuple(
+            None if x is None else "nan" if math.isnan(x) else int(x)
+            for x in (r[c] for c in STORED)
+        )
+        for r in filled.collect()
+    }
+    want = {}
+    for (h, rk), obs in data.items():
+        sid = f"{h}|{rk}"
+        lo_s, hi_s = min(obs), max(obs)
+        cols = {
+            "sum": obs,
+            "count": {i: abs(v) % 7 + 1 for i, v in obs.items()},
+            "min": {i: v - 3 for i, v in obs.items()},
+            "max": {i: v * 2 for i, v in obs.items()},
+        }
+        for pol in POLICIES:
+            kern = {"nan": "null"}.get(pol, pol)
+            exp = {c: _expect_series(o, lo_s, hi_s, kern) for c, o in cols.items()}
+            for i in range(lo_s, hi_s + 1):
+                vals = [exp[c][i] for c in STORED]
+                if i not in obs and pol in ("nan", "interp"):
+                    vals[1] = 0  # a filled window's count marker
+                if pol == "nan":
+                    vals = [("nan" if x is None else x) for x in vals]
+                want[(pol, sid, i)] = tuple(vals)
+    assert got == want
+
+    # /api/query fill: aggregator "none" passes the filled per-series
+    # frame through, so each filled bucket is observable
+    start, end = T0 + lo * STEP, T0 + (hi + 1) * STEP
+    per_series = base.select(
+        "host",
+        F.concat_ws("|", "host", "rack").alias("_series"),
+        (F.lit(T0) + F.col("i") * STEP).cast("long").alias("w_start"),
+        "v",
+    )
+    specs = {
+        fill: QuerySpec(
+            metric="m",
+            start=start,
+            end=end,
+            aggregator="none",
+            filters=(TagFilter("wildcard", "host", "*", group_by=True),),
+            downsample=Downsample("0all" if all0 else "1m", "sum", fill=fill),
+        )
+        for fill in ("zero", "null", "ffill", "linear")
+    }
+    out = reduce(
+        DataFrame.unionByName,
+        [
+            api_query_finish(per_series, spec).withColumn("fill", F.lit(fill))
+            for fill, spec in specs.items()
+        ],
+    )
+    got = {
+        (r.fill, r.series, (r.w_start - T0) // STEP): r.value for r in out.collect()
+    }
+    want = {
+        (fill, f"{h}|{rk}", i): v
+        for fill in specs
+        for (h, rk), obs in data.items()
+        for i, v in _expect_series(obs, lo, lo if all0 else hi, fill).items()
+    }
+    assert got == want

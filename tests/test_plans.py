@@ -343,6 +343,42 @@ def test_tag_read_partition_pruned(spark, tmp_path_factory):
     assert q.collect()[0]["s"] > 0
 
 
+def test_pruned_read_chunk_filter_pushed_to_scan(spark, tmp_path_factory):
+    """pruned_read's chunk prune is written on the raw chunk_start, so
+    it reaches the parquet scan's PushedFilters (row-group skipping);
+    and it only prunes: the range read equals decoding every chunk and
+    keeping the range."""
+    from opentsdb_rollup_rust_spark.codec.gorilla import (
+        decode_chunks,
+        encode_chunks,
+        pruned_read,
+    )
+
+    from .conftest import assert_df_equal
+
+    def rollup(interval, sec, n):
+        return spark.range(0, n, 1, 2).select(
+            F.concat(F.lit("s"), (F.col("id") % 3).cast("string")).alias("series_id"),
+            F.timestamp_seconds(F.lit(1704067200) + F.col("id") * sec).alias("window_start"),
+            F.lit(interval).alias("interval"),
+            *(F.col("id").alias(c) for c in ("sum", "count", "min", "max")),
+        )
+
+    path = str(tmp_path_factory.mktemp("chunks")) + "/chunks.parquet"
+    encode_chunks(rollup("1m", 60, 3000), "1m", chunk_points=64).unionByName(
+        encode_chunks(rollup("1h", 3600, 300), "1h", chunk_points=64)
+    ).write.parquet(path)
+    chunks = spark.read.parquet(path)
+    t0, t1 = 1704067200 + 20 * 3600, 1704067200 + 30 * 3600 + 17
+    got = pruned_read(chunks, t0, t1, chunk_points=64)
+    pushed = [ln for ln in plan_of(got).splitlines() if "PushedFilters" in ln]
+    assert pushed and "chunk_start" in pushed[0], pushed
+    ws = F.unix_timestamp("window_start")
+    want = decode_chunks(chunks).where((ws >= t0) & (ws < t1))
+    assert got.count() > 0
+    assert_df_equal(got, want)
+
+
 def test_queries_ordered_oldest_driver_evidence_first(tmp_path):
     """The driver samples the first 50 queries() keys: keys no
     CORRECTNESS_r<N>.json round checked come first, then by the last

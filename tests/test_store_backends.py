@@ -23,7 +23,6 @@ from opentsdb_rollup_rust_spark.sources.store import (
 
 SURFACE = (
     "append",
-    "overwrite",
     "read",
     "read_snapshot_delta",
     "current_snapshot",
@@ -79,12 +78,6 @@ def test_empty_read_needs_schema(spark, store):
         store.read("missing")
     empty = store.read("missing", schema="k long, v string")
     assert empty.count() == 0
-
-
-def test_overwrite_replaces(spark, store):
-    store.append("o", spark.createDataFrame([(1,)], "k long"))
-    store.overwrite("o", spark.createDataFrame([(9,), (10,)], "k long"))
-    assert sorted(r.k for r in store.read("o").collect()) == [9, 10]
 
 
 def test_prune_older_than_semantics(spark, store):

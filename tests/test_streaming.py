@@ -411,8 +411,6 @@ def test_streaming_api_query_downsample_finishes_to_batch_answer(
     name = _memname()
     run_to_memory_table(streaming_api_query_downsample(stream, spec), name)
     # localCheckpoint stands in for the store read a deployment does
-    # (the fill spine self-joins the frame; Spark 4 cannot dedup the
-    # memory-sink View's attributes, a store/parquet scan is fine)
     frame = spark.table(name).localCheckpoint()
     got = api_query_finish(frame, spec)
     want = api_query(batch, spec)
