@@ -892,29 +892,27 @@ def pruned_read(
     table the metadata predicate is a plain column filter: it pushes
     to the scan (footer min/max row-group skip; TIMESTAMP_MICROS so
     the stats exist — see sources.store), so at 100 TB the decode cost
-    scales with |range|, not |table|. It is written on the raw
-    ``chunk_start`` against timestamp literals — one (interval, span)
-    term per tier — because a predicate over ``unix_timestamp(
-    chunk_start)`` cannot push.
+    scales with |range|, not |table|. The upper bound is written on the
+    raw ``chunk_start`` against a timestamp literal, so it is the term
+    that pushes; the lower bound depends on each row's interval and
+    stays an exact filter over ``unix_timestamp(chunk_start)``.
     """
-    from functools import reduce
-
     from pyspark.sql import functions as F
 
-    cs = F.col("chunk_start")
-
-    def at(sec: int):
-        return F.timestamp_seconds(F.lit(sec))
-
-    kept = chunks.filter(
-        (cs < at(t1))
-        & reduce(
-            lambda a, b: a | b,
-            [
-                (F.col("interval") == k) & (cs > at(t0 - v * chunk_points))
+    span = F.element_at(
+        F.create_map(
+            *[
+                x
                 for k, v in INTERVAL_SECONDS.items()
-            ],
-        )
+                for x in (F.lit(k), F.lit(v * chunk_points))
+            ]
+        ),
+        F.col("interval"),
+    ).cast("long")
+    cs = F.unix_timestamp("chunk_start").cast("long")
+    kept = chunks.filter(
+        (F.col("chunk_start") < F.timestamp_seconds(F.lit(t1)))
+        & (cs + span > F.lit(t0))
     )
     dec = decode_chunks(kept)
     ws = F.unix_timestamp("window_start").cast("long")

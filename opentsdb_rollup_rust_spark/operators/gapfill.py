@@ -153,11 +153,17 @@ def fill_gaps(
 
 def _floor_lerp(v0: str, v1: str, t0: str, t1: str, t: str) -> str:
     """SQL for ``v0 + (v1 - v0) * (t - t0) // (t1 - t0)`` with Python's
-    floor ``//``, in int64 only. ``a - pmod(a, b)`` is an exact
-    multiple of ``b`` (pmod takes the divisor's sign), so the
-    truncating ``div`` of it IS floor division — the rule the DuckDB
-    oracle reproduces bit-for-bit, where a double ``/`` would go lossy
-    past 2^53."""
-    num = f"(({v1} - {v0}) * ({t} - {t0}))"
-    den = f"({t1} - {t0})"
-    return f"{v0} + ({num} - pmod({num}, {den})) div {den}"
+    floor ``//``, in int64 only."""
+    return f"{v0} + {_ppm_div(f'({v1} - {v0}) * ({t} - {t0})', f'{t1} - {t0}')}"
+
+
+def _ppm_div(num: str, den: str) -> str:
+    """Pure-int64 FLOOR-division SQL fragment. Spark's DIV truncates
+    toward zero, but the ppm discipline (and every DuckDB oracle's
+    ``//``) is FLOOR — they differ by 1 ulp on negative quotients.
+    pmod is the floored modulus (sign of the divisor), so
+    (num - pmod(num, den)) is exactly divisible and DIV of it IS the
+    floor, for either divisor sign; a double ``/`` would go lossy past
+    2^53. Identical aggregate calls inside one expression collapse to
+    a single buffer, so ``num`` appearing twice costs nothing."""
+    return f"((({num}) - pmod(({num}), ({den}))) DIV ({den}))"

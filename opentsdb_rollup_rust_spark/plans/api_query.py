@@ -52,7 +52,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import STORED_AGGS, resolve_interval_seconds
-from ..operators.gapfill import fill_gaps
+from ..operators.gapfill import _ppm_div, fill_gaps
 from ..operators.rollup import STORED_RULE, stored_aggs
 from ..operators.tagquery import (
     TagFilter,
@@ -479,18 +479,6 @@ def _series_key(tags: Column) -> Column:
         ),
         ",",
     )
-
-
-def _ppm_div(num: str, den: str) -> str:
-    """Pure-int64 FLOOR-division SQL fragment. Spark's DIV truncates
-    toward zero, but the module's ppm discipline (and every DuckDB
-    oracle's ``//``) is FLOOR — they differ by 1 ulp on negative
-    quotients. pmod is the floored modulus (sign of the divisor), so
-    (num - pmod(num, den)) is exactly divisible and DIV of it IS the
-    floor, for either divisor sign. Identical aggregate calls inside
-    one expression collapse to a single buffer, so ``num`` appearing
-    twice costs nothing."""
-    return f"((({num}) - pmod(({num}), ({den}))) DIV ({den}))"
 
 
 def _ds_agg_expr(agg: str) -> Column:

@@ -160,12 +160,12 @@ def streaming_api_query_downsample(
     time_shift is a read-side transform and is refused likewise."""
     from ..plans.api_query import (
         _percentile_permille,
-        _ppm_div,
         _series_key,
         _validate,
         Q_SCALE,
     )
     from ..config import resolve_interval_seconds
+    from ..operators.gapfill import _ppm_div
     from ..operators.tagquery import compile_tag_filter
 
     _validate(spec)

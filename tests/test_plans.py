@@ -344,10 +344,10 @@ def test_tag_read_partition_pruned(spark, tmp_path_factory):
 
 
 def test_pruned_read_chunk_filter_pushed_to_scan(spark, tmp_path_factory):
-    """pruned_read's chunk prune is written on the raw chunk_start, so
-    it reaches the parquet scan's PushedFilters (row-group skipping);
-    and it only prunes: the range read equals decoding every chunk and
-    keeping the range."""
+    """pruned_read's chunk upper bound is written on the raw
+    chunk_start, so it reaches the parquet scan's PushedFilters
+    (row-group skipping); and the prune only prunes: the range read
+    equals decoding every chunk and keeping the range."""
     from opentsdb_rollup_rust_spark.codec.gorilla import (
         decode_chunks,
         encode_chunks,
